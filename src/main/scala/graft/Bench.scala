@@ -144,16 +144,22 @@ object Bench {
     // historical place, is ALSO persisted to a fixed path, and a
     // compact (<500 char) summary goes out as the FINAL stdout line
     // so any tail window contains one complete parseable JSON object.
-    try {
+    val queriesWritten = try {
       val dir = new java.io.File("bench")
-      if (dir.isDirectory) {
+      dir.isDirectory && {
         val w = new java.io.PrintWriter(
           new java.io.File(dir, "bench_last.json"), "UTF-8")
         try w.println(fullLine) finally w.close()
+        true
       }
-    } catch { case _: Throwable => () }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","total_warm":$totalWarm,"n":${results.size},"reps":$reps,"failed":${failed.size},"warm_failed":${warmFailed.size},"cpus":$cpus,"sf":"$sfDir","queries_file":"bench/bench_last.json"}""")
+    } catch { case _: Throwable => false }
+    // a non-numeric SPARK_GRAFT_CPUS must not break the JSON line
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toIntOption
+      .getOrElse(4)
+    val queriesFile =
+      if (queriesWritten) ""","queries_file":"bench/bench_last.json""""
+      else ""
+    println(s"""{"metric":"total","value":$total,"unit":"sec","total_warm":$totalWarm,"n":${results.size},"reps":$reps,"failed":${failed.size},"warm_failed":${warmFailed.size},"cpus":$cpus,"sf":"$sfDir"$queriesFile}""")
     spark.stop()
   }
 }

@@ -487,19 +487,11 @@ final class Agent(
     (created, replicateData(schema))
   }
 
-  /** `-action hamonitor` (agent.go:242-271): initial replication policy
-    * (none|schema|data|both, agent.go:248-264), then the probe/FSM
-    * monitor whose backfill re-runs the copy plane over the recovery
-    * window. Returns the monitor (not yet ticking — call `start()` for
-    * the periodic supervisor, or `tick()` from tests). */
   /** The recovery backfill: blind re-copy of the outage window at the
     * configured chunking, idempotent by the sink's partition overwrite +
     * trim pass (hacluster.go:305-342). Runs the same (db, rp)-scoped
     * copy+verify loop as the batch copy plane — the post-outage backfill
     * is precisely the copy most likely to diverge. */
-  def backfillWindow(w: ClusterFSM.RecoveryWindow): Seq[SyncReport] =
-    backfillWith(discoverSchema(), w) // schema refresh, hacluster.go:330-331
-
   private def backfillWith(sch: Seq[DbSchema],
       w: ClusterFSM.RecoveryWindow): Seq[SyncReport] =
     replicateWith(sch, _ => CopyJob.Config(w.startNs, w.endNs, chunkNs,
@@ -550,6 +542,11 @@ final class Agent(
   def cqService: graft.ql.CqService =
     new graft.ql.CqService(spark, cfg.masterRoot, cfg.slaveRoot)
 
+  /** `-action hamonitor` (agent.go:242-271): initial replication policy
+    * (none|schema|data|both, agent.go:248-264), then the probe/FSM
+    * monitor whose backfill re-runs the copy plane over the recovery
+    * window. Returns the monitor (not yet ticking — call `start()` for
+    * the periodic supervisor, or `tick()` from tests). */
   def hamonitor(): HAMonitor = {
     require(initCluster(), "cluster not alive")
     initialReplicate()

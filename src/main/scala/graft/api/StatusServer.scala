@@ -252,12 +252,6 @@ final class StatusServer(
       s""""columns":$colJson,"values":$valJson$partialJson}]}"""
   }
 
-  /** InfluxDB 1.x /query response — one results entry per executed
-    * statement (multi-statement `q` payloads get ordinal ids). */
-  def queryJson(df: org.apache.spark.sql.DataFrame,
-      epochDivNs: Long = 1L): String =
-    s"""{"results":[${resultJson(df, epochDivNs, 0)}]}"""
-
   private val EpochDiv: Map[String, Long] = Map(
     "ns" -> 1L, "u" -> 1000L, "µ" -> 1000L, "ms" -> 1000000L,
     "s" -> 1000000000L, "m" -> 60L * 1000000000L,

@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.time.{Duration, Instant, OffsetDateTime}
+import java.time.{Instant, OffsetDateTime}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -22,13 +22,6 @@ object TimeFuncs {
     * windowing only; `time_ns` stays authoritative). */
   def nsToTimestamp(timeNs: Column): Column =
     timestamp_micros((timeNs / 1000L).cast("long"))
-
-  /** µs TimestampType → ns-epoch Long. */
-  def timestampToNs(ts: Column): Column = unix_micros(ts) * 1000L
-
-  /** Tumbling-bucket index for a ns time column (chunk bucketing). */
-  def nsBucket(timeNs: Column, bucketNs: Long): Column =
-    floor(timeNs / lit(bucketNs)).cast("long")
 
   /** CLI-style flexible time parsing, mirroring `parseInputTime`
     * (/root/reference/pkg/util.go:9-28): unix epoch seconds, a negative
@@ -73,6 +66,4 @@ object TimeFuncs {
       (v * unit).toLong
     }.sum
   }
-
-  def javaDuration(ns: Long): Duration = Duration.ofNanos(ns)
 }

@@ -86,8 +86,6 @@ final case class SyncReport(
     chunks: Seq[ChunkResult],
     checksumMismatches: Seq[ChunkSpec] = Nil) {
   def totalPoints: Long = chunks.map(_.points).sum
-  def badChunks: Seq[ChunkSpec] =
-    chunks.filterNot(_.ok).map(_.chunk).distinct
   def verified: Boolean = checksumMismatches.isEmpty
 }
 

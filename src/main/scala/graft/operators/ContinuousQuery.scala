@@ -135,26 +135,18 @@ final class ContinuousQuery(spark: SparkSession) {
           // output columns; buckets that PROVABLY match keep their
           // live generation (readers see identical rows either way).
           // A hash mismatch merely rewrites — never wrong, only
-          // unsaved; a match (same count, same xxhash64-XOR) is
-          // content identity modulo collision.
+          // unsaved; a match is content identity modulo collision
+          // ([[ContinuousQuery.bucketIdentity]]).
           val outCols = seriesCols :+ "n_points" :+ "sum_value" :+
             "min_value" :+ "max_value"
-          def bucketSums(df: DataFrame, bucket: Column)
-              : Map[Long, (Long, Long)] =
-            df.groupBy(bucket.as("__b"))
-              .agg(count(lit(1)).as("c"),
-                coalesce(expr("bit_xor(__h)"), lit(0L)).as("h"))
-              .collect()
-              .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-              .toMap
           val rolledHashed = rolled.withColumn("__h",
             xxhash64(outCols.map(col): _*))
           val liveBySpan = st.live.groupBy(r => (r.startNs, r.endNs))
           val unchanged: Set[Long] =
             if (st.live.isEmpty) Set.empty
             else {
-              val recomputed = bucketSums(rolledHashed,
-                col("__cq_bucket"))
+              val recomputed = ContinuousQuery.bucketIdentity(
+                rolledHashed, col("__cq_bucket"))
               // live generations covering exactly the recomputed
               // spans (a span with duplicate live refs — impossible
               // by commit construction — is conservatively rewritten)
@@ -166,7 +158,7 @@ final class ContinuousQuery(spark: SparkSession) {
               else {
                 val existing = ChunkManifest.snapshotFrame(spark,
                   dstPath, matchRefs)
-                val existingSums = bucketSums(
+                val existingSums = ContinuousQuery.bucketIdentity(
                   existing.withColumn("__h",
                     xxhash64(outCols.map(col): _*)),
                   split(col("__bucket"), "_").getItem(0).cast("long"))
@@ -332,4 +324,22 @@ final class ContinuousQuery(spark: SparkSession) {
       .getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
+}
+
+object ContinuousQuery {
+
+  /** Per-bucket content identity of a frame carrying a per-row content
+    * hash `__h`: (row count, EXACT sum of the hashes). The sum runs in
+    * decimal(38,0) — a long sum of full-range xxhash64 values overflows
+    * (ARITHMETIC_OVERFLOW under ANSI) — and, unlike an XOR, equal
+    * hashes that change together cannot cancel out. */
+  private[graft] def bucketIdentity(df: DataFrame, bucket: Column)
+      : Map[Long, (Long, BigDecimal)] =
+    df.groupBy(bucket.as("__b"))
+      .agg(count(lit(1)).as("c"),
+        sum(col("__h").cast("decimal(38,0)")).as("h"))
+      .collect()
+      .map(r =>
+        r.getLong(0) -> (r.getLong(1), BigDecimal(r.getDecimal(2))))
+      .toMap
 }

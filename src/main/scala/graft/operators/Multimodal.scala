@@ -225,21 +225,6 @@ object Multimodal {
   def perceptualHash(assets: DataFrame): DataFrame =
     assets.select(col("asset_id"), phashUdf(col("payload")).as("phash"))
 
-  /** Near-duplicate IMAGE pairs — the visual face of the dedup family:
-    * decode → 56-bit dHash fingerprint → the shared banded-Hamming
-    * bucket join ([[graft.operators.Dedup.hammingBandedPairs]] —
-    * pigeonhole-exact recall, never an all-pairs square). Payload
-    * bytes are consumed in the fingerprint projection and never
-    * shuffle; the join moves only (id, 56-bit hash, band key) rows.
-    * Undecodable payloads (null phash) are excluded — an image with
-    * no fingerprint has no business pairing. */
-  def phashNearDupPairs(assets: DataFrame, maxHamming: Int = 2,
-      bands: Int = 4): DataFrame =
-    graft.operators.Dedup.hammingBandedPairs(
-      perceptualHash(assets).where(col("phash").isNotNull),
-      "asset_id", "phash", bits = 56, maxHamming = maxHamming,
-      bands = bands)
-
   /** REAL image metadata decode over an asset table: (asset_id,
     * media_type, width, height, channels, img_format); nulls for
     * payloads that are not decodable images (stub-fallback contract).

@@ -26,9 +26,7 @@ import org.apache.spark.sql.functions._
   * groupBy((group, bucket)) corpus pass — the bucketing itself is a
   * pure codegen projection — then cumulative windows PARTITIONED per
   * group over the bucket frame, bounded by |groups|·O(log_γ range)
-  * (α = 2% ⇒ ~820 buckets across a 1..10⁷ cents range). The
-  * streaming face ([[graft.streaming.StreamIngest.quantileSketchStream]])
-  * folds the same buckets into per-key map state.
+  * (α = 2% ⇒ ~820 buckets across a 1..10⁷ cents range).
   *
   * Values must be POSITIVE (the log bucketing's domain); rows with
   * v ≤ 0 are excluded from the sketch, mirroring the DuckDB oracle's
@@ -44,16 +42,17 @@ object QuantileSketch {
   }
 
   /** Bucket index of a positive value: ⌈ln v / ln γ⌉ (bucket i covers
-    * (γ^(i−1), γ^i]). Shared by the batch projection and the
-    * streaming fold so the two faces are bit-identical. */
+    * (γ^(i−1), γ^i]) — the scalar form of the projection
+    * [[ddQuantiles]] runs as a Column expression; QuantileSketchSpec
+    * pins the bucket containment and the α bound through it. */
   def bucketOf(v: Long, lnGamma: Double): Long = {
     require(v > 0, s"sketch values must be positive: $v")
     math.ceil(math.log(v.toDouble) / lnGamma).toLong
   }
 
   /** Midpoint-of-ratio estimate for a bucket: 2γ^i/(γ+1), computed as
-    * exp(i·ln γ) so both faces (and the SQL oracle) share one
-    * fixed-order formula. */
+    * exp(i·ln γ) — the same fixed-order formula [[ddQuantiles]] and
+    * the SQL oracle use. */
   def estimateOf(bucket: Long, alphaBp: Int): Double = {
     val g = gamma(alphaBp)
     2.0 * math.exp(bucket.toDouble * math.log(g)) / (g + 1.0)
@@ -99,85 +98,5 @@ object QuantileSketch {
             lit(lnG)) / lit(g + 1.0), 4))
         .drop(s"__b_$name")
     }
-  }
-
-  /** The sketch's bounded merge state: the bucket→count map plus the
-    * sticky has-ever-collapsed marker. */
-  final case class DdState(collapsed: Boolean, counts: Map[Long, Long])
-
-  /** A finished sketch: positive-value count, collapse marker, and
-    * one midpoint-of-ratio estimate per requested quantile (rounded 4,
-    * HALF_UP — the same formula as [[ddQuantiles]] and the streaming
-    * fold, so all three faces are bit-identical). */
-  final case class DdSnapshot(n: Long, collapsed: Boolean,
-      ests: Seq[Double])
-
-  /** DDSketch as a Catalyst-mergeable AGGREGATOR over cent values —
-    * the composition piece that lets the sketch ride ANY grouping the
-    * engine can express (session windows, tumbling windows, rollups)
-    * instead of only the hand-built relational form: counts are
-    * additive, so partial aggregation / state-store merges are
-    * order-insensitive while the map stays below `maxBuckets`; past
-    * the bound the lowest buckets collapse (upper — latency-alarm —
-    * quantiles keep their α guarantee regardless: collapse only ever
-    * merges the LOWEST buckets, leaving every upper bucket's
-    * cumulative rank untouched; which low buckets fuse first is the
-    * one arrival-order-sensitive detail, marked by `collapsed`). */
-  final class DdSketchAggregator(alphaBp: Int, maxBuckets: Int,
-      qs: Seq[(Long, Long)])
-      extends org.apache.spark.sql.expressions
-        .Aggregator[Long, DdState, DdSnapshot] {
-    require(maxBuckets >= 2, s"maxBuckets must be >= 2: $maxBuckets")
-    require(qs.nonEmpty, "need at least one quantile")
-    @transient private lazy val g = gamma(alphaBp)
-    @transient private lazy val lnG = math.log(g)
-
-    private def collapse(s: DdState): DdState = {
-      var counts = s.counts
-      var c = s.collapsed
-      while (counts.size > maxBuckets) {
-        val lows = counts.keys.toSeq.sorted.take(2)
-        counts = (counts - lows(0))
-          .updated(lows(1), counts(lows(1)) + counts(lows(0)))
-        c = true
-      }
-      DdState(c, counts)
-    }
-    override def zero: DdState = DdState(collapsed = false, Map.empty)
-    override def reduce(b: DdState, vc: Long): DdState = {
-      val bk = bucketOf(vc, lnG)
-      collapse(DdState(b.collapsed,
-        b.counts.updated(bk, b.counts.getOrElse(bk, 0L) + 1L)))
-    }
-    override def merge(a: DdState, b: DdState): DdState =
-      collapse(DdState(a.collapsed || b.collapsed,
-        b.counts.foldLeft(a.counts) { case (m, (k, v)) =>
-          m.updated(k, m.getOrElse(k, 0L) + v)
-        }))
-    override def finish(s: DdState): DdSnapshot = {
-      val n = s.counts.valuesIterator.sum
-      if (n == 0L) DdSnapshot(0L, s.collapsed, qs.map(_ => 0.0))
-      else {
-        val sortedB = s.counts.toSeq.sortBy(_._1)
-        val ests = qs.map { case (num, den) =>
-          val rank = (n * num + den - 1) / den
-          var cum = 0L
-          var pick = sortedB.last._1
-          var found = false
-          sortedB.foreach { case (bk, c) =>
-            if (!found) {
-              cum += c; if (cum >= rank) { pick = bk; found = true }
-            }
-          }
-          BigDecimal(2.0 * math.exp(pick.toDouble * lnG) / (g + 1.0))
-            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-        }
-        DdSnapshot(n, s.collapsed, ests)
-      }
-    }
-    override def bufferEncoder: org.apache.spark.sql.Encoder[DdState] =
-      org.apache.spark.sql.Encoders.product[DdState]
-    override def outputEncoder: org.apache.spark.sql.Encoder[DdSnapshot] =
-      org.apache.spark.sql.Encoders.product[DdSnapshot]
   }
 }

@@ -500,8 +500,7 @@ object ParityQueries {
         .replaceAll("\\s+", " "))),
 
     // Batch sessionization: gap-based sessions per series via
-    // lag + cumulative sum of gap-break flags — the batch counterpart of
-    // StreamIngest.sessionizedSeriesAgg (30-minute inactivity gap).
+    // lag + cumulative sum of gap-break flags (30-minute inactivity gap).
     // Two window passes over (user_id, ts): no joins, no self-shuffles.
     "win_sessionize" -> QueryDef(
       (s, dir) => {

@@ -2992,7 +2992,7 @@ object PipelineQueries {
         val oldSigs = sigsOf(d.filter(splitBucket(col("doc_id")) < 80))
         Dedup.lshIndexIngest(newSigs,
           Dedup.lshBandsFromSig(oldSigs, LshBands, MinhashK), oldSigs,
-          4, MinhashK, minMatches = 4)._1
+          LshBands, MinhashK, minMatches = 4)._1
       },
       Some(s"""WITH $WordsCte, $ShingleCte, $SigCte, $BandCte,
         sp AS (SELECT doc_id,
@@ -3027,7 +3027,7 @@ object PipelineQueries {
         val oldSigs = sigsOf(d.filter(splitBucket(col("doc_id")) < 80))
         Dedup.lshIndexIngest(newSigs,
           Dedup.lshBandsFromSig(oldSigs, LshBands, MinhashK), oldSigs,
-          4, MinhashK, minMatches = 4)._2
+          LshBands, MinhashK, minMatches = 4)._2
           .select(col("id"), col("band").cast("long").as("band"),
             col("band_hash"))
       },
@@ -3065,7 +3065,7 @@ object PipelineQueries {
         val oldSigs = sigsOf(d.filter(splitBucket(col("doc_id")) < 80))
         Dedup.lshIndexIngest(newSigs,
           Dedup.lshBandsFromSig(oldSigs, LshBands, MinhashK), oldSigs,
-          4, MinhashK, minMatches = 4, withinBatch = true)._1
+          LshBands, MinhashK, minMatches = 4, withinBatch = true)._1
       },
       Some(IncMarksWithinSql)),
 

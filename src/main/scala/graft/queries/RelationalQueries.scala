@@ -916,8 +916,7 @@ object RelationalQueries {
 
     // DDSketch log-bucket quantile sketch per event type — the
     // MERGEABLE quantile primitive (bucket counts are additive, so
-    // partial aggregation/merge order can't move the answer; the
-    // streaming twin folds the identical buckets). p50/p90/p99
+    // partial aggregation/merge order can't move the answer). p50/p90/p99
     // estimates carry a ≤ 2% relative-error guarantee vs the exact
     // order statistic (pinned in QuantileSketchSpec); the whole path
     // — ⌈ln v/ln γ⌉ bucketing, rank pick, midpoint estimate — is one

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.TimeFuncs
 import graft.model.FieldSch
 import graft.operators.{Dedup, RuntimeFilters}
 import graft.sources.LineProtocol
@@ -10,9 +11,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** Continuous ingestion — the engine's streaming write path
   * (SURVEY.md §2.9): the reference moves points as a batch pull/push loop
   * (sync.go:95-213); the Spark-native continuous form is a file-stream of
-  * line-protocol text → typed decode → (optionally) watermarked windowed
-  * aggregation → parquet sink, all on Structured Streaming with
-  * checkpointed offsets (exactly-once file sink).
+  * line-protocol text → typed decode → watermark-bounded dedup → parquet
+  * sink, all on Structured Streaming with checkpointed offsets
+  * (exactly-once file sink).
   *
   * The decode reuses the batch codec: the quote/escape-aware scanner runs
   * inside the partition via `Dataset.map` and the per-field coercion
@@ -32,154 +33,6 @@ object StreamIngest {
       spark.readStream.text(inDir).withColumnRenamed("value", "line"),
       "line", tagKeys, fields)
 
-  /** Dead-letter stream: the raw lines `typedStream` DROPS (blank or
-    * malformed) — route to a quarantine sink so poison input is
-    * inspectable instead of silently gone. */
-  def deadLetters(spark: SparkSession, inDir: String): DataFrame = {
-    import spark.implicits._
-    spark.readStream.text(inDir)
-      .withColumnRenamed("value", "line")
-      .select(col("line")).as[String]
-      .filter((l: String) => LineProtocol.parseLineOpt(l).isEmpty &&
-        l.trim.nonEmpty) // blank lines are noise, not evidence
-      .toDF("line")
-  }
-
-  /** Event-time column for watermarking, derived once from the
-    * authoritative ns epoch (µs truncation — Spark timestamps are µs). */
-  private def withEventTime(typed: DataFrame): DataFrame =
-    typed.withColumn("time",
-      timestamp_micros((col("time_ns") / 1000L).cast("long")))
-
-  /** Tumbling-window per-series aggregation with a watermark: late points
-    * beyond `watermarkDelay` are dropped, windows close and emit once
-    * (append mode) when the watermark passes — the streaming analog of
-    * the reference's chunked rollup, with principled late-data handling
-    * instead of the blind re-copy overlap (hacluster.go:310,321). */
-  def windowedSeriesAgg(
-      typed: DataFrame,
-      tagCols: Seq[String],
-      valueCol: String,
-      windowDuration: String,
-      watermarkDelay: String): DataFrame = {
-    val withTime = withEventTime(typed)
-    val keys: Seq[Column] =
-      window(col("time"), windowDuration) +: tagCols.map(col)
-    withTime
-      .withWatermark("time", watermarkDelay)
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("n_points"),
-        avg(col(valueCol)).as("avg_value"),
-        min(col(valueCol)).as("min_value"),
-        max(col(valueCol)).as("max_value"))
-  }
-
-  /** Session-window per-series aggregation: a session closes after
-    * `gapDuration` of event-time silence per series — the sessionization
-    * surface SURVEY.md §2.9 promises beyond the reference's fixed
-    * chunking. Same watermark/append semantics as the tumbling form. */
-  def sessionizedSeriesAgg(
-      typed: DataFrame,
-      tagCols: Seq[String],
-      valueCol: String,
-      gapDuration: String,
-      watermarkDelay: String): DataFrame = {
-    val withTime = withEventTime(typed)
-    val keys: Seq[Column] =
-      session_window(col("time"), gapDuration) +: tagCols.map(col)
-    withTime
-      .withWatermark("time", watermarkDelay)
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("n_points"),
-        avg(col(valueCol)).as("avg_value"))
-  }
-
-  /** SESSIONIZED streaming quantiles: per (series, event-time
-    * session) latency percentiles — [[sessionizedSeriesAgg]]'s
-    * session_window composed with the DDSketch state
-    * ([[graft.operators.QuantileSketch.DdSketchAggregator]]): the
-    * sketch rides the session grouping as a mergeable aggregate, so
-    * a session spanning many micro-batches accumulates bucket counts
-    * in the state store (bounded by maxBuckets) and emits its
-    * quantiles ONCE, when the watermark closes the session — the
-    * monitoring-plane query the batch ddQuantiles face answers,
-    * per-session ("p95 latency of each user session", not of a fixed
-    * window). Same watermark/append semantics as the tumbling form;
-    * the StreamIngestSpec differential replays sessions that span
-    * BOTH micro-batch and session-gap boundaries against the batch
-    * operator. Values enter as exact cents (the repo-wide sketch
-    * convention); rows with v ≤ 0 are excluded like every sketch
-    * face. Output: (tags…, session_start, session_end, n, collapsed,
-    * names…). */
-  def sessionQuantileStream(
-      typed: DataFrame,
-      tagCols: Seq[String],
-      valueCol: String,
-      gapDuration: String,
-      watermarkDelay: String,
-      alphaBp: Int,
-      maxBuckets: Int,
-      qs: Seq[(Long, Long)],
-      names: Seq[String]): DataFrame = {
-    require(qs.nonEmpty && qs.size == names.size,
-      s"one name per quantile: $qs / $names")
-    val sk = udaf(new graft.operators.QuantileSketch.DdSketchAggregator(
-      alphaBp, maxBuckets, qs),
-      org.apache.spark.sql.Encoders.scalaLong)
-    val withTime = withEventTime(typed)
-    withTime
-      .where(col(valueCol).isNotNull &&
-        round(col(valueCol) * 100, 0).cast("long") > 0)
-      .withColumn("vc", round(col(valueCol) * 100, 0).cast("long"))
-      .withWatermark("time", watermarkDelay)
-      .groupBy(session_window(col("time"), gapDuration)
-        +: tagCols.map(col): _*)
-      .agg(sk(col("vc")).as("sk"))
-      .select(tagCols.map(col) ++ Seq(
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("sk.n").as("n"), col("sk.collapsed").as("collapsed")) ++
-        names.zipWithIndex.map { case (nm, i) =>
-          element_at(col("sk.ests"), i + 1).as(nm) }: _*)
-  }
-
-  /** Streaming heavy hitters: per tumbling window, the approximate
-    * top-k most frequent values of `keyCol` — the "what's trending this
-    * window" query — in BOUNDED state. The SpaceSaving aggregate
-    * ([[graft.functions.HeavyHitters]]) keeps `capacity` counters per
-    * window in the state store regardless of the key cardinality; a
-    * plain count-per-key streaming groupBy would hold one state row per
-    * DISTINCT (window, key) — the unbounded-state trap for
-    * high-cardinality keys (URLs, user ids) at 100 TB. Same
-    * watermark/append semantics as the windowed agg: the window's
-    * ranking emits once, when the watermark closes it. Per-item `err`
-    * is the SpaceSaving overestimate bound (0 ⇔ exact — always the
-    * case while capacity exceeds the window's distinct keys). */
-  def windowedHeavyHitters(
-      typed: DataFrame,
-      keyCol: String,
-      windowDuration: String,
-      watermarkDelay: String,
-      k: Int = 10,
-      capacity: Int = 256): DataFrame = {
-    withEventTime(typed)
-      // a null key would become a null Map key inside the SpaceSaving
-      // buffer — Catalyst's map serializer throws on null keys, killing
-      // the streaming query (batch `topBottom` has the same guard)
-      .where(col(keyCol).isNotNull)
-      .withWatermark("time", watermarkDelay)
-      .groupBy(window(col("time"), windowDuration))
-      .agg(graft.functions.HeavyHitters.spaceSaving(capacity, k)(
-        col(keyCol).cast("string")).as("hh"))
-      .select(col("window.start").as("w_start"),
-        posexplode(col("hh.items")))
-      .select(col("w_start"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.key").as("key"), col("col.cnt").as("cnt"),
-        col("col.err").as("err"))
-  }
-
   /** Streaming deduplication: drop points whose (series key, time_ns)
     * was already seen, with state BOUNDED by the watermark — duplicates
     * arriving within `watermarkDelay` of each other are suppressed, and
@@ -192,712 +45,12 @@ object StreamIngest {
       typed: DataFrame,
       keyCols: Seq[String],
       watermarkDelay: String): DataFrame = {
-    withEventTime(typed)
+    typed.withColumn("time", TimeFuncs.nsToTimestamp(col("time_ns")))
       .withWatermark("time", watermarkDelay)
       .dropDuplicatesWithinWatermark(keyCols :+ "time_ns")
       // the synthetic watermark column must not leak into the deduped
       // output: downstream readers expect typedStream's schema
       .drop("time")
-  }
-
-  /** Continuous first-order path transitions — the streaming face of
-    * [[graft.operators.Behavior.pathTransitions]]: the batch
-    * lag-over-window becomes last-event-per-key state, the SMALLEST
-    * possible stateful footprint (one (time_ns, tie, type) triple per
-    * key — O(key-cardinality) total at any stream length). Each
-    * arriving event emits its (from_type, to_type) adjacency row;
-    * the count/share rollup is the same bounded-domain groupBy the
-    * batch operator runs, applied to the emitted pair stream
-    * downstream. Events fold in (time_ns, tie) order WITHIN each
-    * micro-batch; cross-batch ordering is the source's arrival order
-    * (the in-order-per-key contract of anomalyStream /
-    * holtWintersStream — the spec's differential crosses micro-batch
-    * boundaries to pin state continuity). */
-  def transitionsStream(
-      typed: DataFrame,
-      keyCol: String,
-      typeCol: String,
-      tieCol: String): DataFrame = {
-    val spark = typed.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState,
-      GroupStateTimeout, OutputMode}
-    typed
-      .where(col(keyCol).isNotNull && col(typeCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        col("time_ns").cast("long"),
-        col(tieCol).cast("long").as("tie"),
-        col(typeCol).cast("string").as("typ"))
-      .as[(String, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, String),
-          (String, String, String, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[(String, Long, Long, String)],
-         state: GroupState[(Long, Long, String)]) =>
-          var last = state.getOption
-          val out = Seq.newBuilder[(String, String, String, Long)]
-          it.toSeq.sortBy(p => (p._2, p._3)).foreach {
-            case (_, ts, tie, typ) =>
-              last.foreach { case (_, _, prev) =>
-                out += ((key, prev, typ, ts))
-              }
-              last = Some((ts, tie, typ))
-          }
-          last.foreach(state.update)
-          out.result().iterator
-      }
-      .toDF("key", "from_type", "to_type", "time_ns")
-  }
-
-  /** Continuous tabular CUSUM — the streaming face of
-    * [[graft.operators.SeriesOps.cusumFixed]]: per-series state is
-    * (target, S⁺, S⁻) — three Longs, seeded by the first point ever
-    * seen (the batch operator's first-bucket convention) — and every
-    * point folds the identical exact-integer recurrence, so the spec
-    * asserts the point-for-point batch differential across micro-batch
-    * boundaries. The level-shift alarm this carries fires CONTINUOUSLY
-    * (the batch form needs a re-scan); state is O(series). */
-  def cusumStream(
-      typed: DataFrame,
-      keyCol: String,
-      valueCol: String,
-      drift: Long,
-      threshold: Long): DataFrame = {
-    require(drift >= 0, s"drift allowance must be >= 0: $drift")
-    require(threshold > 0, s"threshold must be positive: $threshold")
-    val spark = typed.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState,
-      GroupStateTimeout, OutputMode}
-    typed
-      .where(col(keyCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        col("time_ns").cast("long"),
-        round(col(valueCol) * 100, 0).cast("long").as("vc"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long),
-          (String, Long, Long, Long, Long, Boolean, Boolean)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[(String, Long, Long)],
-         state: GroupState[(Long, Long, Long)]) =>
-          val pts = it.toSeq.sortBy(p => (p._2, p._3))
-          val out = Seq.newBuilder[
-            (String, Long, Long, Long, Long, Boolean, Boolean)]
-          if (pts.nonEmpty || state.exists) {
-            var (target, sp, sn) = state.getOption
-              .getOrElse((pts.head._3, 0L, 0L))
-            pts.foreach { case (_, ts, v) =>
-              sp = math.max(0L, sp + (v - target - drift))
-              sn = math.max(0L, sn + (target - v - drift))
-              out += ((key, ts, v, sp, sn,
-                sp > threshold, sn > threshold))
-            }
-            state.update((target, sp, sn))
-          }
-          out.result().iterator
-      }
-      .toDF("key", "time_ns", "vc", "s_pos", "s_neg", "alarm_pos",
-        "alarm_neg")
-  }
-
-  /** Continuous counter-reset-aware increase — the streaming face of
-    * [[graft.operators.SeriesOps.counterRate]]: per-series state is
-    * (seen-flag, last value, resets so far, increase so far) — four
-    * Longs, O(series). Every point folds the identical
-    * restart-from-zero recurrence (a point below its predecessor is a
-    * counter reset contributing its own value), so the LAST emitted
-    * row per key carries exactly the batch aggregate's
-    * (n_resets, increase_c) — the spec's differential crosses
-    * micro-batch boundaries. Emits one row per point:
-    * (key, time_ns, vc, n_resets, increase_c). */
-  def rateStream(
-      typed: DataFrame,
-      keyCol: String,
-      valueCol: String): DataFrame = {
-    val spark = typed.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState,
-      GroupStateTimeout, OutputMode}
-    typed
-      .where(col(keyCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        col("time_ns").cast("long"),
-        round(col(valueCol) * 100, 0).cast("long").as("vc"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long, Long),
-          (String, Long, Long, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[(String, Long, Long)],
-         state: GroupState[(Long, Long, Long, Long)]) =>
-          val pts = it.toSeq.sortBy(p => (p._2, p._3))
-          val out = Seq.newBuilder[(String, Long, Long, Long, Long)]
-          if (pts.nonEmpty) {
-            var (seen, prev, resets, inc) = state.getOption
-              .getOrElse((0L, 0L, 0L, 0L))
-            pts.foreach { case (_, ts, v) =>
-              if (seen == 0L) seen = 1L
-              else if (v >= prev) inc += v - prev
-              else { resets += 1L; inc += v }
-              prev = v
-              out += ((key, ts, v, resets, inc))
-            }
-            state.update((seen, prev, resets, inc))
-          }
-          out.result().iterator
-      }
-      .toDF("key", "time_ns", "vc", "n_resets", "increase_c")
-  }
-
-  /** Continuous SCD Type-2 — the streaming face of
-    * [[graft.operators.Incremental.scd2]]: per-key state is (current
-    * value, valid_from) — one tag string + one Long. A value change
-    * emits the CLOSED interval immediately (append-only: the open
-    * current run lives in state, not in the sink — exactly the rows
-    * batch scd2 marks is_current=false), so the emitted history
-    * equals the batch operator's closed intervals across micro-batch
-    * boundaries (spec differential, including a change straddling
-    * the boundary). Input contract as batch: (key, time) unique.
-    * Emits (key, value, valid_from_ns, valid_to_ns). */
-  def scd2Stream(
-      typed: DataFrame,
-      keyCol: String,
-      valueCol: String): DataFrame = {
-    val spark = typed.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState,
-      GroupStateTimeout, OutputMode}
-    typed
-      .where(col(keyCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        col("time_ns").cast("long"),
-        col(valueCol).cast("string").as("v"))
-      .as[(String, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(String, Long),
-          (String, String, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[(String, Long, String)],
-         state: GroupState[(String, Long)]) =>
-          val pts = it.toSeq.sortBy(_._2)
-          val out = Seq.newBuilder[(String, String, Long, Long)]
-          if (pts.nonEmpty) {
-            var cur = state.getOption
-            pts.foreach { case (_, ts, v) =>
-              cur match {
-                case Some((cv, from)) if cv != v =>
-                  out += ((key, cv, from, ts))
-                  cur = Some((v, ts))
-                case Some(_) => () // same value: run continues
-                case None => cur = Some((v, ts))
-              }
-            }
-            state.update(cur.get)
-          }
-          out.result().iterator
-      }
-      .toDF("key", "value", "valid_from_ns", "valid_to_ns")
-  }
-
-  /** Continuous SpaceSaving heavy hitters — the streaming face of
-    * [[graft.functions.HeavyHitters]]: per-bucket state is one
-    * SpaceSaving summary (≤ `capacity` counters + the eviction
-    * baseline), folded with the EXACT SAME reduce rule as the batch
-    * aggregate, so in exact mode (capacity ≥ distinct items per
-    * bucket) the latest emitted summary per bucket carries the true
-    * running counts and the merged bucket tops equal the batch
-    * result — the spec's differential crosses micro-batch boundaries.
-    * Items shard over `buckets` state keys by murmur3 so a hot stream
-    * never single-threads one state row. Emits the bucket's current
-    * top-k after each batch as (bucket, ver, item, cnt, err) — `ver`
-    * increments per fold so readers take the max-ver snapshot. */
-  def heavyHittersStream(
-      typed: DataFrame,
-      itemCol: String,
-      buckets: Int,
-      capacity: Int,
-      k: Int): DataFrame = {
-    require(buckets > 0, s"buckets must be positive: $buckets")
-    val spark = typed.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState,
-      GroupStateTimeout, OutputMode}
-    val agg = new graft.functions.HeavyHitters.SpaceSavingAggregator(
-      capacity, k)
-    typed
-      .where(col(itemCol).isNotNull)
-      .select(pmod(hash(col(itemCol)), lit(buckets)).as("bucket"),
-        col(itemCol).cast("string").as("item"))
-      .as[(Int, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Seq[(String, Long, Long)]),
-          (Int, Long, String, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (bucket: Int, it: Iterator[(Int, String)],
-         state: GroupState[(Long, Long, Seq[(String, Long, Long)])]) =>
-          val (ver, base, items) = state.getOption
-            .getOrElse((0L, 0L, Seq.empty[(String, Long, Long)]))
-          var buf = graft.functions.HeavyHitters.SSBuf(base,
-            items.map { case (key, c, e) => key -> ((c, e)) }.toMap)
-          // deterministic fold order within the batch: the reduce
-          // rule's evictions are order-sensitive once saturated
-          it.toSeq.map(_._2).sorted.foreach { item =>
-            buf = agg.reduce(buf, item) }
-          val v = ver + 1
-          state.update((v, buf.base,
-            buf.items.toSeq.map { case (key, (c, e)) => (key, c, e) }))
-          agg.finish(buf).items.iterator
-            .map(c => (bucket, v, c.key, c.cnt, c.err))
-      }
-      .toDF("bucket", "ver", "item", "cnt", "err")
-  }
-
-  /** Continuous quantile sketch — the streaming face of
-    * [[graft.operators.QuantileSketch.ddQuantiles]]: per-key state is
-    * the DDSketch bucket→count map (counts are ADDITIVE, so the fold
-    * is merge-order-insensitive and the exact-mode snapshot equals
-    * the batch operator bit-for-bit — the spec's differential crosses
-    * micro-batch boundaries). The map is bounded by `maxBuckets`:
-    * past the bound the LOWEST buckets collapse into one (the
-    * standard DDSketch collapse — upper quantiles, the latency
-    * percentiles a monitoring plane alarms on, keep their α
-    * guarantee; the collapsed floor is marked by `collapsed`).
-    * Emits the key's current quantile estimates after each batch as
-    * (key, ver, n, collapsed, names…) — `ver` increments per fold so
-    * readers take the max-ver snapshot. */
-  def quantileSketchStream(
-      typed: DataFrame,
-      keyCol: String,
-      valueCol: String,
-      alphaBp: Int,
-      maxBuckets: Int,
-      qs: Seq[(Long, Long)],
-      names: Seq[String]): DataFrame = {
-    require(maxBuckets >= 2, s"maxBuckets must be >= 2: $maxBuckets")
-    require(qs.nonEmpty && qs.size == names.size,
-      s"one name per quantile: $qs / $names")
-    val g = graft.operators.QuantileSketch.gamma(alphaBp)
-    val lnG = math.log(g)
-    val spark = typed.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState,
-      GroupStateTimeout, OutputMode}
-    val qsL = qs.toIndexedSeq
-    typed
-      .where(col(keyCol).isNotNull && col(valueCol).isNotNull &&
-        round(col(valueCol) * 100, 0).cast("long") > 0)
-      .select(col(keyCol).cast("string").as("key"),
-        round(col(valueCol) * 100, 0).cast("long").as("vc"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Boolean, Map[Long, Long]),
-          (String, Long, Long, Boolean, Seq[Double])](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[(String, Long)],
-         state: GroupState[(Long, Boolean, Map[Long, Long])]) =>
-          val (ver, wasCollapsed, counts0) = state.getOption
-            .getOrElse((0L, false, Map.empty[Long, Long]))
-          var counts = counts0
-          it.foreach { case (_, vc) =>
-            val bk = graft.operators.QuantileSketch.bucketOf(vc, lnG)
-            counts = counts.updated(bk, counts.getOrElse(bk, 0L) + 1L)
-          }
-          // DDSketch collapse: fold the lowest buckets into the
-          // lowest KEPT bucket until the map fits — additive, so the
-          // total count (and every upper-bucket rank) is unchanged
-          var collapsed = wasCollapsed
-          while (counts.size > maxBuckets) {
-            val lows = counts.keys.toSeq.sorted.take(2)
-            val (l0, l1) = (lows(0), lows(1))
-            counts = (counts - l0).updated(l1,
-              counts(l1) + counts(l0))
-            collapsed = true
-          }
-          val v = ver + 1
-          state.update((v, collapsed, counts))
-          val n = counts.valuesIterator.sum
-          val sortedB = counts.toSeq.sortBy(_._1)
-          val ests = qsL.map { case (num, den) =>
-            val rank = (n * num + den - 1) / den
-            var cum = 0L
-            var pick = sortedB.last._1
-            var found = false
-            sortedB.foreach { case (bk, c) =>
-              if (!found) { cum += c; if (cum >= rank) { pick = bk; found = true } }
-            }
-            BigDecimal(2.0 * math.exp(pick.toDouble * lnG) / (g + 1.0))
-              .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-          }
-          if (n == 0L) Iterator.empty
-          else Iterator.single((key, v, n, collapsed, ests))
-      }
-      .select(Seq(col("_1").as("key"), col("_2").as("ver"),
-        col("_3").as("n"), col("_4").as("collapsed")) ++
-        names.zipWithIndex.map { case (nm, i) =>
-          col("_5").getItem(i).as(nm) }: _*)
-  }
-
-  /** Continuous event-time LATENESS audit: per key, how far behind
-    * the key's own high-water mark each arriving point is — the
-    * instrumentation that DECIDES a watermark delay ([[
-    * windowedSeriesAgg]] silently drops what its delay excludes;
-    * before trusting a delay, measure what it would have dropped).
-    * State per key is (high-water mark, n, n_late, worst skew) — four
-    * Longs. A point is late when it arrives below the mark set by
-    * PREVIOUS micro-batches (exactly what a watermark sees: the mark
-    * only advances between batches, so the verdict is deterministic
-    * whatever order the batch's points shuffle in). Emits one row per
-    * fold: (key, ver, hwm_ns, n, n_late, late_bp, max_skew_ns).
-    *
-    * The spec differential replays the identical per-batch fold, so
-    * the final snapshot matches exactly. */
-  def latenessStream(
-      typed: DataFrame,
-      keyCol: String): DataFrame = {
-    val spark = typed.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState,
-      GroupStateTimeout, OutputMode}
-    typed
-      .where(col(keyCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        col("time_ns").cast("long"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long, Long, Long),
-          (String, Long, Long, Long, Long, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[(String, Long)],
-         state: GroupState[(Long, Long, Long, Long, Long)]) =>
-          var (ver, hwm, n, nLate, maxSkew) = state.getOption
-            .getOrElse((0L, Long.MinValue, 0L, 0L, 0L))
-          val pts = it.toSeq.map(_._2)
-          val prevHwm = if (n == 0) Long.MinValue else hwm
-          pts.foreach { t =>
-            if (t < prevHwm) {
-              nLate += 1
-              if (prevHwm - t > maxSkew) maxSkew = prevHwm - t
-            }
-          }
-          if (pts.nonEmpty) {
-            n += pts.size
-            val mx = pts.max
-            if (mx > hwm) hwm = mx
-          }
-          val v = ver + 1
-          state.update((v, hwm, n, nLate, maxSkew))
-          if (n == 0) Iterator.empty
-          else Iterator.single((key, v, hwm, n, nLate,
-            nLate * 10000L / n, maxSkew))
-      }
-      .toDF("key", "ver", "hwm_ns", "n", "n_late", "late_bp",
-        "max_skew_ns")
-  }
-
-  /** Continuous DISTRIBUTION-DRIFT monitor: each key's running value
-    * distribution (DDSketch buckets, the [[quantileSketchStream]]
-    * state) compared per fold against a FIXED reference distribution
-    * — the streaming face of [[graft.operators.Profiling.ksTest]]
-    * computed on the shared bucket domain, alarming "this feed's
-    * values stopped looking like the training reference" without
-    * re-reading history. The distance is the exact cross-multiplied
-    * KS integer max|cum_cur·n_ref − cum_ref·n_cur| over the merged
-    * bucket domain (ksTest's discipline; one rounded division), so
-    * the snapshot equals the batch ksTest over identically-bucketed
-    * cohorts bit-for-bit — the spec's differential.
-    *
-    * `reference` is a bucket→count map (bounded by the log-bucket
-    * domain, ~820 entries at α = 2% over 1..10⁷ cents) captured once
-    * from the reference corpus via [[graft.operators.QuantileSketch]]
-    * bucketing — a driver-side constant shipped in the closure, the
-    * centroid-frame discipline.
-    *
-    * Emits (key, ver, n, d_num, d_r) per fold; state is the bounded
-    * bucket map per key. */
-  def driftStream(
-      typed: DataFrame,
-      keyCol: String,
-      valueCol: String,
-      alphaBp: Int,
-      reference: Map[Long, Long]): DataFrame = {
-    require(reference.nonEmpty, "reference distribution is empty")
-    require(reference.values.forall(_ > 0),
-      "reference counts must be positive")
-    val lnG = math.log(graft.operators.QuantileSketch.gamma(alphaBp))
-    val refSorted = reference.toSeq.sortBy(_._1).toIndexedSeq
-    val nRef = reference.valuesIterator.sum
-    val spark = typed.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState,
-      GroupStateTimeout, OutputMode}
-    typed
-      .where(col(keyCol).isNotNull && col(valueCol).isNotNull &&
-        round(col(valueCol) * 100, 0).cast("long") > 0)
-      .select(col(keyCol).cast("string").as("key"),
-        round(col(valueCol) * 100, 0).cast("long").as("vc"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Map[Long, Long]),
-          (String, Long, Long, Long, Double)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[(String, Long)],
-         state: GroupState[(Long, Map[Long, Long])]) =>
-          val (ver, counts0) = state.getOption
-            .getOrElse((0L, Map.empty[Long, Long]))
-          var counts = counts0
-          it.foreach { case (_, vc) =>
-            val bk = graft.operators.QuantileSketch.bucketOf(vc, lnG)
-            counts = counts.updated(bk, counts.getOrElse(bk, 0L) + 1L)
-          }
-          val v = ver + 1
-          state.update((v, counts))
-          val nCur = counts.valuesIterator.sum
-          if (nCur == 0L) Iterator.empty
-          else {
-            val domain = (counts.keySet ++ refSorted.map(_._1))
-              .toSeq.sorted
-            var cumCur = 0L; var cumRef = 0L; var dNum = 0L
-            domain.foreach { bk =>
-              cumCur += counts.getOrElse(bk, 0L)
-              cumRef += reference.getOrElse(bk, 0L)
-              val d = math.abs(cumCur * nRef - cumRef * nCur)
-              if (d > dNum) dNum = d
-            }
-            // (nCur·nRef) as a Long product THEN cast — the exact
-            // operand order ksTest's rounded division uses
-            val dR = BigDecimal(dNum.toDouble / (nCur * nRef).toDouble)
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-            Iterator.single((key, v, nCur, dNum, dR))
-          }
-      }
-      .toDF("key", "ver", "n", "d_num", "d_r")
-  }
-
-  /** Continuous strictly-ordered funnel — the streaming face of
-    * [[graft.operators.Behavior.funnel]]: per-key state is the pair
-    * (stages-reached count, last reach time) — O(1) per key. Greedy
-    * advance over in-order input is EQUIVALENT to the batch operator's
-    * min-time chaining (processing events in (time, tie) order, the
-    * first qualifying stage-i event IS the earliest one), so the
-    * rollup of emitted reach events equals the batch stage counts —
-    * the spec's differential crosses micro-batch boundaries. Emits one
-    * row per newly-reached stage: (key, stage 1-based, stage_name,
-    * time_ns). */
-  def funnelStream(
-      typed: DataFrame,
-      keyCol: String,
-      typeCol: String,
-      tieCol: String,
-      stages: Seq[String]): DataFrame = {
-    require(stages.nonEmpty && stages.distinct.size == stages.size,
-      s"stages must be non-empty and distinct: $stages")
-    val spark = typed.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState,
-      GroupStateTimeout, OutputMode}
-    val stageSeq = stages.toIndexedSeq
-    typed
-      .where(col(keyCol).isNotNull && col(typeCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        col("time_ns").cast("long"),
-        col(tieCol).cast("long").as("tie"),
-        col(typeCol).cast("string").as("typ"))
-      .as[(String, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Int, Long),
-          (String, Long, String, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[(String, Long, Long, String)],
-         state: GroupState[(Int, Long)]) =>
-          var (reached, tLast) = state.getOption.getOrElse((0, 0L))
-          val out = Seq.newBuilder[(String, Long, String, Long)]
-          it.toSeq.sortBy(p => (p._2, p._3)).foreach {
-            case (_, ts, _, typ) =>
-              if (reached < stageSeq.length &&
-                typ == stageSeq(reached) &&
-                (reached == 0 || ts > tLast)) {
-                reached += 1
-                tLast = ts
-                out += ((key, reached.toLong, typ, ts))
-              }
-          }
-          state.update((reached, tLast))
-          out.result().iterator
-      }
-      .toDF("key", "stage", "stage_name", "time_ns")
-  }
-
-  /** Stream-stream interval join: each point paired with the alerts of
-    * the same series whose event time precedes it by at most
-    * `joinWindow` — the continuous form of TemporalJoin.rangeJoin's
-    * "events in an alert's aftermath" enrichment. BOTH sides carry
-    * watermarks and the join condition bounds both event-time columns,
-    * which is what lets Spark evict join state instead of buffering
-    * each stream forever (the unbounded-state trap of naive
-    * stream-stream joins). Inner join → append mode works. */
-  def streamIntervalJoin(
-      points: DataFrame,
-      alerts: DataFrame,
-      keyCol: String,
-      joinWindow: String,
-      watermarkDelay: String): DataFrame = {
-    val p = withEventTime(points)
-      .withWatermark("time", watermarkDelay)
-    val a = withEventTime(alerts)
-      .select(col(keyCol).as("_a_key"),
-        col("time").as("alert_time"),
-        col("time_ns").as("alert_time_ns"))
-      .withWatermark("alert_time", watermarkDelay)
-    p.join(a,
-      col(keyCol) === col("_a_key") &&
-        col("time") >= col("alert_time") &&
-        col("time") <= col("alert_time") + expr(s"INTERVAL $joinWindow"))
-      .drop("_a_key", "time", "alert_time")
-  }
-
-  /** Continuous per-series anomaly scoring — the streaming face of
-    * [[graft.operators.SeriesOps.rollingAnomalies]], same integer
-    * contract: each point is scored against its series' `lookback`
-    * PRIOR values (count/sum/sum-of-squares over exact Long
-    * cent-units), the flag is the cross-multiplied square test
-    * D² > σ²·V, and z is the one unrounded IEEE divide-of-sqrt —
-    * bit-identical to the batch operator on in-order input (the spec
-    * asserts the differential). Implemented with
-    * `flatMapGroupsWithState`: per-series state is a RING OF AT MOST
-    * `lookback` Longs — bounded by construction, so total state is
-    * O(series-cardinality · lookback) at any stream length (the
-    * unbounded-state trap of windowed self-joins never arises). Points
-    * are folded in (time_ns, value) order WITHIN each micro-batch;
-    * cross-batch ordering is the source's arrival order — the
-    * operator's contract is in-order-per-series input, the same
-    * contract the batch operator's bucket ordering encodes. */
-  def anomalyStream(
-      typed: DataFrame,
-      keyCol: String,
-      valueCol: String,
-      lookback: Int = 24,
-      minPrior: Int = 12,
-      sigma: Int = 3): DataFrame = {
-    require(lookback >= 2, s"lookback must be >= 2: $lookback")
-    require(minPrior >= 2 && minPrior <= lookback,
-      s"need 2 <= minPrior <= lookback: $minPrior/$lookback")
-    require(sigma >= 1, s"sigma must be >= 1: $sigma")
-    val spark = typed.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState,
-      GroupStateTimeout, OutputMode}
-    val sig2 = sigma.toLong * sigma
-    typed
-      .where(col(keyCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        col("time_ns").cast("long"),
-        round(col(valueCol) * 100, 0).cast("long").as("vc"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Seq[Long],
-          (String, Long, Long, Long, Option[Double], Boolean)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[(String, Long, Long)],
-         state: GroupState[Seq[Long]]) =>
-          var ring = state.getOption.getOrElse(Seq.empty[Long])
-          val out = Seq.newBuilder[
-            (String, Long, Long, Long, Option[Double], Boolean)]
-          it.toSeq.sortBy(p => (p._2, p._3)).foreach { case (_, ts, v) =>
-            val n = ring.length.toLong
-            var sm = 0L; var ssq = 0L
-            ring.foreach { x => sm += x; ssq += x * x }
-            val d = v * n - sm
-            val vv = n * ssq - sm * sm
-            val eligible = n >= minPrior
-            val z = if (eligible && vv > 0)
-              Some(d.toDouble / math.sqrt(vv.toDouble)) else None
-            out += ((key, ts, v, n, z, eligible && d * d > sig2 * vv))
-            ring = (ring :+ v).takeRight(lookback)
-          }
-          state.update(ring)
-          out.result().iterator
-      }
-      .toDF("key", "time_ns", "vc", "n_prior", "z", "is_anomaly")
-  }
-
-  /** Continuous seasonal Holt-Winters — the streaming face of
-    * [[graft.operators.SeriesOps.holtWintersFixed]], same exact-integer
-    * recursion (cent units, truncate-toward-zero Long division,
-    * zero-seeded seasonal ring), so the spec asserts the
-    * streaming/batch differential point-for-point across micro-batch
-    * boundaries. Per-series state is (point-count, level, trend) + the
-    * ring of `season` Longs — 3+m values, bounded by construction at
-    * any stream length. Points fold in (time_ns, value) order WITHIN
-    * each micro-batch; cross-batch ordering is the source's arrival
-    * order (the in-order-per-series contract the batch operator's
-    * bucket sort encodes). */
-  def holtWintersStream(
-      typed: DataFrame,
-      keyCol: String,
-      valueCol: String,
-      aNum: Long, aDen: Long,
-      bNum: Long, bDen: Long,
-      gNum: Long, gDen: Long,
-      season: Int): DataFrame = {
-    require(aDen > 0 && aNum > 0 && aNum <= aDen,
-      s"need 0 < aNum <= aDen, got $aNum/$aDen")
-    require(bDen > 0 && bNum > 0 && bNum <= bDen,
-      s"need 0 < bNum <= bDen, got $bNum/$bDen")
-    require(gDen > 0 && gNum > 0 && gNum <= gDen,
-      s"need 0 < gNum <= gDen, got $gNum/$gDen")
-    require(season >= 2, s"season must be >= 2: $season")
-    val spark = typed.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState,
-      GroupStateTimeout, OutputMode}
-    typed
-      .where(col(keyCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        col("time_ns").cast("long"),
-        round(col(valueCol) * 100, 0).cast("long").as("vc"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Seq[Long],
-          (String, Long, Long, Long, Long, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[(String, Long, Long)],
-         state: GroupState[Seq[Long]]) =>
-          val st = state.getOption.getOrElse(Seq.empty[Long])
-          var i = if (st.isEmpty) 0L else st(0)
-          var l = if (st.isEmpty) 0L else st(1)
-          var t = if (st.isEmpty) 0L else st(2)
-          val seas =
-            if (st.isEmpty) Array.fill(season)(0L)
-            else st.drop(3).toArray
-          val out = Seq.newBuilder[
-            (String, Long, Long, Long, Long, Long, Long)]
-          it.toSeq.sortBy(p => (p._2, p._3)).foreach { case (_, ts, v) =>
-            i += 1
-            if (i == 1L) {
-              l = v; t = 0L
-              out += ((key, ts, v, l, t, 0L, l + t + seas(1 % season)))
-            } else {
-              val slot = ((i - 1) % season).toInt
-              val sp = seas(slot)
-              val sm = l + t
-              val l2 =
-                (aNum * (v - sp) + (aDen - aNum) * sm + aDen / 2) / aDen
-              t = (bNum * (l2 - l) + (bDen - bNum) * t + bDen / 2) / bDen
-              val sn =
-                (gNum * (v - l2) + (gDen - gNum) * sp + gDen / 2) / gDen
-              seas(slot) = sn
-              l = l2
-              out += ((key, ts, v, l, t, sn,
-                l + t + seas((i % season).toInt)))
-            }
-          }
-          state.update(Seq(i, l, t) ++ seas)
-          out.result().iterator
-      }
-      .toDF("key", "time_ns", "vc", "level", "trend", "seasonal",
-        "forecast")
   }
 
   /** Append-mode parquet sink with checkpointed offsets (exactly-once
@@ -911,33 +64,6 @@ object StreamIngest {
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
-      .start()
-
-  /** Continuous growing-index dedup — the streaming face of
-    * [[graft.operators.Dedup.lshIndexIngest]]: each micro-batch signs
-    * its documents ONCE, marks them against the ON-DISK banded index,
-    * and appends the non-duplicates' band + signature rows — so the
-    * state the stream grows IS the shared persistent index
-    * (restart-safe, readable mid-stream, shared with batch ingests),
-    * never executor memory: corpus-scale dedup state does not fit a
-    * streaming state store and does not need to — the index is
-    * storage-resident by design.
-    *
-    * Exactly-once: every frame a micro-batch writes lands under its
-    * own `batch=<id>` partition and is rewritten WHOLE on a replay
-    * (the foreachBatch retry contract), so a crashed batch cannot
-    * double-append index rows; the within-batch arrival-order rule
-    * makes the re-marking itself deterministic. */
-  def lshIndexIngestStream(docs: DataFrame, idCol: String,
-      textCol: String, indexDir: String, marksDir: String,
-      checkpointDir: String, numHashes: Int = 8, bands: Int = 4,
-      shingleLen: Int = 3, minMatches: Int = 4): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        lshIngestBatch(batch, idCol, textCol, indexDir, marksDir,
-          batchId, numHashes, bands, shingleLen, minMatches)
-      }
       .start()
 
   // ------------------------------------------------------------------
@@ -1458,8 +584,9 @@ object StreamIngest {
   private def bandKey: Column =
     concat_ws("\u0001", col("band"), col("band_hash"))
 
-  /** One micro-batch of the growing-index ingest (the foreachBatch
-    * body, callable directly for batch replays/backfills).
+  /** One micro-batch of the growing-index ingest, under an explicit
+    * batch id (usable as a `foreachBatch` body, or called directly
+    * with explicit ids for replays and backfills).
     *
     * Probe-path pruning (the two-tier layout contract): the stored
     * index is a hot tail of `batch=<id>` partitions plus a compacted
@@ -3155,22 +2282,6 @@ object StreamIngest {
     maxSkew > 0 && ivfListSkew(spark, indexDir) > maxSkew &&
       splitIvfLists(spark, indexDir, maxSkew)
 
-  /** Continuous IVF index growth — the ANN face of
-    * [[lshIndexIngestStream]]: each micro-batch assigns its
-    * embeddings against the persisted codebook (a zero-shuffle
-    * projection) and appends (vec_id, list, vec) under its own
-    * `batch=<id>` partition (replay rewrites whole — exactly-once);
-    * the stored corpus is never re-assigned or re-scanned, so ingest
-    * cost tracks the batch while the index grows unbounded. */
-  def ivfIngestStream(emb: DataFrame, idCol: String, vecCol: String,
-      indexDir: String, checkpointDir: String): StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ivfIngestBatch(batch, idCol, vecCol, indexDir, batchId)
-      }
-      .start()
-
   /** One micro-batch of the IVF ingest (callable for batch
     * backfills). */
   def ivfIngestBatch(batch: DataFrame, idCol: String, vecCol: String,
@@ -3414,29 +2525,15 @@ object StreamIngest {
       vecCol, anchors, books, k, nProbe, refine)
   }
 
-  /** Continuous SemDeDup — the THIRD face of the persistent IVF
-    * index: each micro-batch assigns against the persisted codebook,
-    * takes its semantic-duplicate verdicts against ONLY its own
-    * lists' stored vectors ([[graft.operators.Similarity
-    * .semanticDedupIngest]]; the epoch scan is list-pruned), and
-    * appends the non-duplicates under `batch=<id>` — so the index a
-    * dedup stream grows is the SAME index [[ivfIndexTopK]] serves,
-    * and no batch ever re-clusters or re-scans the corpus.
-    * Exactly-once: replay rewrites the whole batch partition, and the
-    * stored read excludes the current batch at the listing. */
-  def semanticDedupStream(emb: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, marksDir: String,
-      checkpointDir: String, threshold: Double): StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        semanticIngestBatch(batch, idCol, vecCol, indexDir, marksDir,
-          batchId, threshold)
-      }
-      .start()
-
-  /** One micro-batch of the SemDeDup ingest (the foreachBatch body,
-    * callable directly for batch backfills). */
+  /** One micro-batch of the SemDeDup ingest, under an explicit batch
+    * id — the THIRD face of the persistent IVF index: the batch
+    * assigns against the persisted codebook, takes its
+    * semantic-duplicate verdicts against ONLY its own lists' stored
+    * vectors ([[graft.operators.Similarity.semanticDedupIngest]]), and
+    * appends the non-duplicates under `batch=<id>`, so the index it
+    * grows is the SAME index [[ivfIndexTopK]] serves. A replay rewrites
+    * the whole batch partition, and the stored read excludes the
+    * current batch at the listing. */
   def semanticIngestBatch(batch: DataFrame, idCol: String,
       vecCol: String, indexDir: String, marksDir: String,
       batchId: Long, threshold: Double): Unit =

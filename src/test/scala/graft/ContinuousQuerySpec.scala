@@ -108,4 +108,25 @@ class ContinuousQuerySpec extends AnyFunSuite {
       bucketNs = Day, resampleNs = Day)
     assert(gotRollup(cq, dst) === fullRollup(src))
   }
+
+  test("unchanged-bucket identity does not cancel: two rows with equal " +
+    "hashes that change together change the bucket's identity, so the " +
+    "refresh rewrites the bucket") {
+    val s = spark
+    import s.implicits._
+    def identity(rows: (Long, Long)*) =
+      ContinuousQuery.bucketIdentity(rows.toDF("b", "__h"), col("b"))
+    // each bucket's XOR is 0 both before and after, at the same count
+    val before = identity((0L, 5L), (0L, 5L),
+      (1L, Long.MaxValue), (1L, Long.MaxValue))
+    val after = identity((0L, 7L), (0L, 7L),
+      (1L, Long.MinValue), (1L, Long.MinValue))
+    assert(before(0L) !== after(0L))
+    assert(before(1L) !== after(1L))
+    // full-range hashes sum exactly (a long sum would overflow under
+    // ANSI), and the identity ignores row order
+    assert(before(1L) === ((2L, BigDecimal(Long.MaxValue) * 2)))
+    assert(identity((0L, 3L), (0L, -9L), (0L, 3L)) ===
+      identity((0L, -9L), (0L, 3L), (0L, 3L)))
+  }
 }

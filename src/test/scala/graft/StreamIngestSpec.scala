@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming ingestion E2E: line-protocol text files stream through the
-  * typed decode into a checkpointed parquet sink; the watermarked
-  * windowed aggregation closes windows once the event-time watermark
-  * passes and drops later-than-watermark points (SURVEY.md §2.9). */
+  * typed decode and the watermark-bounded dedup into a checkpointed
+  * parquet sink (SURVEY.md §2.9); the persistent LSH / IVF / PQ indexes
+  * grow one `*IngestBatch` micro-batch at a time. */
 class StreamIngestSpec extends AnyFunSuite {
   lazy val spark = SparkSpec.spark
 
@@ -51,116 +51,6 @@ class StreamIngestSpec extends AnyFunSuite {
       .head().isNullAt(got.columns.indexOf("n")))
   }
 
-  test("watermarked windowed agg closes windows in append mode and " +
-    "drops later-than-watermark points") {
-    val in = Files.createTempDirectory("graft_win_in").toString
-    val out = Files.createTempDirectory("graft_win_out").toString
-    val ckpt = Files.createTempDirectory("graft_win_ck").toString
-    // window 1m, watermark 2m
-    writeBatch(in, "b0.lp", Seq(
-      s"m,host=h1 v=1.0 ${minuteNs(10)}",
-      s"m,host=h1 v=3.0 ${minuteNs(10) + 30L * 1000000000L}",
-      s"m,host=h2 v=5.0 ${minuteNs(11)}"))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val agg = StreamIngest.windowedSeriesAgg(typed, Seq("tag_host"), "v",
-      "1 minute", "2 minutes")
-    val q = StreamIngest.toParquet(agg, out, ckpt)
-    try {
-      q.processAllAvailable()
-      // advance event time far past the earlier windows; the watermark
-      // itself only moves at the END of this batch (to 30:00 − 2m)
-      writeBatch(in, "b1.lp", Seq(s"m,host=h1 v=100.0 ${minuteNs(30)}"))
-      q.processAllAvailable()
-      // next batch runs under watermark 28:00 → the minute-10/11 windows
-      // close and emit, and a point back at minute 10 is LATE → dropped
-      writeBatch(in, "b2.lp", Seq(
-        s"m,host=h1 v=999.0 ${minuteNs(10)}", // later than watermark
-        s"m,host=h1 v=101.0 ${minuteNs(31)}"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(out)
-    // closed windows: [10:00,10:01) h1 (2 points), [11:00,11:02) h2
-    val w10 = got.filter(col("tag_host") === "h1" &&
-      col("n_points") === 2L).collect()
-    assert(w10.length == 1)
-    assert(w10.head.getAs[Double]("avg_value") == 2.0)
-    assert(w10.head.getAs[Double]("max_value") == 3.0)
-    // the late 999.0 point never contaminated the closed window
-    assert(got.filter(col("max_value") === 999.0).isEmpty)
-    val w11 = got.filter(col("tag_host") === "h2").collect()
-    assert(w11.length == 1 && w11.head.getAs[Double]("avg_value") == 5.0)
-  }
-
-  test("streaming heavy hitters: per-window top-k ranking emits once " +
-    "the watermark closes the window; counts exact below capacity") {
-    val in = Files.createTempDirectory("graft_hh_in").toString
-    val out = Files.createTempDirectory("graft_hh_out").toString
-    val ckpt = Files.createTempDirectory("graft_hh_ck").toString
-    // one minute-10 window: h1×3, h2×2, h3×1
-    writeBatch(in, "b0.lp", Seq(
-      s"m,host=h1 v=1.0 ${minuteNs(10)}",
-      s"m,host=h1 v=1.0 ${minuteNs(10) + 1}",
-      s"m,host=h1 v=1.0 ${minuteNs(10) + 2}",
-      s"m,host=h2 v=1.0 ${minuteNs(10) + 3}",
-      s"m,host=h2 v=1.0 ${minuteNs(10) + 4}",
-      s"m,host=h3 v=1.0 ${minuteNs(10) + 5}"))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val hh = StreamIngest.windowedHeavyHitters(typed, "tag_host",
-      "1 minute", "2 minutes", k = 2, capacity = 16)
-    val q = StreamIngest.toParquet(hh, out, ckpt)
-    try {
-      q.processAllAvailable()
-      // nothing emitted yet — the window is still open
-      assert(spark.read.parquet(out).isEmpty)
-      // advance event time; the watermark closes minute 10 next batch
-      writeBatch(in, "b1.lp", Seq(s"m,host=h9 v=1.0 ${minuteNs(30)}"))
-      q.processAllAvailable()
-      writeBatch(in, "b2.lp", Seq(s"m,host=h9 v=1.0 ${minuteNs(31)}"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(out)
-      .collect().map(r => (r.getLong(1), r.getString(2),
-        r.getLong(3), r.getLong(4)))
-      .sortBy(_._1)
-    // top-2 of the closed minute-10 window, exact counts, zero error
-    assert(got.toSeq === Seq((1L, "h1", 3L, 0L), (2L, "h2", 2L, 0L)))
-  }
-
-  test("streaming heavy hitters: NULL keys (untagged points) are " +
-    "excluded, not a map-serializer crash") {
-    val in = Files.createTempDirectory("graft_hhn_in").toString
-    val out = Files.createTempDirectory("graft_hhn_out").toString
-    val ckpt = Files.createTempDirectory("graft_hhn_ck").toString
-    // untagged lines decode to tag_host = null — pre-guard these killed
-    // the query ("Cannot use null as map key" inside the SpaceSaving
-    // buffer's map serializer)
-    writeBatch(in, "b0.lp", Seq(
-      s"m v=1.0 ${minuteNs(10)}",
-      s"m v=1.0 ${minuteNs(10) + 1}",
-      s"m,host=h1 v=1.0 ${minuteNs(10) + 2}",
-      s"m,host=h1 v=1.0 ${minuteNs(10) + 3}",
-      s"m,host=h2 v=1.0 ${minuteNs(10) + 4}"))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val hh = StreamIngest.windowedHeavyHitters(typed, "tag_host",
-      "1 minute", "2 minutes", k = 3, capacity = 16)
-    val q = StreamIngest.toParquet(hh, out, ckpt)
-    try {
-      q.processAllAvailable()
-      writeBatch(in, "b1.lp", Seq(s"m,host=h9 v=1.0 ${minuteNs(30)}"))
-      q.processAllAvailable()
-      writeBatch(in, "b2.lp", Seq(s"m,host=h9 v=1.0 ${minuteNs(31)}"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(out)
-      .collect().map(r => (r.getLong(1), r.getString(2), r.getLong(3)))
-      .sortBy(_._1)
-    // the two null-key points are excluded; tagged counts are exact
-    assert(got.toSeq === Seq((1L, "h1", 2L), (2L, "h2", 1L)))
-  }
-
   test("poison lines (blank / malformed) are dropped, not crash-looped") {
     val in = Files.createTempDirectory("graft_poison_in").toString
     val out = Files.createTempDirectory("graft_poison_out").toString
@@ -177,15 +67,6 @@ class StreamIngestSpec extends AnyFunSuite {
     try q.processAllAvailable() finally q.stop()
     val got = spark.read.parquet(out)
     assert(got.count() == 2) // the two well-formed lines survived
-    // dead-letter stream quarantines exactly the malformed lines
-    val dlOut = Files.createTempDirectory("graft_dl_out").toString
-    val dlCk = Files.createTempDirectory("graft_dl_ck").toString
-    val dq = StreamIngest.toParquet(
-      StreamIngest.deadLetters(spark, in), dlOut, dlCk)
-    try dq.processAllAvailable() finally dq.stop()
-    val dl = spark.read.parquet(dlOut).collect().map(_.getString(0)).toSet
-    assert(dl == Set("garbage with no fields",
-      s"m,host=h2 v=2.0 notanumber"))
   }
 
   test("streaming dedup suppresses replayed (series, ts) points within " +
@@ -217,754 +98,26 @@ class StreamIngestSpec extends AnyFunSuite {
       col("time_ns") === minuteNs(10)).count() == 1)
   }
 
-  test("stream-stream interval join pairs points with same-series " +
-    "alerts inside the window; state is watermark-bounded") {
-    val inP = Files.createTempDirectory("graft_ssj_p").toString
-    val inA = Files.createTempDirectory("graft_ssj_a").toString
-    val out = Files.createTempDirectory("graft_ssj_out").toString
-    val ckpt = Files.createTempDirectory("graft_ssj_ck").toString
-    val fieldsV = Map("v" -> FieldSch("v", FieldType.Float))
-    // alerts at minute 10 (h1); points at 12 (h1, in-window), 50 (h1,
-    // out-of-window), 12 (h2, other series)
-    writeBatch(inA, "a0.lp", Seq(s"al,host=h1 v=1.0 ${minuteNs(10)}"))
-    writeBatch(inP, "p0.lp", Seq(
-      s"m,host=h1 v=2.0 ${minuteNs(12)}",
-      s"m,host=h1 v=9.0 ${minuteNs(50)}",
-      s"m,host=h2 v=3.0 ${minuteNs(12)}"))
-    val joined = StreamIngest.streamIntervalJoin(
-      StreamIngest.typedStream(spark, inP, Seq("host"), fieldsV),
-      StreamIngest.typedStream(spark, inA, Seq("host"), fieldsV),
-      keyCol = "tag_host", joinWindow = "10 minutes",
-      watermarkDelay = "5 minutes")
-    val q = StreamIngest.toParquet(joined, out, ckpt)
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.read.parquet(out)
-      .select(col("tag_host"), col("time_ns"), col("alert_time_ns"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    // exactly one pair: h1 point at minute 12 ⋈ h1 alert at minute 10
-    assert(got.toSeq == Seq(("h1", minuteNs(12), minuteNs(10))))
-  }
-
-  test("session windows close after the event-time gap per series") {
-    val in = Files.createTempDirectory("graft_sess_in").toString
-    val out = Files.createTempDirectory("graft_sess_out").toString
-    val ckpt = Files.createTempDirectory("graft_sess_ck").toString
-    // h1: two points 1 min apart (one session), then 20 min of silence,
-    // then one more point (a second session); gap = 5 min
-    writeBatch(in, "b0.lp", Seq(
-      s"m,host=h1 v=1.0 ${minuteNs(10)}",
-      s"m,host=h1 v=3.0 ${minuteNs(11)}",
-      s"m,host=h1 v=7.0 ${minuteNs(31)}"))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val agg = StreamIngest.sessionizedSeriesAgg(typed, Seq("tag_host"),
-      "v", gapDuration = "5 minutes", watermarkDelay = "1 minute")
-    val q = StreamIngest.toParquet(agg, out, ckpt)
-    try {
-      q.processAllAvailable()
-      // advance the watermark far past both sessions so they emit
-      writeBatch(in, "b1.lp", Seq(s"m,host=h1 v=0.0 ${minuteNs(120)}"))
-      q.processAllAvailable()
-      writeBatch(in, "b2.lp", Seq(s"m,host=h1 v=0.0 ${minuteNs(121)}"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(out)
-    val sessions = got.filter(col("n_points") >= 1).collect()
-      .map(r => (r.getAs[Long]("n_points"), r.getAs[Double]("avg_value")))
-      .toSet
-    assert(sessions.contains((2L, 2.0)), sessions) // minutes 10-11
-    assert(sessions.contains((1L, 7.0)), sessions) // minute 31
-  }
-
-  test("streaming seasonal Holt-Winters matches the batch operator " +
-    "point-for-point across micro-batch boundaries (ring state " +
-    "carried); planted period-3 sawtooth learns nonzero seasonals") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_hw_in").toString
-    val out = Files.createTempDirectory("graft_hw_out").toString
-    val ckpt = Files.createTempDirectory("graft_hw_ck").toString
-    // period-3 sawtooth on a drifting base; the batch split lands
-    // mid-cycle so the ring must survive the micro-batch boundary
-    val pts = (1L to 17L).map(m =>
-      (m, 10.0 + (m % 3) * 4.0 + m * 0.5))
-    def lp(m: Long, v: Double) = s"m,host=h1 v=$v ${minuteNs(m)}"
-    writeBatch(in, "b0.lp", pts.take(7).map(p => lp(p._1, p._2)))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val hw = StreamIngest.holtWintersStream(typed, "tag_host", "v",
-      1L, 4L, 1L, 4L, 1L, 4L, season = 3)
-    val q = StreamIngest.toParquet(hw, out, ckpt)
-    try {
-      q.processAllAvailable()
-      writeBatch(in, "b1.lp", pts.drop(7).map(p => lp(p._1, p._2)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(out).collect()
-      .map(r => r.getAs[Long]("time_ns") ->
-        ((r.getAs[Long]("level"), r.getAs[Long]("trend"),
-          r.getAs[Long]("seasonal"), r.getAs[Long]("forecast"))))
-      .toMap
-    val batch = graft.operators.SeriesOps.holtWintersFixed(
-        pts.map(p => ("h1", minuteNs(p._1), math.round(p._2 * 100)))
-          .toDF("key", "b", "vc"),
-        Seq("key"), "b", "vc", 1L, 4L, 1L, 4L, 1L, 4L, season = 3)
-      .collect()
-      .map(r => r.getLong(1) ->
-        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
-      .toMap
-    assert(got == batch)
-    // the sawtooth is learned: post-first-cycle seasonal components
-    // are not all zero
-    assert(pts.drop(6).exists(p => got(minuteNs(p._1))._3 != 0L))
-  }
-
-  test("streaming anomaly scoring matches the batch operator " +
-    "point-for-point across micro-batch boundaries; spike off a flat " +
-    "baseline flags") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_anom_in").toString
-    val out = Files.createTempDirectory("graft_anom_out").toString
-    val ckpt = Files.createTempDirectory("graft_anom_ck").toString
-    // h1: flat 10.0 for 14 points then a 99.0 spike; h2: varied, never
-    // anomalous. Warm-up spans the micro-batch boundary, exercising
-    // state continuity.
-    val h1 = (1L to 14L).map(m => (m, 10.0)) :+ ((15L, 99.0))
-    val h2 = Seq((1L, 5.0), (2L, 7.0), (3L, 6.0), (4L, 5.5), (5L, 6.5),
-      (6L, 5.0), (7L, 7.0), (8L, 6.0))
-    def lp(host: String, m: Long, v: Double) =
-      s"m,host=$host v=$v ${minuteNs(m)}"
-    writeBatch(in, "b0.lp",
-      h1.take(6).map(p => lp("h1", p._1, p._2)) ++
-        h2.take(4).map(p => lp("h2", p._1, p._2)))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val scored = StreamIngest.anomalyStream(typed, "tag_host", "v",
-      lookback = 8, minPrior = 4, sigma = 3)
-    val q = StreamIngest.toParquet(scored, out, ckpt)
-    try {
-      q.processAllAvailable()
-      writeBatch(in, "b1.lp",
-        h1.drop(6).map(p => lp("h1", p._1, p._2)) ++
-          h2.drop(4).map(p => lp("h2", p._1, p._2)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(out).collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[Long]("time_ns")) ->
-        ((r.getAs[Long]("n_prior"),
-          Option(r.getAs[Any]("z")).map(_.asInstanceOf[Double]),
-          r.getAs[Boolean]("is_anomaly"))))
-      .toMap
-    // batch differential: same points, same cent units, same params
-    val frame = (h1.map(p => ("h1", minuteNs(p._1),
-        math.round(p._2 * 100))) ++
-      h2.map(p => ("h2", minuteNs(p._1), math.round(p._2 * 100))))
-      .toDF("key", "b", "vc")
-    val batch = graft.operators.SeriesOps.rollingAnomalies(frame,
-        Seq("key"), "b", "vc", lookback = 8, minPrior = 4, sigma = 3)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)) ->
-        ((r.getLong(3),
-          Option(r.get(4)).map(_.asInstanceOf[Double]),
-          r.getBoolean(5))))
-      .toMap
-    assert(got == batch)
-    // flat baseline + spike: flags with null z (V = 0, D != 0)
-    assert(got(("h1", minuteNs(15L))) == ((8L, None, true)))
-    // flat baseline, on-baseline points never flag
-    assert(!got(("h1", minuteNs(14L)))._3)
-    assert(h2.forall(p => !got(("h2", minuteNs(p._1)))._3))
-  }
-
-  test("streaming path transitions match the batch operator's " +
-    "adjacency pairs across micro-batch boundaries (last-event state " +
-    "carried); rollup of the pair stream equals batch counts") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_tr_in").toString
-    val out = Files.createTempDirectory("graft_tr_out").toString
-    val ckpt = Files.createTempDirectory("graft_tr_ck").toString
-    // u1's a→b boundary-straddling chain; u2's single cross-batch pair
-    val pts = Seq(("u1", 1L, "a"), ("u1", 2L, "b"), ("u2", 1L, "x"),
-      ("u1", 3L, "a"), ("u1", 4L, "c"), ("u2", 5L, "y"))
-    def lp(u: String, m: Long, t: String) =
-      s"m,host=$u,et=$t v=1 ${minuteNs(m)}"
-    writeBatch(in, "b0.lp", pts.take(3).map(p => lp(p._1, p._2, p._3)))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host", "et"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val tr = StreamIngest.transitionsStream(typed, "tag_host",
-      "tag_et", "time_ns")
-    val q = StreamIngest.toParquet(tr, out, ckpt)
-    try {
-      q.processAllAvailable()
-      writeBatch(in, "b1.lp", pts.drop(3).map(p => lp(p._1, p._2, p._3)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(out).collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[String]("from_type"),
-        r.getAs[String]("to_type"), r.getAs[Long]("time_ns")))
-      .toSet
-    // exact adjacency differential (stronger than count parity): each
-    // pair stamped at its destination event's time
-    assert(got === Set(
-      ("u1", "a", "b", minuteNs(2)), ("u1", "b", "a", minuteNs(3)),
-      ("u1", "a", "c", minuteNs(4)), ("u2", "x", "y", minuteNs(5))))
-    // and the bounded-domain rollup equals the batch operator's counts
-    val batchCounts = graft.operators.Behavior.pathTransitions(
-        pts.zipWithIndex.map { case ((u, m, t), i) =>
-          (i.toLong, minuteNs(m), u, t) }
-          .toDF("event_id", "ts", "user_id", "event_type"),
-        "user_id", "ts", "event_type", "event_id")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val streamCounts = got.toSeq.groupBy(p => (p._2, p._3))
-      .map { case (k, v) => k -> v.size.toLong }
-    assert(streamCounts === batchCounts)
-  }
-
-  test("streaming CUSUM matches the batch operator point-for-point " +
-    "across micro-batch boundaries (target/sums carried); the level " +
-    "shift alarms continuously") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_cu_in").toString
-    val out = Files.createTempDirectory("graft_cu_out").toString
-    val ckpt = Files.createTempDirectory("graft_cu_ck").toString
-    // flat 1.00 then a +0.10 shift straddling the batch boundary
-    val pts = (1L to 10L).map(m => (m, if (m <= 5) 1.0 else 1.1))
-    def lp(m: Long, v: Double) = s"m,host=h1 v=$v ${minuteNs(m)}"
-    writeBatch(in, "b0.lp", pts.take(6).map(p => lp(p._1, p._2)))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val cu = StreamIngest.cusumStream(typed, "tag_host", "v",
-      drift = 2L, threshold = 20L)
-    val q = StreamIngest.toParquet(cu, out, ckpt)
-    try {
-      q.processAllAvailable()
-      writeBatch(in, "b1.lp", pts.drop(6).map(p => lp(p._1, p._2)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(out).collect()
-      .map(r => r.getAs[Long]("time_ns") ->
-        ((r.getAs[Long]("s_pos"), r.getAs[Long]("s_neg"),
-          r.getAs[Boolean]("alarm_pos"))))
-      .toMap
-    val batch = graft.operators.SeriesOps.cusumFixed(
-        pts.map(p => ("h1", minuteNs(p._1), math.round(p._2 * 100)))
-          .toDF("key", "b", "vc"),
-        Seq("key"), "b", "vc", drift = 2L, threshold = 20L)
-      .collect()
-      .map(r => r.getLong(1) ->
-        ((r.getLong(3), r.getLong(4), r.getBoolean(5)))).toMap
-    assert(got === batch)
-    // shift of +10 cents, drift 2 → s⁺ grows 8/point from m=6; alarm
-    // from the third shifted point on, and it stays on
-    assert(!got(minuteNs(7))._3 && got(minuteNs(8))._3 &&
-      got(minuteNs(10))._3)
-  }
-
-  test("streaming counter rate: the last emitted row per key equals " +
-    "the batch counterRate aggregate across micro-batch boundaries, " +
-    "including a reset straddling the boundary") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_rt_in").toString
-    val out = Files.createTempDirectory("graft_rt_out").toString
-    val ckpt = Files.createTempDirectory("graft_rt_ck").toString
-    // counter climbs 0.10→0.40, resets to 0.05 EXACTLY at the batch
-    // boundary, climbs again, resets once more within batch 1
-    val pts = Seq((1L, 0.10), (2L, 0.25), (3L, 0.40), (4L, 0.05),
-      (5L, 0.30), (6L, 0.12), (7L, 0.20))
-    def lp(m: Long, v: Double) = s"m,host=h1 v=$v ${minuteNs(m)}"
-    writeBatch(in, "b0.lp", pts.take(3).map(p => lp(p._1, p._2)))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val rt = StreamIngest.rateStream(typed, "tag_host", "v")
-    val q = StreamIngest.toParquet(rt, out, ckpt)
-    try {
-      q.processAllAvailable()
-      writeBatch(in, "b1.lp", pts.drop(3).map(p => lp(p._1, p._2)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.read.parquet(out).collect()
-      .map(r => r.getAs[Long]("time_ns") ->
-        ((r.getAs[Long]("n_resets"), r.getAs[Long]("increase_c"))))
-      .toMap
-    // per-point recurrence: +15, +15, reset(+5), +25, reset(+12), +8
-    assert(rows(minuteNs(3)) === ((0L, 30L)))
-    assert(rows(minuteNs(4)) === ((1L, 35L)))
-    val last = rows(minuteNs(7))
-    val batch = graft.operators.SeriesOps.counterRate(
-        pts.map(p => ("h1", p._1 * 60000000L, math.round(p._2 * 100)))
-          .toDF("key", "t_us", "vc"),
-        Seq("key"), "t_us", "vc")
-      .collect().head
-    assert(last === ((batch.getLong(2), batch.getLong(3))))
-    assert(last === ((2L, 80L)))
-  }
-
-  test("streaming SCD2: closed intervals equal the batch operator's " +
-    "non-current rows across micro-batch boundaries, including a " +
-    "value change straddling the boundary; the open run never " +
-    "reaches the sink") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_s2_in").toString
-    val out = Files.createTempDirectory("graft_s2_out").toString
-    val ckpt = Files.createTempDirectory("graft_s2_ck").toString
-    // state a,a,b | b,c,c → closed runs a@[1,3) and b@[3,4); c open
-    val pts = Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "b"),
-      (5L, "c"), (6L, "c"))
-    def lp(m: Long, v: String) = s"m,host=h1,st=$v f=1 ${minuteNs(m)}"
-    writeBatch(in, "b0.lp", pts.take(3).map(p => lp(p._1, p._2)))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host", "st"),
-      Map("f" -> FieldSch("f", FieldType.Float)))
-    val sc = StreamIngest.scd2Stream(typed, "tag_host", "tag_st")
-    val q = StreamIngest.toParquet(sc, out, ckpt)
-    try {
-      q.processAllAvailable()
-      writeBatch(in, "b1.lp", pts.drop(3).map(p => lp(p._1, p._2)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(out).collect()
-      .map(r => (r.getAs[String]("value"),
-        r.getAs[Long]("valid_from_ns"), r.getAs[Long]("valid_to_ns")))
-      .toSet
-    assert(got === Set(
-      ("a", minuteNs(1), minuteNs(3)),
-      ("b", minuteNs(3), minuteNs(5))))
-    val batch = graft.operators.Incremental.scd2(
-        pts.map(p => ("h1", minuteNs(p._1), p._2)).toDF("k", "t", "v"),
-        "k", "t", "v")
-      .filter(!col("is_current"))
-      .collect()
-      .map(r => (r.getString(1), r.getLong(2), r.getLong(3))).toSet
-    assert(got === batch)
-  }
-
-  test("streaming heavy hitters: exact-mode snapshots carry true " +
-    "running counts across micro-batch boundaries and the merged " +
-    "bucket tops equal the batch aggregate") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_hh_in").toString
-    val out = Files.createTempDirectory("graft_hh_out").toString
-    val ckpt = Files.createTempDirectory("graft_hh_ck").toString
-    // a×5, b×3, c×2, d×1 split unevenly across two batches
-    val words = Seq.fill(5)("a") ++ Seq.fill(3)("b") ++
-      Seq.fill(2)("c") :+ "d"
-    def lp(w: String, i: Int) = s"m,host=h,w=$w v=1 ${minuteNs(i + 1L)}"
-    val lines = words.zipWithIndex.map((lp _).tupled)
-    writeBatch(in, "b0.lp", lines.take(4))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host", "w"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val hh = StreamIngest.heavyHittersStream(typed, "tag_w",
-      buckets = 4, capacity = 16, k = 8)
-    val q = StreamIngest.toParquet(hh, out, ckpt)
-    try {
-      q.processAllAvailable()
-      writeBatch(in, "b1.lp", lines.drop(4))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.read.parquet(out).collect()
-      .map(r => (r.getAs[Int]("bucket"), r.getAs[Long]("ver"),
-        r.getAs[String]("item"), r.getAs[Long]("cnt"),
-        r.getAs[Long]("err")))
-    // exact mode: every error is zero
-    assert(rows.forall(_._5 == 0L), rows.mkString(", "))
-    // merge each bucket's LATEST snapshot → true totals
-    val latest = rows.groupBy(_._1).toSeq.flatMap { case (_, rs) =>
-      val top = rs.map(_._2).max
-      rs.filter(_._2 == top).toSeq
-    }
-    val got = latest.map(r => r._3 -> r._4).toMap
-    assert(got === Map("a" -> 5L, "b" -> 3L, "c" -> 2L, "d" -> 1L))
-  }
-
-  test("streaming funnel: greedy advance over in-order input equals " +
-    "the batch min-time chaining across micro-batch boundaries; " +
-    "out-of-order stages never advance") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_fn_in").toString
-    val out = Files.createTempDirectory("graft_fn_out").toString
-    val ckpt = Files.createTempDirectory("graft_fn_ck").toString
-    // u1 converts a@1 → b@3 (the b@1-at-same-minute trap is below);
-    // u2 sees b before ever doing a — must reach nothing;
-    // u3 reaches a in batch 0, b only arrives in batch 1 (state carry)
-    val pts = Seq(
-      ("u1", 1L, "a"), ("u2", 1L, "b"), ("u3", 2L, "a"),
-      ("u1", 3L, "b"), ("u2", 4L, "c"), ("u3", 5L, "b"),
-      ("u3", 6L, "c"))
-    def lp(u: String, m: Long, t: String) =
-      s"m,host=$u,et=$t v=1 ${minuteNs(m)}"
-    writeBatch(in, "b0.lp", pts.take(3).map(p => lp(p._1, p._2, p._3)))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host", "et"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val fn = StreamIngest.funnelStream(typed, "tag_host", "tag_et",
-      "time_ns", Seq("a", "b", "c"))
-    val q = StreamIngest.toParquet(fn, out, ckpt)
-    try {
-      q.processAllAvailable()
-      writeBatch(in, "b1.lp", pts.drop(3).map(p => lp(p._1, p._2, p._3)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(out).collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[Long]("stage"),
-        r.getAs[String]("stage_name"), r.getAs[Long]("time_ns")))
-      .toSet
-    assert(got === Set(
-      ("u1", 1L, "a", minuteNs(1)), ("u1", 2L, "b", minuteNs(3)),
-      ("u3", 1L, "a", minuteNs(2)), ("u3", 2L, "b", minuteNs(5)),
-      ("u3", 3L, "c", minuteNs(6))))
-    // rollup equals the batch operator's stage counts
-    val batch = graft.operators.Behavior.funnel(
-        pts.zipWithIndex.map { case ((u, m, t), i) =>
-          (i.toLong, minuteNs(m), u, t) }
-          .toDF("event_id", "ts", "user_id", "event_type"),
-        "user_id", "ts", "event_type", Seq("a", "b", "c"))
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val streamCounts2 = got.toSeq.groupBy(_._2)
-      .map { case (k, v) => k -> v.size.toLong }
-    assert(streamCounts2 === batch.filter(_._2 > 0))
-  }
-
-  test("streaming quantile sketch: the latest snapshot equals the " +
-    "batch ddQuantiles bit-for-bit across micro-batch boundaries " +
-    "(additive bucket counts — no merge-order sensitivity)") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_qs_in").toString
-    val out = Files.createTempDirectory("graft_qs_out").toString
-    val ckpt = Files.createTempDirectory("graft_qs_ck").toString
-    val rnd = new scala.util.Random(13)
-    val pts = (1 to 200).map(i =>
-      (if (i % 2 == 0) "h1" else "h2", i.toLong,
-        (rnd.nextInt(5000) + 1) / 100.0))
-    def lp(p: (String, Long, Double)) =
-      s"m,host=${p._1} v=${p._3} ${minuteNs(p._2)}"
-    writeBatch(in, "b0.lp", pts.take(120).map(lp))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val qs = Seq((50L, 100L), (90L, 100L), (99L, 100L))
-    val names = Seq("p50_r", "p90_r", "p99_r")
-    val sk = StreamIngest.quantileSketchStream(typed, "tag_host", "v",
-      alphaBp = 200, maxBuckets = 1000, qs = qs, names = names)
-    val q = StreamIngest.toParquet(sk, out, ckpt)
-    try {
-      q.processAllAvailable()
-      writeBatch(in, "b1.lp", pts.drop(120).map(lp))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.read.parquet(out).collect()
-    val latest = rows.groupBy(_.getAs[String]("key")).map {
-      case (k, rs) =>
-        val top = rs.maxBy(_.getAs[Long]("ver"))
-        k -> ((top.getAs[Long]("n"), top.getAs[Boolean]("collapsed"),
-          names.map(top.getAs[Double](_))))
-    }
-    val batch = graft.operators.QuantileSketch.ddQuantiles(
-        pts.map(p => (p._1, math.round(p._3 * 100)))
-          .toDF("key", "vc"),
-        Seq("key"), "vc", alphaBp = 200, qs = qs, names = names)
-      .collect()
-      .map(r => r.getString(0) ->
-        ((r.getLong(1), names.map(r.getAs[Double](_))))).toMap
-    assert(latest.keySet === batch.keySet)
-    latest.foreach { case (k, (n, collapsed, ests)) =>
-      assert(!collapsed, s"$k collapsed in exact mode")
-      assert(n === batch(k)._1, s"$k n")
-      assert(ests === batch(k)._2, s"$k estimates")
-    }
-  }
-
-  test("sessionized streaming quantiles: per-session DDSketch " +
-    "percentiles match the batch operator across BOTH micro-batch " +
-    "and session-gap boundaries") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_sq_in").toString
-    val out = Files.createTempDirectory("graft_sq_out").toString
-    val ckpt = Files.createTempDirectory("graft_sq_ck").toString
-    // gap 5m: h1 session A = minutes 10, 11 (batch 0) + 12 (batch 1 —
-    // the session SPANS the micro-batch boundary); h1 session B =
-    // minute 30 (18m of silence > gap); h2 session C spans batches
-    // too (minutes 10, 13)
-    writeBatch(in, "b0.lp", Seq(
-      s"m,host=h1 v=1.0 ${minuteNs(10)}",
-      s"m,host=h1 v=5.0 ${minuteNs(11)}",
-      s"m,host=h2 v=2.5 ${minuteNs(10)}"))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val qs = Seq((50L, 100L), (95L, 100L))
-    val names = Seq("p50_r", "p95_r")
-    val sk = StreamIngest.sessionQuantileStream(typed, Seq("tag_host"),
-      "v", gapDuration = "5 minutes", watermarkDelay = "2 minutes",
-      alphaBp = 200, maxBuckets = 1000, qs = qs, names = names)
-    val q = StreamIngest.toParquet(sk, out, ckpt)
-    try {
-      q.processAllAvailable()
-      assert(spark.read.parquet(out).isEmpty) // all sessions open
-      writeBatch(in, "b1.lp", Seq(
-        s"m,host=h1 v=9.0 ${minuteNs(12)}",
-        s"m,host=h2 v=7.5 ${minuteNs(13)}",
-        s"m,host=h1 v=42.0 ${minuteNs(30)}"))
-      q.processAllAvailable()
-      // advance the watermark far past every session, twice (it only
-      // moves at batch end)
-      writeBatch(in, "b2.lp", Seq(s"m,host=h9 v=1.0 ${minuteNs(60)}"))
-      q.processAllAvailable()
-      writeBatch(in, "b3.lp", Seq(s"m,host=h9 v=1.0 ${minuteNs(61)}"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(out)
-      .filter(col("tag_host").isin("h1", "h2")).collect()
-      .map(r => (r.getAs[String]("tag_host"),
-        r.getAs[java.sql.Timestamp]("session_start").getTime) ->
-        ((r.getAs[Long]("n"), r.getAs[Boolean]("collapsed"),
-          names.map(r.getAs[Double](_)))))
-      .toMap
-    // three closed sessions, none collapsed (exact mode)
-    assert(got.size === 3)
-    assert(got.values.forall(!_._2))
-    // batch differential: the SAME cents through the batch ddQuantiles
-    // face, sessions labelled by construction — estimates must match
-    // bit-for-bit (shared bucketing, rank rule, estimate formula and
-    // rounding)
-    val batch = graft.operators.QuantileSketch.ddQuantiles(
-        Seq(("h1", "A", 100L), ("h1", "A", 500L), ("h1", "A", 900L),
-          ("h1", "B", 4200L), ("h2", "C", 250L), ("h2", "C", 750L))
-          .toDF("host", "sess", "vc"),
-        Seq("host", "sess"), "vc", alphaBp = 200, qs = qs,
-        names = names)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        ((r.getAs[Long]("n"), names.map(r.getAs[Double](_))))).toMap
-    val sessionStartMin = Map(("h1", "A") -> 10L, ("h1", "B") -> 30L,
-      ("h2", "C") -> 10L)
-    batch.foreach { case (k, (n, ests)) =>
-      val stream = got((k._1, sessionStartMin(k) * 60000L))
-      assert(stream._1 === n, s"$k n")
-      assert(stream._3 === ests, s"$k estimates")
-    }
-  }
-
-  test("DdSketchAggregator collapse keeps the upper-quantile " +
-    "guarantee: a maxBuckets-bounded sketch reports the SAME p95 as " +
-    "the unbounded one (collapse only fuses the lowest buckets)") {
-    val qs = Seq((50L, 100L), (95L, 100L))
-    def fold(maxBuckets: Int) = {
-      val a = new graft.operators.QuantileSketch.DdSketchAggregator(
-        200, maxBuckets, qs)
-      // cents 1..400 in a shuffled but fixed order — dozens of
-      // distinct buckets at α=2%
-      val vals = new scala.util.Random(7).shuffle((1L to 400L).toList)
-      a.finish(vals.foldLeft(a.zero)(a.reduce))
-    }
-    val exact = fold(1000)
-    val bounded = fold(5)
-    assert(!exact.collapsed && bounded.collapsed)
-    assert(exact.n === bounded.n) // collapse never loses mass
-    assert(bounded.ests(1) === exact.ests(1), "p95 must survive collapse")
-  }
-
-  test("streaming lateness audit: points below a PRIOR batch's " +
-    "high-water mark count late with exact worst skew; in-batch " +
-    "disorder does not (the watermark's own visibility)") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_lt_in").toString
-    val out = Files.createTempDirectory("graft_lt_out").toString
-    val ckpt = Files.createTempDirectory("graft_lt_ck").toString
-    def lp(m: Long) = s"m,host=h1 v=1.0 ${minuteNs(m)}"
-    // batch 0: minutes 5, 9, 2 (disorder INSIDE one batch: not late)
-    writeBatch(in, "b0.lp", Seq(lp(5), lp(9), lp(2)))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val lt = StreamIngest.latenessStream(typed, "tag_host")
-    val q = StreamIngest.toParquet(lt, out, ckpt)
-    try {
-      q.processAllAvailable()
-      // batch 1: minute 4 and 7 are BELOW the batch-0 mark (9): late
-      // with skews 5 and 2 minutes; 12 advances the mark
-      writeBatch(in, "b1.lp", Seq(lp(4), lp(12), lp(7)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.read.parquet(out).collect()
-      .map(r => r.getAs[Long]("ver") ->
-        ((r.getAs[Long]("hwm_ns"), r.getAs[Long]("n"),
-          r.getAs[Long]("n_late"), r.getAs[Long]("late_bp"),
-          r.getAs[Long]("max_skew_ns")))).toMap
-    assert(rows(1L) === ((minuteNs(9), 3L, 0L, 0L, 0L)))
-    assert(rows(2L) === ((minuteNs(12), 6L, 2L, 3333L,
-      minuteNs(9) - minuteNs(4))))
-  }
-
-  test("streaming drift monitor: the latest snapshot's KS distance " +
-    "vs the reference equals the batch ksTest over identically " +
-    "bucketed cohorts, across micro-batch boundaries; a planted " +
-    "shift screams while an in-distribution feed stays quiet") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_dr_in").toString
-    val out = Files.createTempDirectory("graft_dr_out").toString
-    val ckpt = Files.createTempDirectory("graft_dr_ck").toString
-    val alphaBp = 200
-    val lnG = math.log(graft.operators.QuantileSketch.gamma(alphaBp))
-    val rnd = new scala.util.Random(17)
-    // reference: uniform cents 100..5000
-    val refVals = (1 to 500).map(_ => (rnd.nextInt(4900) + 100).toLong)
-    val reference = refVals
-      .map(graft.operators.QuantileSketch.bucketOf(_, lnG))
-      .groupBy(identity).map { case (b, xs) => b -> xs.size.toLong }
-    // h1 streams in-distribution; h2 streams a 10x upshift
-    val cur = (1 to 120).map { i =>
-      val inDist = (rnd.nextInt(4900) + 100).toLong
-      (i.toLong, "h1", inDist / 100.0)
-    } ++ (1 to 120).map { i =>
-      val shifted = (rnd.nextInt(4900) + 100).toLong * 10
-      ((i + 200).toLong, "h2", shifted / 100.0)
-    }
-    def lp(p: (Long, String, Double)) =
-      s"m,host=${p._2} v=${p._3} ${minuteNs(p._1)}"
-    val shuffled = rnd.shuffle(cur)
-    writeBatch(in, "b0.lp", shuffled.take(140).map(lp))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val dr = StreamIngest.driftStream(typed, "tag_host", "v",
-      alphaBp, reference)
-    val q = StreamIngest.toParquet(dr, out, ckpt)
-    try {
-      q.processAllAvailable()
-      writeBatch(in, "b1.lp", shuffled.drop(140).map(lp))
-      q.processAllAvailable()
-    } finally q.stop()
-    val latest = spark.read.parquet(out).collect()
-      .groupBy(_.getAs[String]("key")).map { case (k, rs) =>
-        val top = rs.maxBy(_.getAs[Long]("ver"))
-        k -> ((top.getAs[Long]("n"), top.getAs[Long]("d_num"),
-          top.getAs[Double]("d_r")))
-      }
-    // batch differential: ksTest over the SAME bucket domain
-    for (h <- Seq("h1", "h2")) {
-      val curB = cur.filter(_._2 == h).map(p =>
-        ("cur", graft.operators.QuantileSketch.bucketOf(
-          math.round(p._3 * 100), lnG)))
-      val refB = refVals.map(v =>
-        ("ref", graft.operators.QuantileSketch.bucketOf(v, lnG)))
-      val batch = graft.operators.Profiling.ksTest(
-          (curB ++ refB).toDF("g", "b"), "g", "b", "cur", "ref")
-        .collect().head
-      assert(latest(h)._1 === batch.getLong(0), s"$h n")
-      assert(latest(h)._2 === batch.getLong(2), s"$h d_num")
-      assert(latest(h)._3 === batch.getDouble(3), s"$h d_r")
-    }
-    // polarity: the shifted feed screams, the in-dist one does not
-    assert(latest("h2")._3 > 0.9, latest("h2").toString)
-    assert(latest("h1")._3 < 0.2, latest("h1").toString)
-  }
-
-  test("streaming quantile sketch: per-key state SURVIVES a query " +
-    "restart from the checkpoint — the resumed snapshot still " +
-    "equals the batch operator over all points") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_qr_in").toString
-    val out = Files.createTempDirectory("graft_qr_out").toString
-    val ckpt = Files.createTempDirectory("graft_qr_ck").toString
-    val rnd = new scala.util.Random(23)
-    val pts = (1 to 160).map(i =>
-      (i.toLong, (rnd.nextInt(4000) + 1) / 100.0))
-    def lp(p: (Long, Double)) = s"m,host=h1 v=${p._2} ${minuteNs(p._1)}"
-    writeBatch(in, "b0.lp", pts.take(90).map(lp))
-    val qs = Seq((1L, 2L), (9L, 10L))
-    val names = Seq("p50_r", "p90_r")
-    def startQuery() = {
-      val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-        Map("v" -> FieldSch("v", FieldType.Float)))
-      val sk = StreamIngest.quantileSketchStream(typed, "tag_host",
-        "v", alphaBp = 200, maxBuckets = 1000, qs = qs, names = names)
-      StreamIngest.toParquet(sk, out, ckpt)
-    }
-    val q1 = startQuery()
-    try q1.processAllAvailable() finally q1.stop()
-    // RESTART: a brand-new query on the same checkpoint must resume
-    // the per-key bucket state, not start from zero
-    writeBatch(in, "b1.lp", pts.drop(90).map(lp))
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
-    val top = spark.read.parquet(out).collect()
-      .maxBy(_.getAs[Long]("ver"))
-    val batch = graft.operators.QuantileSketch.ddQuantiles(
-        pts.map(p => ("h1", math.round(p._2 * 100))).toDF("k", "vc"),
-        Seq("k"), "vc", alphaBp = 200, qs = qs, names = names)
-      .collect().head
-    assert(top.getAs[Long]("n") === batch.getLong(1), "state lost")
-    assert(names.map(top.getAs[Double](_)) ===
-      names.map(batch.getAs[Double](_)))
-  }
-
-  test("streaming quantile sketch: past maxBuckets the LOWEST " +
-    "buckets collapse — the snapshot flags it and upper quantiles " +
-    "keep their relative-error guarantee") {
-    val s = spark
-    import s.implicits._
-    val in = Files.createTempDirectory("graft_qc_in").toString
-    val out = Files.createTempDirectory("graft_qc_out").toString
-    val ckpt = Files.createTempDirectory("graft_qc_ck").toString
-    // values 1..400 cents: far more than 8 distinct buckets
-    val pts = (1 to 400).map(i => (i.toLong, i / 100.0))
-    def lp(p: (Long, Double)) = s"m,host=h1 v=${p._2} ${minuteNs(p._1)}"
-    writeBatch(in, "b0.lp", pts.map(lp))
-    val typed = StreamIngest.typedStream(spark, in, Seq("host"),
-      Map("v" -> FieldSch("v", FieldType.Float)))
-    val sk = StreamIngest.quantileSketchStream(typed, "tag_host", "v",
-      alphaBp = 200, maxBuckets = 8,
-      qs = Seq((99L, 100L)), names = Seq("p99_r"))
-    val q = StreamIngest.toParquet(sk, out, ckpt)
-    try q.processAllAvailable() finally q.stop()
-    val r = spark.read.parquet(out).collect()
-      .maxBy(_.getAs[Long]("ver"))
-    assert(r.getAs[Boolean]("collapsed"))
-    assert(r.getAs[Long]("n") === 400L)
-    val p99 = r.getAs[Double]("p99_r")
-    assert(math.abs(p99 - 396.0) / 396.0 <= 0.02 + 1e-6, s"p99=$p99")
-  }
-
-  test("growing-index dedup stream: micro-batches mark against and " +
-    "extend the ON-DISK banded index (state is the shared persistent " +
-    "index, not executor memory); batch-mode ingest of the same " +
-    "increments produces identical marks, and duplicates never enter " +
-    "the index") {
+  test("growing-index dedup: lshIngestBatch micro-batches mark " +
+    "against and extend the ON-DISK banded index (state is the shared " +
+    "persistent index, not executor memory); batch-mode ingest of the " +
+    "same increments produces identical marks, and duplicates never " +
+    "enter the index") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_lsh_in").toString
     val idx = Files.createTempDirectory("graft_lsh_idx").toString
     val marks = Files.createTempDirectory("graft_lsh_mk").toString
-    val ckpt = Files.createTempDirectory("graft_lsh_ck").toString
-    def doc(id: Long, text: String) =
-      s"""{"id": $id, "text": "$text"}"""
+    def ingest(batchId: Long, rows: (Long, String)*): Unit =
+      StreamIngest.lshIngestBatch(rows.toDF("id", "text"), "id", "text",
+        idx, marks, batchId, 8, 4, 3, 4)
     // batch 0: two novel docs
-    Files.write(Paths.get(in, "b0.json"), Seq(
-      doc(1, "alpha beta gamma delta epsilon"),
-      doc(2, "one two three four five")).mkString("\n")
-      .getBytes(StandardCharsets.UTF_8)): Unit
-    val src = spark.readStream
-      .schema("id LONG, text STRING").json(in)
-    val q = StreamIngest.lshIndexIngestStream(src, "id", "text",
-      idx, marks, ckpt)
-    try {
-      q.processAllAvailable()
-      // batch 1: a dup of doc 1, a novel doc, and a within-batch
-      // duplicate pair (12, 13)
-      Files.write(Paths.get(in, "b1.json"), Seq(
-        doc(10, "alpha beta gamma delta epsilon"),
-        doc(11, "completely different words here now"),
-        doc(12, "brand new template words appear"),
-        doc(13, "brand new template words appear")).mkString("\n")
-        .getBytes(StandardCharsets.UTF_8)): Unit
-      q.processAllAvailable()
-    } finally q.stop()
+    ingest(0L, 1L -> "alpha beta gamma delta epsilon",
+      2L -> "one two three four five")
+    // batch 1: a dup of doc 1, a novel doc, and a within-batch
+    // duplicate pair (12, 13)
+    ingest(1L, 10L -> "alpha beta gamma delta epsilon",
+      11L -> "completely different words here now",
+      12L -> "brand new template words appear",
+      13L -> "brand new template words appear")
     val m = spark.read.parquet(marks).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Boolean]("is_dup")).toMap
     assert(m === Map(1L -> false, 2L -> false, 10L -> true,
@@ -997,32 +150,21 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(bm === m.filter(_._1 >= 10L), s"$bm vs $m")
   }
 
-  test("IVF index stream: micro-batches assign against the persisted " +
-    "codebook and grow the on-disk index; the index-served nProbe=1 " +
-    "top-k equals the batch ivfTopKFixed over the same corpus " +
-    "(stored assignments are never recomputed)") {
+  test("IVF index ingest: ivfIngestBatch micro-batches assign against " +
+    "the persisted codebook and grow the on-disk index; the " +
+    "index-served nProbe=1 top-k equals the batch ivfTopKFixed over " +
+    "the same corpus (stored assignments are never recomputed)") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_ivf_in").toString
     val idx = Files.createTempDirectory("graft_ivf_idx").toString
-    val ckpt = Files.createTempDirectory("graft_ivf_ck").toString
     val anchors = Seq(0 -> Array(1.0, 0.0), 1 -> Array(0.0, 1.0))
     StreamIngest.ivfIndexInit(spark, idx, anchors)
     assert(StreamIngest.readIvfCentroids(spark, idx) != null)
-    def doc(id: Long, x: Double, y: Double) =
-      s"""{"id": $id, "vec": [$x, $y]}"""
-    Files.write(Paths.get(in, "b0.json"), Seq(
-      doc(1, 0.9, 0.1), doc(2, 0.1, 0.9)).mkString("\n")
-      .getBytes(StandardCharsets.UTF_8)): Unit
-    val src = spark.readStream
-      .schema("id LONG, vec ARRAY<DOUBLE>").json(in)
-    val q = StreamIngest.ivfIngestStream(src, "id", "vec", idx, ckpt)
-    try {
-      q.processAllAvailable()
-      Files.write(Paths.get(in, "b1.json"), Seq(
-        doc(3, 0.8, 0.2), doc(4, 0.2, 0.8), doc(5, 0.7, 0.7))
-        .mkString("\n").getBytes(StandardCharsets.UTF_8)): Unit
-      q.processAllAvailable()
-    } finally q.stop()
+    def ingest(batchId: Long, rows: (Long, Seq[Double])*): Unit =
+      StreamIngest.ivfIngestBatch(rows.toDF("id", "vec"), "id", "vec",
+        idx, batchId)
+    ingest(0L, 1L -> Seq(0.9, 0.1), 2L -> Seq(0.1, 0.9))
+    ingest(1L, 3L -> Seq(0.8, 0.2), 4L -> Seq(0.2, 0.8),
+      5L -> Seq(0.7, 0.7))
     val index = StreamIngest.readIvfIndex(spark, idx)
     assert(index.count() == 5L)
     // stored assignments match the operator's rule
@@ -1183,40 +325,27 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(ids === Set(2L, 21L), ids.toString)
   }
 
-  test("streaming SemDeDup over the persistent IVF index (r16): " +
-    "micro-batches take within-list verdicts against the GROWN index " +
-    "(no re-clustering), non-dups extend the same index top-k " +
-    "serves, and batch-mode ingest of the same increments produces " +
-    "identical marks — incl. the within-batch earlier-sibling rule " +
-    "and same-batchId replay idempotence") {
+  test("SemDeDup over the persistent IVF index (r16): " +
+    "semanticIngestBatch micro-batches take within-list verdicts " +
+    "against the GROWN index (no re-clustering), non-dups extend the " +
+    "same index top-k serves, and batch-mode ingest of the same " +
+    "increments produces identical marks — incl. the within-batch " +
+    "earlier-sibling rule and same-batchId replay idempotence") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_sem_in").toString
     val idx = Files.createTempDirectory("graft_sem_idx").toString
     val marks = Files.createTempDirectory("graft_sem_mk").toString
-    val ckpt = Files.createTempDirectory("graft_sem_ck").toString
     val anchors = Seq(0 -> Array(1.0, 0.0), 1 -> Array(0.0, 1.0))
     StreamIngest.ivfIndexInit(spark, idx, anchors)
-    def doc(id: Long, x: Double, y: Double) =
-      s"""{"id": $id, "vec": [$x, $y]}"""
+    def ingest(batchId: Long, rows: (Long, Seq[Double])*): Unit =
+      StreamIngest.semanticIngestBatch(rows.toDF("id", "vec"), "id",
+        "vec", idx, marks, batchId, threshold = 0.95)
     // batch 0: two canonicals, one per list
-    Files.write(Paths.get(in, "b0.json"), Seq(
-      doc(1, 1.0, 0.05), doc(2, 0.05, 1.0)).mkString("\n")
-      .getBytes(StandardCharsets.UTF_8)): Unit
-    val src = spark.readStream
-      .schema("id LONG, vec ARRAY<DOUBLE>").json(in)
-    val q = StreamIngest.semanticDedupStream(src, "id", "vec", idx,
-      marks, ckpt, threshold = 0.95)
-    try {
-      q.processAllAvailable()
-      // batch 1: a near-copy of 1 (dup), a diagonal newcomer in
-      // list 0 (novel), and 12/13: 12 is a within-batch near-dup of
-      // 11 (cos ~ 0.965) AND 13 of 12 -- the earlier-sibling chain
-      Files.write(Paths.get(in, "b1.json"), Seq(
-        doc(10, 0.99, 0.08), doc(11, 0.75, 0.66),
-        doc(12, 0.9, 0.44), doc(13, 0.89, 0.45)).mkString("\n")
-        .getBytes(StandardCharsets.UTF_8)): Unit
-      q.processAllAvailable()
-    } finally q.stop()
+    ingest(0L, 1L -> Seq(1.0, 0.05), 2L -> Seq(0.05, 1.0))
+    // batch 1: a near-copy of 1 (dup), a diagonal newcomer in
+    // list 0 (novel), and 12/13: 12 is a within-batch near-dup of
+    // 11 (cos ~ 0.965) AND 13 of 12 -- the earlier-sibling chain
+    ingest(1L, 10L -> Seq(0.99, 0.08), 11L -> Seq(0.75, 0.66),
+      12L -> Seq(0.9, 0.44), 13L -> Seq(0.89, 0.45))
     val m = spark.read.parquet(marks).collect()
       .map(r => r.getAs[Long]("vec_id") ->
         r.getAs[Boolean]("is_dup")).toMap
@@ -1254,30 +383,19 @@ class StreamIngestSpec extends AnyFunSuite {
       === Set(1L, 2L, 11L))
   }
 
-  test("compaction cadence (r16): a LIVE ingest stream grows hot " +
-    "batch dirs; the tick-side policy folds past the threshold " +
+  test("compaction cadence (r16): lshIngestBatch micro-batches grow " +
+    "hot batch dirs; the tick-side policy folds past the threshold " +
     "(below it: no-op), and served dedup decisions are identical " +
     "before and after the fold") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_cad_in").toString
     val idx = Files.createTempDirectory("graft_cad_idx").toString
     val marks = Files.createTempDirectory("graft_cad_mk").toString
-    val ckpt = Files.createTempDirectory("graft_cad_ck").toString
-    def doc(id: Long, text: String) =
-      s"""{"id": $id, "text": "$text"}"""
-    val src = spark.readStream
-      .schema("id LONG, text STRING").json(in)
-    val q = StreamIngest.lshIndexIngestStream(src, "id", "text",
-      idx, marks, ckpt)
-    try {
-      for (b <- 0 until 3) {
-        Files.write(Paths.get(in, s"b$b.json"), Seq(
-          doc(10L * b + 1, s"unique batch $b words alpha$b beta$b"),
-          doc(10L * b + 2, s"other batch $b words gamma$b delta$b"))
-          .mkString("\n").getBytes(StandardCharsets.UTF_8)): Unit
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    for (b <- 0 until 3)
+      StreamIngest.lshIngestBatch(Seq(
+        (10L * b + 1, s"unique batch $b words alpha$b beta$b"),
+        (10L * b + 2, s"other batch $b words gamma$b delta$b"))
+        .toDF("id", "text"), "id", "text", idx, marks, b.toLong,
+        8, 4, 3, 4)
     def hotDirs = Option(new java.io.File(s"$idx/bands").listFiles())
       .map(_.count(_.getName.startsWith("batch="))).getOrElse(0)
     assert(hotDirs == 3)
@@ -1293,7 +411,7 @@ class StreamIngestSpec extends AnyFunSuite {
     }
     val before = decide()
     assert(before === Map(100L -> true))
-    // below threshold: no-op (the stream is quiesced — the contract)
+    // below threshold: no-op (ingest is quiesced — the contract)
     assert(!StreamIngest.maybeCompactLshIndex(spark, idx,
       maxHotBatches = 3))
     assert(hotDirs == 3)
