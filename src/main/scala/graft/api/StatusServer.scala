@@ -2,8 +2,10 @@ package graft.api
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ArrayBlockingQueue, RejectedExecutionException,
+  ThreadPoolExecutor, TimeUnit}
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
 import graft.model.ClusterStatus
 
@@ -22,6 +24,19 @@ import graft.model.ClusterStatus
   *                            (webserver.go:173-174,190-208)
   * JDK built-in httpserver: zero new dependencies, driver-side only
   * (SURVEY.md §2.11).
+  *
+  * Two lanes. The control lane is the JDK dispatcher thread itself: /ping,
+  * /api/health, /api/queryactive, /api/action, /login, /logout and the
+  * static `/` run inline on it and never wait behind a data request, so a
+  * peer monitor's probe reads the server's liveness, not its backlog. The
+  * data lane is one daemon thread ([[StatusServer.DataLaneThread]]) that
+  * runs /query, /write and /api/indexstats one at a time in arrival order
+  * (FIFO), so the ql catalog, the write service and its manifest locks see
+  * the same serial access the single dispatcher gave them. Data requests
+  * wait in a queue of [[StatusServer.DataQueueCapacity]]; when it is full
+  * the dispatcher answers at once with 503, `Retry-After: 1` and a JSON
+  * error. A data handler that throws answers 500 if its headers are not
+  * yet sent; the exchange is always closed.
   */
 final class StatusServer(
     port: Int,
@@ -84,6 +99,19 @@ final class StatusServer(
     indexStatsJson: Option[() => String] = None) {
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  // the data lane: one thread (created on the first data request) over a
+  // bounded FIFO queue; a full queue rejects, and the dispatcher sheds
+  // the request with 503
+  @volatile private var laneThread: Thread = null
+  private val dataLane = new ThreadPoolExecutor(1, 1, 0L,
+    TimeUnit.MILLISECONDS,
+    new ArrayBlockingQueue[Runnable](StatusServer.DataQueueCapacity),
+    (r: Runnable) => {
+      val t = new Thread(r, StatusServer.DataLaneThread)
+      t.setDaemon(true) // never keeps the JVM alive past the dispatcher
+      laneThread = t
+      t
+    })
   // token → expiry epoch-ms; pruned on every login/validation so a
   // long-running daemon neither leaks memory nor honors stale tokens
   private val sessions =
@@ -370,6 +398,9 @@ final class StatusServer(
     out.toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
+  private def errorJson(e: Throwable): String = s"""{"error":${jstr(
+    Option(e.getMessage).getOrElse(e.getClass.getName))}}"""
+
   private def parseParams(s: String): Map[String, String] =
     s.split('&').toSeq.flatMap(_.split("=", 2) match {
       case Array(k, v) =>
@@ -420,10 +451,15 @@ final class StatusServer(
   private def handleQuery(ex: HttpExchange, exec: (String,
       Option[String]) => org.apache.spark.sql.DataFrame): Unit = {
     // params from the query string (GET, client.go:60) or a form body
-    // (POST); body wins per-key only when the URI lacks it
+    // (POST); body wins per-key only when the URI lacks it. A malformed
+    // percent-escape is the client's error: 400, not a dropped connection
     val params =
-      parseParams(Option(bodyOf(ex)).getOrElse("")) ++
+      try parseParams(Option(bodyOf(ex)).getOrElse("")) ++
         parseParams(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
+      catch {
+        case e: IllegalArgumentException =>
+          respond(ex, 400, errorJson(e)); return
+      }
     if (!dataAuthOk(ex, params)) {
       respond(ex, 401, """{"error":"authorization failed"}"""); return
     }
@@ -492,12 +528,32 @@ final class StatusServer(
             // if the chunked stream already committed its 200 the
             // respond below throws — the client sees the truncated
             // stream (no terminating non-partial frame) instead
-            try respond(ex, 400, s"""{"error":${jstr(
-              Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
+            try respond(ex, 400, errorJson(e))
             catch { case _: java.io.IOException => ex.close() }
         }
     }
   }
+
+  /** A data-lane handler: the dispatcher only enqueues the exchange (or
+    * sheds it with 503 when the queue is full) and returns to the control
+    * lane. On the lane, anything the handler throws answers 500 while the
+    * headers are unsent, and the exchange is always closed: nothing else
+    * closes it off the dispatcher, and its client would hang. */
+  private def onDataLane(handle: HttpExchange => Unit): HttpHandler =
+    (ex: HttpExchange) =>
+      try dataLane.execute(() =>
+        try handle(ex)
+        catch {
+          case t: Throwable if ex.getResponseCode < 0 =>
+            try respond(ex, 500, errorJson(t))
+            catch { case _: java.io.IOException => () }
+          case _: Throwable => ()
+        } finally ex.close())
+      catch {
+        case _: RejectedExecutionException =>
+          ex.getResponseHeaders.set("Retry-After", "1")
+          respond(ex, 503, """{"error":"data queue full, retry later"}""")
+      }
 
   def start(): Unit = {
     // once at startup, NOT per request — inside the login handler an
@@ -515,8 +571,9 @@ final class StatusServer(
     server.createContext("/api/queryactive",
       (ex: HttpExchange) => respond(ex, 200, queryActiveJson(serverNames())))
     indexStatsJson.foreach(stats =>
-      server.createContext("/api/indexstats", (ex: HttpExchange) =>
-        respond(ex, 200, stats())))
+      // a Spark collect: data lane
+      server.createContext("/api/indexstats", onDataLane(ex =>
+        respond(ex, 200, stats()))))
     server.createContext("/api/action", (ex: HttpExchange) =>
       // session-gated action stub (api.go:54-61)
       if (signedIn(ex)) respond(ex, 200, jstr("hola"))
@@ -537,33 +594,32 @@ final class StatusServer(
       .orElse(queryExec.map(f =>
         (t: String, _: Option[String]) => f(t)))
       .foreach(exec =>
-        server.createContext("/query",
-          (ex: HttpExchange) => handleQuery(ex, exec)))
+        server.createContext("/query", onDataLane(handleQuery(_, exec))))
     writeExec.foreach(wr =>
-      server.createContext("/write", (ex: HttpExchange) => {
-        // /write params live in the URI ONLY — the POST body is the
-        // line-protocol batch, never a form
-        val params = parseParams(
-          Option(ex.getRequestURI.getRawQuery).getOrElse(""))
-        if (!dataAuthOk(ex, params))
-          respond(ex, 401, """{"error":"authorization failed"}""")
-        else try {
-          // ?precision=[n|ns|u|ms|s|m|h]: the unit of the lines'
-          // timestamps (InfluxDB /write API; default ns). "n" is the
-          // API's own spelling, "ns" the client libraries' — accept
-          // both.
-          val mul = params.get("precision").map { p =>
-            EpochDiv.getOrElse(if (p == "n") "ns" else p,
-              throw new IllegalArgumentException(
-                s"bad precision '$p' (n|ns|u|ms|s|m|h)"))
-          }.getOrElse(1L)
-          wr(bodyOf(ex), params.get("db"), mul): Unit
-          ex.sendResponseHeaders(204, -1) // InfluxDB: 204 No Content
-          ex.close()
+      server.createContext("/write", onDataLane { ex =>
+        try {
+          // /write params live in the URI ONLY — the POST body is the
+          // line-protocol batch, never a form
+          val params = parseParams(
+            Option(ex.getRequestURI.getRawQuery).getOrElse(""))
+          if (!dataAuthOk(ex, params))
+            respond(ex, 401, """{"error":"authorization failed"}""")
+          else {
+            // ?precision=[n|ns|u|ms|s|m|h]: the unit of the lines'
+            // timestamps (InfluxDB /write API; default ns). "n" is the
+            // API's own spelling, "ns" the client libraries' — accept
+            // both.
+            val mul = params.get("precision").map { p =>
+              EpochDiv.getOrElse(if (p == "n") "ns" else p,
+                throw new IllegalArgumentException(
+                  s"bad precision '$p' (n|ns|u|ms|s|m|h)"))
+            }.getOrElse(1L)
+            wr(bodyOf(ex), params.get("db"), mul): Unit
+            ex.sendResponseHeaders(204, -1) // InfluxDB: 204 No Content
+            ex.close()
+          }
         } catch {
-          case e: Exception =>
-            respond(ex, 400, s"""{"error":${jstr(
-              Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
+          case e: Exception => respond(ex, 400, errorJson(e))
         }
       }))
     // static UI at the root (webserver.go:81-87 serves the built HTML
@@ -599,11 +655,38 @@ final class StatusServer(
           os.write(bytes); os.close()
         }
       })
+    // null executor: every handler runs inline on the dispatcher (the
+    // control lane); data handlers only enqueue there
     server.setExecutor(null)
     server.start()
   }
 
-  def stop(): Unit = server.stop(0)
+  /** No new exchanges and every connection closed; the data request in
+    * flight runs to its end, uninterrupted, and the lane thread has
+    * exited before this returns. Data
+    * requests still queued are dropped unanswered (their connections are
+    * closed), so a queued /write is never applied after its client has
+    * seen the connection fail. */
+  def stop(): Unit = {
+    server.stop(0)
+    dataLane.shutdown()
+    dataLane.getQueue.clear()
+    while (!dataLane.awaitTermination(1, TimeUnit.SECONDS)) ()
+    // the pool reads terminated a moment before its thread ends
+    Option(laneThread).foreach(_.join())
+  }
 
   def boundPort: Int = server.getAddress.getPort
+
+  /** Data requests waiting behind the one in flight. */
+  private[graft] def dataQueued: Int = dataLane.getQueue.size
+}
+
+object StatusServer {
+  /** Data requests that may wait behind the one in flight before the
+    * server sheds with 503. Far above the handful of connections a
+    * Telegraf agent, a dashboard and the peer monitors hold together. */
+  final val DataQueueCapacity = 32
+  /** Name of the data lane's one daemon thread. */
+  final val DataLaneThread = "graft-data-lane"
 }

@@ -1817,7 +1817,17 @@ object StreamIngest {
     * query result, only the just-written codebook bytes the process
     * itself published, with staleness structurally impossible. */
   private val smallParquetCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Any)]()
+    new java.util.concurrent.ConcurrentHashMap[String, SmallParquetEntry]()
+
+  /** One memo slot per path, and that path's load lock: concurrent faces
+    * (inParallelFaces) resolving the SAME codebook would otherwise both
+    * miss and both pay the two-job read — one waits, then hits the
+    * filled slot; different paths stay fully parallel. The lock lives
+    * and dies with its cache entry. */
+  private final class SmallParquetEntry {
+    var sig: String = null
+    var value: Any = null
+  }
 
   private def smallParquetSig(spark: SparkSession,
       path: String): String = {
@@ -1828,26 +1838,22 @@ object StreamIngest {
       .sorted.mkString(",")
   }
 
-  // per-path load lock: concurrent faces (inParallelFaces) resolving
-  // the SAME codebook would otherwise both miss and both pay the
-  // two-job read — one waits, then hits the filled memo; different
-  // paths stay fully parallel
-  private val smallParquetLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
+  // the listing is taken outside the lock, so hits on one path overlap
+  // their FS round-trips; a value is loaded after the listing it is
+  // keyed on, so it is never older than the files that listing names
   private def cachedSmallParquet[T](spark: SparkSession,
-      path: String)(load: => T): T =
-    smallParquetLocks.computeIfAbsent(path, _ => new Object)
-      .synchronized {
-        val sig = smallParquetSig(spark, path)
-        smallParquetCache.get(path) match {
-          case (s, v) if s == sig => v.asInstanceOf[T]
-          case _ =>
-            val v = load
-            smallParquetCache.put(path, (sig, v)): Unit
-            v
-        }
+      path: String)(load: => T): T = {
+    val sig = smallParquetSig(spark, path)
+    val e = smallParquetCache.computeIfAbsent(path,
+      _ => new SmallParquetEntry)
+    e.synchronized {
+      if (e.sig != sig) {
+        e.value = load
+        e.sig = sig
       }
+      e.value.asInstanceOf[T]
+    }
+  }
 
   /** Assign-face codebook — the resolution every raw-vector consumer
     * (ingest/serve/SemDeDup/skew) uses. */

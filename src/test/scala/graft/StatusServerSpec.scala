@@ -925,4 +925,161 @@ class StatusServerSpec extends AnyFunSuite {
         !smEmpty.body().contains("cpu"), smEmpty.body())
     } finally srv.stop()
   }
+
+  private val idle = ClusterStatus("OK", 0L, 0L, masterState = true,
+    masterLastOkNs = 1L, slaveState = true, slaveLastOkNs = 1L)
+  // a request the server never answers fails the test instead of hanging it
+  private val Patience = java.time.Duration.ofSeconds(30)
+
+  test("a malformed percent-escape answers 400, never a dropped " +
+    "connection: the /query form body and the /write and /query URIs") {
+    val srv = new StatusServer(0, () => idle, () => Nil,
+      queryExecScoped = Some((_: String, _: Option[String]) =>
+        fail("a malformed request must not reach the executor")),
+      writeExec = Some((_: String, _: Option[String], _: Long) =>
+        fail("a malformed request must not reach the writer")))
+    srv.start()
+    try {
+      val client = HttpClient.newHttpClient()
+      // the form body is decoded by the handler itself
+      val form = client.send(HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:${srv.boundPort}/query")).timeout(Patience)
+        .POST(HttpRequest.BodyPublishers.ofString("q=%ZZ")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(form.statusCode() == 400, form.body())
+      assert(form.body().startsWith("{\"error\":"), form.body())
+      // java.net.URI refuses these request lines, so they go over a raw
+      // socket; a dropped connection reads as a null status line
+      def status(method: String, path: String): String = {
+        val so = new java.net.Socket("127.0.0.1", srv.boundPort)
+        try {
+          so.setSoTimeout(10000)
+          so.getOutputStream.write((s"$method $path HTTP/1.1\r\n" +
+            "Host: localhost\r\nContent-Length: 0\r\n" +
+            "Connection: close\r\n\r\n").getBytes("UTF-8"))
+          new java.io.BufferedReader(new java.io.InputStreamReader(
+            so.getInputStream, "UTF-8")).readLine()
+        } finally so.close()
+      }
+      for ((method, path) <- Seq("GET" -> "/query?q=%ZZ",
+          "POST" -> "/write?db=%ZZ"))
+        assert(status(method, path) == "HTTP/1.1 400 Bad Request",
+          s"$method $path")
+    } finally srv.stop()
+  }
+
+  test("the control lane answers /ping and /api/health while a /query " +
+    "holds the data lane; the held /query then completes") {
+    val one = SparkSpec.spark.range(1).toDF("v")
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val srv = new StatusServer(0, () => idle, () => Nil,
+      queryExecScoped = Some { (_: String, _: Option[String]) =>
+        entered.countDown()
+        release.await()
+        one
+      })
+    srv.start()
+    try {
+      val client = HttpClient.newHttpClient()
+      def req(path: String) = HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:${srv.boundPort}$path")).timeout(Patience)
+        .GET().build()
+      def timed(path: String): (Int, Double) = {
+        val t0 = System.nanoTime()
+        val code = client.send(req(path),
+          HttpResponse.BodyHandlers.discarding()).statusCode()
+        (code, (System.nanoTime() - t0) / 1e6)
+      }
+      assert(timed("/ping")._1 == 204) // warms the client's classes
+      val held = client.sendAsync(req("/query?q=hold"),
+        HttpResponse.BodyHandlers.ofString())
+      assert(entered.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      for ((path, want) <- Seq("/ping" -> 204, "/api/health" -> 200)) {
+        val (code, ms) = timed(path)
+        assert(code == want && ms < 100, s"$path: $code in $ms ms")
+      }
+      assert(!held.isDone)
+      release.countDown()
+      val r = held.get(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(r.statusCode() == 200 && r.body().contains("\"values\":[[0]]"),
+        r.body())
+    } finally { release.countDown(); srv.stop() }
+  }
+
+  test("a full data queue sheds /write and /query with 503 and " +
+    "Retry-After while /ping answers; accepted data requests run in " +
+    "arrival order; stop() leaves no live data-lane thread") {
+    import scala.jdk.CollectionConverters._
+    val one = SparkSpec.spark.range(1).toDF("v")
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val lane = new java.util.concurrent.atomic.AtomicReference[Thread]()
+    val srv = new StatusServer(0, () => idle, () => Nil,
+      queryExecScoped = Some { (q: String, _: Option[String]) =>
+        if (q == "hold") {
+          lane.set(Thread.currentThread())
+          entered.countDown()
+          release.await()
+        }
+        ran.add(q)
+        one
+      },
+      writeExec = Some { (body: String, _: Option[String], _: Long) =>
+        ran.add(body); 1L
+      })
+    srv.start()
+    try {
+      val client = HttpClient.newHttpClient()
+      val base = s"http://127.0.0.1:${srv.boundPort}"
+      def query(q: String) =
+        HttpRequest.newBuilder(URI.create(s"$base/query?q=$q"))
+          .timeout(Patience).GET().build()
+      def write(body: String) =
+        HttpRequest.newBuilder(URI.create(s"$base/write?db=d"))
+          .timeout(Patience)
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build()
+      def async(r: HttpRequest) =
+        client.sendAsync(r, HttpResponse.BodyHandlers.ofString())
+      val held = async(query("hold"))
+      assert(entered.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      val names = (1 to StatusServer.DataQueueCapacity)
+        .map(i => if (i % 2 == 0) s"w$i" else s"q$i")
+      val accepted = names.zipWithIndex.map { case (n, i) =>
+        val f = async(if (n.startsWith("w")) write(n) else query(n))
+        // one at a time, so arrival order is the order sent
+        val deadline = System.nanoTime() + 30000000000L
+        while (srv.dataQueued <= i) {
+          assert(System.nanoTime() < deadline, s"$n never queued")
+          Thread.sleep(1)
+        }
+        n -> f
+      }
+      for (shed <- Seq(write("w-shed"), query("q-shed"))) {
+        val r = client.send(shed, HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 503, r.body())
+        assert(r.headers().firstValue("Retry-After").orElse("") == "1")
+        assert(r.body().startsWith("{\"error\":"), r.body())
+      }
+      assert(client.send(HttpRequest.newBuilder(URI.create(s"$base/ping"))
+        .timeout(Patience).GET().build(),
+        HttpResponse.BodyHandlers.discarding())
+        .statusCode() == 204)
+      release.countDown()
+      val secs = java.util.concurrent.TimeUnit.SECONDS
+      assert(held.get(60, secs).statusCode() == 200)
+      for ((n, f) <- accepted) {
+        val r = f.get(60, secs)
+        assert(r.statusCode() == (if (n.startsWith("w")) 204 else 200),
+          s"$n: ${r.body()}")
+      }
+      assert(ran.asScala.toSeq == "hold" +: names)
+    } finally { release.countDown(); srv.stop() }
+    val t = lane.get()
+    assert(t.getName == StatusServer.DataLaneThread && t.isDaemon)
+    assert(!t.isAlive)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(x =>
+      x.getName == StatusServer.DataLaneThread && x.isAlive))
+  }
 }
