@@ -606,63 +606,109 @@ final class Agent(
     StreamIngest.toParquet(deduped, cfg.slaveRoot, cfg.checkpointDir)
   }
 
-  /** The hamonitor daemon's HTTP server (not yet started) — beyond the
-    * reference's ops-only UI (webserver.go), the daemon is an InfluxDB
-    * 1.x API stand-in: /query plans InfluxQL against the LIVE storage
-    * catalog of the slave root, /write upserts line protocol, both
-    * behind the configured data credentials ([http] data-user /
-    * data-passwd; u=/p= params or Authorization: Basic — both forms
-    * the reference's own client sends, client.go:42-56). The ql
-    * catalog is cached and invalidated on EITHER side's mutation hook
-    * (DDL over /query ↔ auto-create over /write), with a
-    * check-interval TTL so measurements landed by the copy plane (not
-    * through this server) appear without a restart. */
   /** The daemon's shared data plane — ONE instance across the status
     * server AND the supervisor tick (r16, r15 ADVICE): the tick
     * drains the write low-water marks this WriteService recorded, so
     * a /write backfill behind a CQ's lookback rewinds the rollup in
     * the SERVED deployment, not only in tests; and the ql catalog
-    * cache lives here so BOTH planes invalidate the same entry. */
+    * cache lives here so BOTH planes invalidate the same entry.
+    *
+    * Catalog freshness: the cached ql catalog stays valid across
+    * /writes, and only what a write changed is rebuilt.
+    *  - An upsert into an existing measurement MARKS its path stale,
+    *    with the data schema the write resolved, as soon as that
+    *    measurement commits — so a batch that fails part-way still
+    *    marks what it committed. Marking takes no lock the catalog
+    *    holds: the /write path pays nothing else. A CQ refresh on the
+    *    supervisor tick marks its listed rollup the same way
+    *    ([[cqTick]]).
+    *  - The next [[liveCatalog]] rebuilds just the marked entries from
+    *    their committed `_chunks` (no storage walk), with a write's
+    *    handed schema (no footer-inference job). Every other entry
+    *    keeps its identity. A stale entry would otherwise hold a file
+    *    index of retired generations: stale rows inside the grace,
+    *    deleted files after it.
+    *  - The whole catalog is re-walked instead after an auto-create
+    *    (onCatalogChange), after DDL or DELETE over /query
+    *    (onMutation), when a marked path has no entry (a
+    *    non-default-RP twin, a measurement the last walk skipped),
+    *    when a rebuild fails, and once the check-interval TTL expires
+    *    (measurements landed by the copy plane or a new CQ rollup,
+    *    not through this server). A rebuild does not restart the TTL
+    *    clock. */
   private[graft] final class DaemonPlane {
     private val catTtlMs = math.max(cfg.checkIntervalMs, 1000L)
-    private var qlCat: Seq[graft.ql.QlTable] = null
+    @volatile private var qlCat: Seq[graft.ql.QlTable] = null
     private var qlCatAt = 0L
     private val catLock = new Object
+    /** Committed-but-unseen measurement generations: path → the data
+      * schema a /write resolved (None: infer it, as a CQ mark does). */
+    private val stale = new java.util.concurrent.ConcurrentHashMap[
+      String, Option[org.apache.spark.sql.types.StructType]]()
+    /** Full storage walks paid so far. Test tripwire (the
+      * WriteService.schemaWalks twin): writes into known
+      * measurements must add ZERO walks. */
+    private[graft] var catalogWalks: Int = 0
     def liveCatalog(): Seq[graft.ql.QlTable] = catLock.synchronized {
       val now = System.currentTimeMillis()
-      if (qlCat == null || now - qlCatAt > catTtlMs) {
-        qlCat = graft.ql.QlPlanner.storageCatalog(
-          spark, cfg.slaveRoot, cfg.timeCol)
-        qlCatAt = now
-      }
+      if (qlCat == null || now - qlCatAt > catTtlMs) walk(now)
+      else if (!stale.isEmpty) refreshStale(now)
       qlCat
     }
     def dropCatalog(): Unit = catLock.synchronized { qlCat = null }
+    private def walk(now: Long): Unit = {
+      // a mark landing during the walk is applied again next call
+      qlCat = null; stale.clear()
+      qlCat = graft.ql.QlPlanner.storageCatalog(
+        spark, cfg.slaveRoot, cfg.timeCol)
+      qlCatAt = now
+      catalogWalks += 1
+    }
+    private def refreshStale(now: Long): Unit = {
+      import scala.jdk.CollectionConverters._
+      val marks = stale.keySet.asScala.toSeq
+        .flatMap(p => Option(stale.remove(p)).map(p -> _)).toMap
+      if (!marks.keys.forall(p => qlCat.exists(_.path == p))) walk(now)
+      else try {
+        qlCat = qlCat.map(t => marks.get(t.path).fold(t)(schema =>
+          graft.ql.QlPlanner.storedTable(spark, t.path, t.name, t.db,
+            cfg.timeCol, schema)))
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println("[graft] WARNING: catalog entry refresh " +
+            s"failed (${e.getClass.getSimpleName}: " +
+            s"${Option(e.getMessage).getOrElse("").take(200)}); " +
+            "re-walking the catalog")
+          walk(now)
+      }
+    }
     val ws = new graft.api.WriteService(spark, cfg.slaveRoot,
       chunkNs = chunkNs, timeCol = cfg.timeCol,
-      onCatalogChange = () => dropCatalog())
-    /** /write with write-THROUGH invalidation (r15 ADVICE): an upsert
-      * into an EXISTING measurement rewrites chunk part-files without
-      * firing onCatalogChange (only auto-create does), and a /query
-      * inside the TTL window would execute a plan whose file index
-      * references the deleted parts (FileNotFoundException) or serve
-      * stale rows — so EVERY successful write drops the cache. */
+      onCatalogChange = () => dropCatalog(),
+      onMeasurementWritten = (path, schema) =>
+        stale.put(path, Some(schema)): Unit)
     def write(body: String, db: Option[String],
-        timeMulNs: Long): Long = {
-      val n = ws.write(body, db, timeMulNs)
-      dropCatalog()
-      n
-    }
+        timeMulNs: Long): Long = ws.write(body, db, timeMulNs)
     /** The supervisor-tick CQ pass: refresh every registration with
       * the drained /write low-water rewinds; marks a failed CQ could
       * not consume are RE-QUEUED so the rollup catches the backfill
       * once it recovers (r15 ADVICE low). The tick also runs the
       * growing-index compaction cadence over the configured roots
       * (r16) — the single-writer maintenance plane the fold's
-      * contract requires. */
+      * contract requires. A refreshed rollup the catalog lists is
+      * marked stale like a /write's measurement, so its retired
+      * generations leave the served catalog at the next read, not at
+      * the TTL; one it does not list (a new rollup, or a flat one a
+      * hierarchical root hides) waits for the TTL walk instead of
+      * forcing a walk every tick. */
     def cqTick(): Unit = {
       cqService.runAll(ws.drainWriteLowWater(),
-        requeueRewinds = ws.requeueWriteLowWater): Unit
+        requeueRewinds = ws.requeueWriteLowWater,
+        onRefreshed = path => {
+          val c = qlCat // null mid-walk: mark, the walk may predate it
+          if (c == null || c.exists(_.path == path))
+            stale.put(path, None): Unit
+        }): Unit
       val dirs = cfg.indexDirs.split(',').map(_.trim)
         .filter(_.nonEmpty).toSeq
       if (dirs.nonEmpty) {
@@ -675,6 +721,15 @@ final class Agent(
 
   private[graft] lazy val daemonPlane = new DaemonPlane
 
+  /** The hamonitor daemon's HTTP server (not yet started) — beyond the
+    * reference's ops-only UI (webserver.go), the daemon is an InfluxDB
+    * 1.x API stand-in: /query plans InfluxQL against the LIVE storage
+    * catalog of the slave root, /write upserts line protocol, both
+    * behind the configured data credentials ([http] data-user /
+    * data-passwd; u=/p= params or Authorization: Basic — both forms
+    * the reference's own client sends, client.go:42-56). Both serve
+    * through [[daemonPlane]], whose cached ql catalog a /write
+    * refreshes per measurement and DDL over /query drops whole. */
   private[graft] def statusServer(
       status: () => graft.model.ClusterStatus): graft.api.StatusServer = {
     val dp = daemonPlane

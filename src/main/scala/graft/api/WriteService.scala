@@ -82,10 +82,18 @@ final class WriteService(
     chunkNs: Long = 86400000000000L,
     timeCol: String = "ts",
     autoCreate: Boolean = true,
-    /** Fires after an auto-create changes the storage tree — the hook
-      * a co-served /query catalog hangs its own invalidation on (the
-      * mirror of QlPlanner.executor's onMutation). */
-    onCatalogChange: () => Unit = () => ()) {
+    /** Fires after an auto-create adds a measurement to the storage
+      * tree — the hook a co-served /query catalog hangs its full
+      * invalidation on (the mirror of QlPlanner.executor's
+      * onMutation). */
+    onCatalogChange: () => Unit = () => (),
+    /** Fires after each upsert into an EXISTING measurement commits,
+      * with its path and the data schema the write resolved — one
+      * call per measurement of a batch, so the measurements a batch
+      * committed before a later one failed are still reported. A
+      * co-served /query catalog marks that one entry stale here
+      * instead of dropping the whole catalog. */
+    onMeasurementWritten: (String, StructType) => Unit = (_, _) => ()) {
 
   private val catalog = new graft.catalog.Catalog(spark)
 
@@ -230,7 +238,7 @@ final class WriteService(
       case (m, path, pts, create) =>
         WriteService.lockFor(path).synchronized {
           if (create) createMeasurement(m, path, pts)
-          else writeMeasurement(m, path, pts)
+          else onMeasurementWritten(path, writeMeasurement(m, path, pts))
         }
     }
     // record per-measurement low-water marks AFTER the batch persists
@@ -423,8 +431,10 @@ final class WriteService(
       FieldType.Float
     else FieldType.Str
 
+  /** Upsert into an existing measurement; returns the data schema the
+    * write resolved (the stored columns, `__bucket` dropped). */
   private def writeMeasurement(m: String, path: String,
-      pts: Seq[(LineProtocol.LinePoint, Long)]): Unit = {
+      pts: Seq[(LineProtocol.LinePoint, Long)]): StructType = {
     import spark.implicits._
     // schema resolution only — but through the manifest when present,
     // so a racing reader's generation residue never skews the read
@@ -465,5 +475,6 @@ final class WriteService(
       graft.operators.CopyJob.Config(0L, 0L, chunkNs,
         timeCol = timeCol),
       keyCols = key, serveSnapshot = true): Unit
+    target.schema
   }
 }

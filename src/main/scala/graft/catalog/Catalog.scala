@@ -99,14 +99,19 @@ final class Catalog(spark: SparkSession) {
 
   /** Full GetSchema analog: walk root, apply regex filters at each level,
     * then the rename rewrite. Flat roots surface as default/autogen.
-    * (hacluster.go:75-162 + agent.go:157-167.) */
+    * (hacluster.go:75-162 + agent.go:157-167.)
+    * @param withFields false = names only: every measurement surfaces
+    *   with an empty field map and no parquet footer is read (the
+    *   /query catalog reads its own schemas,
+    *   [[graft.ql.QlPlanner.storageCatalog]]). */
   def getSchema(
       root: String,
       dbRegex: String = ".*",
       rpRegex: String = ".*",
       measRegex: String = ".*",
       newDb: String = "",
-      newRp: String = ""): Seq[DbSchema] = {
+      newRp: String = "",
+      withFields: Boolean = true): Seq[DbSchema] = {
     val dbRe = dbRegex.r
     val rpRe = rpRegex.r
     val measRe = measRegex.r
@@ -124,7 +129,8 @@ final class Catalog(spark: SparkSession) {
           // walk applies (QlPlanner.storageCatalog) — without this,
           // one mid-write dir failed the ENTIRE schema walk (and any
           // plane calling it), observed live by the DaemonSoak reader
-          try Some(MeasurementSch(m, fields(s"$dir/$m.parquet")))
+          if (!withFields) Some(MeasurementSch(m, Map.empty))
+          else try Some(MeasurementSch(m, fields(s"$dir/$m.parquet")))
           catch {
             case e: org.apache.spark.sql.AnalysisException
                 if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>

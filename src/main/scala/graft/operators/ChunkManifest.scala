@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
 
 /** Listing-snapshot manifest for the SERVED chunk plane — the chunk
   * store's twin of the index epochs' `_layout` (the
@@ -290,11 +291,14 @@ object ChunkManifest {
     * (non-overlapping generations never even reach the file listing).
     * An empty live set reads schema-only from a graced retired dir so
     * an all-deleted measurement stays queryable (empty, not an
-    * error) while its grace residue drains. */
+    * error) while its grace residue drains. A known data `schema`
+    * skips the live read's footer-inference job. */
   def snapshotFrame(spark: SparkSession, path: String,
-      refs: Seq[ChunkRef]): DataFrame =
+      refs: Seq[ChunkRef],
+      schema: Option[StructType] = None): DataFrame =
     if (refs.nonEmpty)
-      spark.read.option("basePath", path)
+      schema.fold(spark.read)(spark.read.schema(_))
+        .option("basePath", path)
         .parquet(refs.map(r => s"$path/${r.dir}"): _*)
     else {
       val fs = hfs(spark, path)
@@ -314,7 +318,7 @@ object ChunkManifest {
     }
 
   /** [[snapshotFrame]] over ALL live refs when manifested, else None. */
-  def snapshotRead(spark: SparkSession, path: String)
-      : Option[DataFrame] =
-    snapshotRefs(spark, path).map(snapshotFrame(spark, path, _))
+  def snapshotRead(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): Option[DataFrame] =
+    snapshotRefs(spark, path).map(snapshotFrame(spark, path, _, schema))
 }

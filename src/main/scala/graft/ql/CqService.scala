@@ -137,7 +137,10 @@ final class CqService(spark: SparkSession, srcRoot: String,
         * A mark whose source feeds BOTH a failed and a succeeded CQ
         * is re-queued whole — the succeeded one just re-covers an
         * already-idempotent window next tick. */
-      requeueRewinds: Map[String, Long] => Unit = _ => ())
+      requeueRewinds: Map[String, Long] => Unit = _ => (),
+      /** Receives the rollup path of every CQ this pass refreshed —
+        * the daemon's served catalog marks that entry stale. */
+      onRefreshed: String => Unit = _ => ())
       : Seq[(String, Long, Long)] = {
     val failedSrcs = scala.collection.mutable.Set.empty[String]
     def srcOf(text: String): String =
@@ -160,11 +163,12 @@ final class CqService(spark: SparkSession, srcRoot: String,
           else dstRoot
         QlPlanner.planCreateCq(stmt, spark, root, dstRoot,
           resampleNs, rewindToNs = writeRewinds.get(srcMeas))
+        val dstPath = s"$dstRoot/${stmt.inner.into.get}.parquet"
+        onRefreshed(dstPath)
         // the refresh's (buckets, watermark) ride the rollup's own
         // _cq.json watermark file; re-read it for the report
         val wm = new graft.operators.ContinuousQuery(spark)
-        val roll = wm.readRollup(
-          s"$dstRoot/${stmt.inner.into.get}.parquet")
+        val roll = wm.readRollup(dstPath)
         (name, roll.select("bucket_ns").distinct().count(),
           watermarkOf(stmt.inner.into.get))
       } catch {

@@ -15,7 +15,10 @@ final case class QlTable(name: String, df: DataFrame, timeCol: String,
       * restricts SELECT resolution to matching (or unscoped) tables —
       * how colliding measurement names across databases resolve
       * deterministically (InfluxDB's own request-scoping). */
-    db: String = "")
+    db: String = "",
+    /** Storage path of a stored measurement ("" = not stored): the key
+      * a served catalog refreshes one entry by. */
+    path: String = "")
 
 /** Plans a parsed [[QlSelect]] onto the existing DataFrame surface —
   * the text front-end stays a THIN layer: scans/filters land on the
@@ -398,16 +401,6 @@ object QlPlanner {
     res
   }
 
-  /** Build the SELECT catalog from a storage root: every measurement
-    * the FS catalog discovers becomes a [[QlTable]] — tags are its
-    * string columns (InfluxDB's tags-are-strings mapping, the same
-    * split SHOW TAG/FIELD KEYS serves), fields everything else but
-    * the time column. Chunk-partitioned sinks read whole (their
-    * `__bucket` partition column stays out of the query surface);
-    * reads are LAZY — construction costs one catalog walk + footer
-    * schemas, no data scan. A measurement name appearing under
-    * several RPs resolves to the DEFAULT RP's instance (InfluxDB's
-    * unqualified-FROM rule). */
   /** One WARN per measurement skipped by a catalog walk — transient
     * mid-rewrite skips self-heal on the next walk, but a persistent
     * one (corrupt footer, permissions, fully-expired manifest) must
@@ -417,43 +410,31 @@ object QlPlanner {
       s"$path (${e.getClass.getSimpleName}: " +
       s"${Option(e.getMessage).getOrElse("").take(200)})")
 
+  /** Build the SELECT catalog from a storage root: every measurement
+    * the FS catalog discovers becomes a [[QlTable]] — tags are its
+    * string columns (InfluxDB's tags-are-strings mapping, the same
+    * split SHOW TAG/FIELD KEYS serves), fields everything else but
+    * the time column. Chunk-partitioned sinks read whole (their
+    * `__bucket` partition column stays out of the query surface);
+    * reads are LAZY — construction costs one names-only catalog walk
+    * and one footer-schema read per measurement, no data scan. A
+    * measurement name appearing under several RPs resolves to the
+    * DEFAULT RP's instance (InfluxDB's unqualified-FROM rule). */
   def storageCatalog(spark: org.apache.spark.sql.SparkSession,
       root: String, timeCol: String = "ts"): Seq[QlTable] = {
     val cat = new graft.catalog.Catalog(spark)
     val hier = cat.isHierarchical(root)
-    graft.sources.Tables.ensureNsConf(spark)
     val all = for {
-      d <- cat.getSchema(root)
+      d <- cat.getSchema(root, withFields = false) // names only
       rp <- d.rps.sortBy(!_.isDefault) // default RP wins name clashes
       m <- rp.measurements
       t <- {
         val path =
           if (hier) s"$root/${d.name}/${rp.name}/${m.name}.parquet"
           else s"$root/${m.name}.parquet"
-        // manifest-pinned when the /write plane manages the
-        // measurement ([[graft.operators.ChunkManifest]]): the
-        // statement executes against a LISTING SNAPSHOT of live chunk
-        // generations, so a concurrent upsert can never yank a file
-        // from under the plan (the r19 soak's transient
-        // FILE_NOT_EXIST)
-        try {
-          val df0 = graft.operators.ChunkManifest
-            .snapshotRead(spark, path)
-            .getOrElse(spark.read.parquet(path))
-          val df = graft.sources.Tables.withNsTime(
-            if (df0.columns.contains("__bucket")) df0.drop("__bucket")
-            else df0, timeCol)
-          val tags = df.schema.fields.toSeq
-            .filter(f =>
-              f.dataType == org.apache.spark.sql.types.StringType &&
-                f.name != "measurement")
-            .map(_.name)
-          val fields = df.columns.toSeq
-            .filterNot(c =>
-              tags.contains(c) || c == timeCol || c == "measurement")
-          Some(QlTable(m.name, df, timeCol, tags, fields,
-            db = if (hier) d.name else ""))
-        } catch {
+        try Some(storedTable(spark, path, m.name,
+          if (hier) d.name else "", timeCol))
+        catch {
           // a measurement MID-CREATION or MID-REWRITE is not yet
           // discoverable THIS walk — skip it; the next walk (TTL or
           // write-through invalidation) picks it up. The race is
@@ -496,6 +477,36 @@ object QlPlanner {
       }
     } yield t
     all.distinctBy(t => (t.db, t.name))
+  }
+
+  /** One stored measurement as a [[QlTable]] — the single constructor
+    * behind [[storageCatalog]] and a served catalog's per-entry
+    * refresh. Manifest-pinned when the /write plane manages the
+    * measurement ([[graft.operators.ChunkManifest]]): the statement
+    * executes against a LISTING SNAPSHOT of live chunk generations,
+    * so a concurrent upsert can never yank a file from under the plan
+    * (the r19 soak's transient FILE_NOT_EXIST).
+    * @param schema the data schema a writer just resolved: the
+    *   manifest-pinned read takes it as given instead of running a
+    *   footer-inference job. */
+  private[graft] def storedTable(spark: org.apache.spark.sql.SparkSession,
+      path: String, name: String, db: String, timeCol: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : QlTable = {
+    graft.sources.Tables.ensureNsConf(spark)
+    val df0 = graft.operators.ChunkManifest.snapshotRead(spark, path, schema)
+      .getOrElse(spark.read.parquet(path))
+    val df = graft.sources.Tables.withNsTime(
+      if (df0.columns.contains("__bucket")) df0.drop("__bucket")
+      else df0, timeCol)
+    val tags = df.schema.fields.toSeq
+      .filter(f =>
+        f.dataType == org.apache.spark.sql.types.StringType &&
+          f.name != "measurement")
+      .map(_.name)
+    val fields = df.columns.toSeq
+      .filterNot(c => tags.contains(c) || c == timeCol || c == "measurement")
+    QlTable(name, df, timeCol, tags, fields, db = db, path = path)
   }
 
   /** The standard HTTP /query executor: SHOW statements discover the

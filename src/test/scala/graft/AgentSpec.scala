@@ -636,6 +636,269 @@ class AgentSpec extends AnyFunSuite {
     assert(cat2.find(_.name == "m1").get.df.count() == 2L)
   }
 
+  test("catalog freshness: a /write into a known measurement rebuilds " +
+    "only that catalog entry (zero walks, untouched entries keep their " +
+    "identity); auto-create, DDL over /query, an entry-less path and " +
+    "the TTL still re-walk, and a rebuild keeps the TTL clock") {
+    val Day = 86400000000000L
+    val dst = freshRoot()
+    val agent = new Agent(spark,
+      cfg(dst).copy(initialReplication = "none", allowMutations = true,
+        checkIntervalMs = 3600000L), // 1h TTL: no refresh-by-timeout
+      slaveProbeOpt = Some(() => true))
+    val dp = agent.daemonPlane
+    val srv = agent.statusServer(() => graft.model.ClusterStatus("OK",
+      0L, 0L, masterState = true, masterLastOkNs = 1L,
+      slaveState = true, slaveLastOkNs = 1L))
+    srv.start()
+    try {
+      val client = java.net.http.HttpClient.newHttpClient()
+      def ddl(q: String): Int = client.send(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+          s"http://127.0.0.1:${srv.boundPort}/query?q=" +
+            java.net.URLEncoder.encode(q, "UTF-8")))
+          .timeout(java.time.Duration.ofSeconds(60)).GET().build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode()
+      def entry(m: String) = dp.liveCatalog().find(_.name == m)
+      def write(m: String, ts: Long) =
+        assert(dp.write(s"$m,host=a value=1 $ts", Some("db"), 1L) == 1L)
+      val t = S + Day
+      assert(ddl("CREATE DATABASE db") == 200)
+      write("m1", t); write("m2", t)
+      val m2 = entry("m2").get
+      val walks = dp.catalogWalks
+      for (k <- 1 to 3) {
+        write("m1", t + k)
+        assert(entry("m1").get.df.count() == k + 1L)
+        assert(entry("m2").get eq m2,
+          "an entry the batch did not touch must keep its identity")
+      }
+      // the rebuild reads with the schema the write handed over: it
+      // launches no Spark job (a footer inference would launch one)
+      write("m1", t + 10)
+      val sc = spark.sparkContext
+      val rebuildJobs = new java.util.concurrent.atomic.AtomicInteger()
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some("rebuild") => rebuildJobs.incrementAndGet(): Unit
+            case Some("sentinel") => drained.countDown()
+            case _ =>
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup("rebuild", "catalog entry rebuild")
+        dp.liveCatalog(): Unit
+        sc.setJobGroup("sentinel", "listener bus drain")
+        sc.parallelize(Seq(1)).count(): Unit
+        // the bus delivers in order: once the sentinel's start lands,
+        // every job the rebuild launched has been counted
+        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      assert(rebuildJobs.get() == 0,
+        s"the entry rebuild launched ${rebuildJobs.get()} Spark jobs")
+      assert(entry("m1").get.df.count() == 5L)
+      assert(dp.catalogWalks == walks,
+        "writes into known measurements must add zero catalog walks")
+      // auto-create: exactly one walk
+      write("m3", t)
+      assert(entry("m3").nonEmpty && dp.catalogWalks == walks + 1)
+      // a measurement landed behind the daemon's back (another
+      // writer on the root): its first daemon /write marks a path the
+      // catalog has no entry for, which re-walks
+      new graft.api.WriteService(spark, dst)
+        .write(s"m4,host=a value=1 $t", Some("db")): Unit
+      write("m4", t + 1)
+      assert(entry("m4").get.df.count() == 2L)
+      assert(dp.catalogWalks == walks + 2)
+      // DDL over /query drops the whole catalog
+      assert(ddl("CREATE DATABASE db2") == 200)
+      assert(entry("m2").nonEmpty && dp.catalogWalks == walks + 3)
+    } finally srv.stop()
+
+    // TTL expiry still re-walks, timed from the walk: a rebuild inside
+    // the window must not restart the clock (a TTL well past one
+    // upsert, so the rebuild lands inside the window on a slow host)
+    val ttlMs = 15000L
+    val dp2 = new Agent(spark,
+      cfg(dst).copy(initialReplication = "none",
+        checkIntervalMs = ttlMs),
+      slaveProbeOpt = Some(() => true)).daemonPlane
+    val tWalk = System.currentTimeMillis()
+    dp2.liveCatalog(): Unit
+    val w2 = dp2.catalogWalks
+    assert(dp2.write(s"m1,host=a value=1 ${S + Day + 9}", Some("db"),
+      1L) == 1L)
+    val tRefresh = System.currentTimeMillis()
+    assert(tRefresh - tWalk < ttlMs,
+      s"the upsert took ${tRefresh - tWalk} ms, past the $ttlMs ms TTL")
+    assert(dp2.liveCatalog().find(_.name == "m1").get.df.count() == 6L)
+    assert(dp2.catalogWalks == w2, "a rebuild must not walk")
+    Thread.sleep(math.max(0L,
+      tWalk + ttlMs + 500L - System.currentTimeMillis()))
+    dp2.liveCatalog(): Unit
+    assert(dp2.catalogWalks == w2 + 1,
+      "the TTL must expire from the last walk, not the last rebuild")
+  }
+
+  test("catalog freshness: a supervisor tick that refreshes a listed " +
+    "rollup marks its entry, so the served rollup moves without a " +
+    "walk or the TTL") {
+    val Day = 86400000000000L
+    val master = freshRoot()
+    spark.read.parquet(s"${SparkSpec.Sf0001}/events.parquet")
+      .write.parquet(s"$master/events.parquet")
+    val dst = freshRoot()
+    var now = E
+    val agent = new Agent(spark,
+      cfg(dst).copy(masterRoot = master, initialReplication = "none",
+        checkIntervalMs = 3600000L), // 1h TTL: no refresh-by-timeout
+      slaveProbeOpt = Some(() => true), nowNs = () => now)
+    val monitor = agent.hamonitor()
+    val dp = agent.daemonPlane
+    val t1 = S + 20 * Day
+    assert(dp.write(s"src,host=h1 value=1.5 $t1", None, 1L) == 1L)
+    agent.cqService.registerOnly(
+      """create continuous query "rc" begin select count(value) """ +
+        """into "src_roll" from "src" group by time(1d) end""")
+    now += 20000000000L; monitor.tick()
+    def rollRows = dp.liveCatalog().find(_.name == "src_roll").get
+      .df.count()
+    assert(rollRows == 1L)
+    val walks = dp.catalogWalks
+    // a backfill into an older day: the next tick rewinds the CQ and
+    // commits a new rollup generation with a second bucket
+    val tOld = t1 - 10 * Day
+    assert(dp.write(s"src,host=h1 value=2.5 $tOld", None, 1L) == 1L)
+    now += 20000000000L; monitor.tick()
+    assert(rollRows == 2L,
+      "the served rollup must see the tick's new generation")
+    assert(dp.catalogWalks == walks,
+      "a rollup refresh must rebuild its entry, not walk")
+  }
+
+  test("catalog freshness: a /write batch that fails part-way still " +
+    "refreshes the measurements it committed before the failure") {
+    val Day = 86400000000000L
+    val dst = freshRoot()
+    val agent = new Agent(spark,
+      cfg(dst).copy(initialReplication = "none",
+        checkIntervalMs = 3600000L), // 1h TTL: no refresh-by-timeout
+      slaveProbeOpt = Some(() => true))
+    val dp = agent.daemonPlane
+    assert(dp.write(s"a,host=h value=1 ${S + Day}", None, 1L) == 1L)
+    assert(dp.write(s"b,host=h value=1 ${S + Day}", None, 1L) == 1L)
+    val warm = dp.liveCatalog()
+    assert(warm.find(_.name == "a").get.df.count() == 1L)
+    // b's manifest claims a format newer than this binary: the batch
+    // commits a (name order), then ChunkManifest.read refuses b
+    val fs = new org.apache.hadoop.fs.Path(dst)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val mp = graft.operators.ChunkManifest.manifestPath(s"$dst/b.parquet")
+    val txt = {
+      val in = fs.open(mp)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    }
+    assert(txt.startsWith("manifest=1\n"))
+    val out = fs.create(mp, true)
+    try out.write(("manifest=99\n" + txt.stripPrefix("manifest=1\n"))
+      .getBytes("UTF-8"))
+    finally out.close()
+    val err = intercept[IllegalArgumentException](dp.write(
+      s"a,host=h value=2 ${S + 2 * Day}\nb,host=h value=2 ${S + 2 * Day}",
+      None, 1L))
+    assert(err.getMessage.contains("format v99"))
+    val cat = dp.liveCatalog()
+    assert(cat.find(_.name == "a").get.df.count() == 2L,
+      "the committed half of a failed batch must be visible")
+    assert(cat.find(_.name == "b").get eq warm.find(_.name == "b").get)
+  }
+
+  test("catalog freshness: read-your-writes under racing /write " +
+    "upserts — no FileNotFound task failures, counts never decrease, " +
+    "and a read that starts after a write returns sees its point") {
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger,
+      AtomicLong, AtomicReference}
+    val Day = 86400000000000L
+    val dst = freshRoot()
+    val agent = new Agent(spark,
+      cfg(dst).copy(initialReplication = "none",
+        checkIntervalMs = 3600000L), // 1h TTL: no refresh-by-timeout
+      slaveProbeOpt = Some(() => true))
+    val dp = agent.daemonPlane
+    // wired as the daemon wires the status server's /query
+    val exec = graft.ql.QlPlanner.executorScoped(spark, dst,
+      dp.liveCatalog())
+    def served(): Long = exec("select count(value) from rw", None)
+      .collect().head.getLong(1)
+    assert(dp.write(s"rw,host=h value=0 ${S + Day}", None, 1L) == 1L)
+    val writes = 8
+    val acked = new AtomicLong(1L)
+    val failedTasks = new AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        val r = String.valueOf(te.reason)
+        if (te.reason != org.apache.spark.Success &&
+            (r.contains("FileNotFound") || r.contains("FILE_NOT_EXIST")))
+          failedTasks.incrementAndGet(): Unit
+      }
+    }
+    val failures = new AtomicReference[List[Throwable]](Nil)
+    def runner(name: String)(body: => Unit): Thread = {
+      val t = new Thread(() =>
+        try body
+        catch { case e: Throwable =>
+          failures.updateAndGet(e :: _): Unit
+        }, name)
+      t.setDaemon(true); t.start(); t
+    }
+    val stop = new AtomicBoolean()
+    val reads = new AtomicInteger()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val writer = runner("rw-writer") {
+        for (i <- 1 to writes) {
+          assert(dp.write(s"rw,host=h value=$i ${S + Day + i}", None,
+            1L) == 1L)
+          acked.set(i + 1L)
+        }
+      }
+      val reader = runner("rw-reader") {
+        var last = 0L
+        while (!stop.get()) {
+          val floor = acked.get()
+          val n = served()
+          assert(n >= floor,
+            s"a read started after $floor acked points saw $n")
+          assert(n >= last, s"the served count fell from $last to $n")
+          assert(n <= writes + 1L, s"count $n beyond every write")
+          last = n; reads.incrementAndGet(): Unit
+        }
+      }
+      writer.join(180000L)
+      stop.set(true)
+      reader.join(60000L)
+      assert(!writer.isAlive && !reader.isAlive,
+        "writer or reader did not finish in time")
+    } finally {
+      stop.set(true)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(failures.get().isEmpty, s"racing planes failed: ${failures.get()}")
+    assert(failedTasks.get() == 0L,
+      s"${failedTasks.get()} FileNotFound task failures")
+    assert(reads.get() > 0)
+    assert(served() == writes + 1L)
+  }
+
   test("r16 rewind re-queue: marks a FAILED CQ could not consume go " +
     "back into the WriteService, so the rollup catches the backfill " +
     "when the CQ recovers on a later tick") {
