@@ -368,17 +368,19 @@ final class Agent(
     * every slave measurement — the nightly ops pass that keeps the
     * chunked sink's file count bounded after recoveries and split
     * writes. Returns (db/rp/measurement, files before, files after)
-    * per compacted partition's measurement, summed. */
+    * per compacted chunk's measurement, summed. */
   def compact(): Seq[(String, Int, Int)] = {
     require(slaveProbe(), "slave not alive")
     val job = new CopyJob(spark)
+    val timeCfg = CopyJob.Config(0L, 0L, chunkNs, timeCol = cfg.timeCol)
     for {
       db <- catalog.getSchema(cfg.slaveRoot, cfg.dbRegex, cfg.rpRegex,
         cfg.measRegex, "", "")
       rp <- db.rps
       m <- rp.measurements
       report = job.compact(
-        s"${cfg.slaveRoot}/${db.name}/${rp.name}/${m.name}.parquet")
+        s"${cfg.slaveRoot}/${db.name}/${rp.name}/${m.name}.parquet",
+        timeCfg)
       if report.nonEmpty
     } yield (s"${db.name}/${rp.name}/${m.name}",
       report.map(_._2).sum, report.map(_._3).sum)
@@ -392,8 +394,8 @@ final class Agent(
     * repair window's start is clamped to the retention cutoff BEFORE
     * repairing, so (a) a chunk the retention leg is about to expire is
     * never re-copied first, and (b) on the NEXT run diffsync tiles
-    * from the cutoff and sees the trimmed straddling partition under
-    * its clamped span name — checksums match and nothing churns. A
+    * from the cutoff and sees the trimmed straddling chunk under its
+    * clamped span — checksums match and nothing churns. A
     * second maintain() against an unchanged master repairs nothing,
     * compacts nothing and expires nothing (AgentSpec pins it).
     * Returns one [[Agent.MaintainReport]] per (db, rp). */
@@ -422,7 +424,7 @@ final class Agent(
       val legs = CopyJob.layout(one, cfg.masterRoot, cfg.slaveRoot, flat)
         .map { case (src, dst) =>
           val repaired = job.syncDiffering(src, dst, copyCfg)._1
-          val comp = job.compact(dst)
+          val comp = job.compact(dst, copyCfg)
           val (dropped, trimmed) = cutoff.map { c =>
             val (d, t, _) = job.enforceRetention(dst, c, copyCfg)
             (d, t)
@@ -488,8 +490,10 @@ final class Agent(
   }
 
   /** The recovery backfill: blind re-copy of the outage window at the
-    * configured chunking, idempotent by the sink's partition overwrite +
-    * trim pass (hacluster.go:305-342). Runs the same (db, rp)-scoped
+    * configured chunking, idempotent by the copy's manifest commit
+    * (span-contained chunks retire, straddling ones are trimmed —
+    * hacluster.go:305-342), so the measurement keeps serving pinned
+    * readers throughout. Runs the same (db, rp)-scoped
     * copy+verify loop as the batch copy plane — the post-outage backfill
     * is precisely the copy most likely to diverge. */
   private def backfillWith(sch: Seq[DbSchema],

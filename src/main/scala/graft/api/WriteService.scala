@@ -411,7 +411,7 @@ final class WriteService(
     job.upsertPoints(path, df0.select(cols: _*),
       graft.operators.CopyJob.Config(0L, 0L, chunkNs,
         timeCol = timeCol),
-      keyCols = key, serveSnapshot = true): Unit
+      keyCols = key): Unit
     writeSeriesMeta(path, key) // series identity survives restarts
     invalidateSchema() // the walk no longer reflects storage
     onCatalogChange()
@@ -436,10 +436,9 @@ final class WriteService(
   private def writeMeasurement(m: String, path: String,
       pts: Seq[(LineProtocol.LinePoint, Long)]): StructType = {
     import spark.implicits._
-    // schema resolution only — but through the manifest when present,
-    // so a racing reader's generation residue never skews the read
-    val target = graft.operators.ChunkManifest.snapshotRead(spark, path)
-      .getOrElse(spark.read.parquet(path)).drop("__bucket")
+    // schema resolution only — through the manifest, so a racing
+    // reader's generation residue never skews the read
+    val target = graft.operators.ChunkManifest.readStored(spark, path)
     val df0 = pts.map { case (p, i) =>
       (p.tags, p.fields, p.timeNs, i)
     }.toDF("tags", "fields", "timeNs", "__line")
@@ -474,7 +473,7 @@ final class WriteService(
     job.upsertPoints(path, decoded,
       graft.operators.CopyJob.Config(0L, 0L, chunkNs,
         timeCol = timeCol),
-      keyCols = key, serveSnapshot = true): Unit
+      keyCols = key): Unit
     target.schema
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.StructType
 
 /** Listing-snapshot manifest for the SERVED chunk plane — the chunk
@@ -24,17 +24,16 @@ import org.apache.spark.sql.types.StructType
   * serialized by the server's WAL (client.go:329-485); a
   * filesystem-native serve plane has to build the isolation itself.
   *
-  * Scope contract (SURVEY known-limits): the manifest exists for the
-  * measurements the /write plane touches — WriteService bootstraps it
-  * on first write, and every chunk mutator
-  * ([[CopyJob.upsertPoints]]/[[CopyJob.deleteWhere]]/
-  * [[CopyJob.enforceRetention]]) auto-detects and maintains it. The
-  * BATCH copy plane ([[CopyJob.copyMeasurement]]) instead
-  * DE-MANIFESTS the measurement first (restores the plain layout,
-  * stop-the-world): a full re-copy is outage repair, where the
-  * reference itself is not serving — snapshot isolation there would
-  * need generation-naming in the dynamic-partition-overwrite sink
-  * for no production win.
+  * Scope contract: the manifest is the ONE chunk layout. Every chunk
+  * writer commits through it — the /write plane
+  * ([[CopyJob.upsertPoints]]), the batch copy plane
+  * ([[CopyJob.copyMeasurement]], so an HA recovery re-copy lands
+  * beside a served measurement's pinned readers instead of stopping
+  * them), [[CopyJob.deleteWhere]], [[CopyJob.enforceRetention]],
+  * [[CopyJob.compact]] and the CQ rollup sink — and every reader
+  * resolves it ([[readStored]]). A plain `__bucket=<s>_<e>` layout
+  * written before the manifest existed reads as its span dirs and is
+  * adopted by [[bootstrap]] at its first mutation.
   *
   * Consistency model: one writer at a time per measurement (the
   * per-path monitor [[lockFor]], shared with
@@ -43,8 +42,9 @@ import org.apache.spark.sql.types.StructType
   * reader holding a snapshot older than the grace window can still
   * lose files (bounded staleness, exactly the index epochs'
   * retire-grace contract — size the grace to the longest served
-  * query). Cross-PROCESS writers are out of scope: the serve plane
-  * is one process (the daemon), and the copy plane de-manifests.
+  * query). Cross-PROCESS writers are out of scope: the daemon serves
+  * and recovers in one process; a batch `-action copy` run beside a
+  * serving daemon is a second writer these monitors do not see.
   */
 object ChunkManifest {
 
@@ -68,6 +68,10 @@ object ChunkManifest {
   /** `_chunks` format version this binary writes and the newest it
     * reads (the index `_layout` manifest-key discipline from r20). */
   val FormatVersion = 1
+
+  /** Default retirement grace of a replaced generation: five minutes,
+    * longer than any served query is expected to run. */
+  val DefaultGraceMs = 300000L
 
   def manifestPath(dst: String) = new Path(s"$dst/_chunks")
   private def tmpPath(dst: String) = new Path(s"$dst/_chunks.tmp")
@@ -162,22 +166,33 @@ object ChunkManifest {
       require(fs.exists(p), s"chunk manifest commit failed: $tmp -> $p")
   }
 
-  /** Adopt a plain chunk layout: every `__bucket=` dir becomes a
-    * gen-0 live ref under its existing name (byte-zero migration —
-    * no data moves). Caller holds [[lockFor]] and commits. */
-  def bootstrap(fs: FileSystem, dst: String): State = {
+  /** A generation dir name (`__bucket=<s>_<e>_g<n>`), as opposed to a
+    * plain span dir. */
+  private def isGen(dir: String): Boolean = dir.contains("_g")
+
+  /** Names of the chunk dirs on disk under `dst` (one listing). */
+  def chunkDirs(fs: FileSystem, dst: String): Seq[String] = {
     val dir = new Path(dst)
-    val live =
-      if (!fs.exists(dir)) Seq.empty[ChunkRef]
-      else fs.listStatus(dir).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("__bucket="))
-        .flatMap { st =>
-          spanOf(st.getPath.getName)
-            .map { case (s, e) => ChunkRef(st.getPath.getName, s, e) }
-        }
-    State(0L, live, Seq.empty)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith("__bucket="))
+      .map(_.getPath.getName)
   }
+
+  private def adopt(dirs: Seq[String]): State =
+    State(0L, dirs.filterNot(isGen).flatMap(d =>
+      spanOf(d).map { case (s, e) => ChunkRef(d, s, e) }), Seq.empty)
+
+  /** Adopt a plain chunk layout: every plain `__bucket=<s>_<e>` dir
+    * becomes a gen-0 live ref under its existing name (byte-zero
+    * migration — no data moves). Gen-named dirs in an unmanifested
+    * measurement are orphans of a writer that crashed before its first
+    * commit: no manifest ever named them, so they are not adopted, and
+    * the first commit's sweep removes them. Caller holds [[lockFor]]
+    * and commits. */
+  def bootstrap(fs: FileSystem, dst: String): State =
+    adopt(chunkDirs(fs, dst))
 
   /** Sweep, split into PLAN (pure) and DELETE (physical) halves so a
     * commit can write the new manifest FIRST and delete after: the
@@ -199,8 +214,8 @@ object ChunkManifest {
     * planned state. Drops the expired retired dirs plus any gen-named
     * orphan a crashed write left behind (dirs neither live nor
     * retired in the COMMITTED state are invisible to every reader;
-    * plain-named unknowns are left alone — an out-of-band copy is
-    * the de-manifest path's business). Lock held by the caller, so
+    * plain-named unknowns are left alone — only data this module
+    * wrote is ever deleted unasked). Lock held by the caller, so
     * no manifested writer races the deletes; snapshot readers within
     * grace never see them. */
   def sweepDeletes(fs: FileSystem, dst: String, committed: State,
@@ -214,7 +229,7 @@ object ChunkManifest {
     if (fs.exists(dirP)) fs.listStatus(dirP).foreach { s =>
       val n = s.getPath.getName
       if (s.isDirectory && n.startsWith("__bucket=") &&
-          n.contains("_g") && !known.contains(n))
+          isGen(n) && !known.contains(n))
         fs.delete(s.getPath, true): Unit
     }
   }
@@ -241,84 +256,65 @@ object ChunkManifest {
     planned
   }
 
-  /** Restore the plain layout (stop-the-world, caller-locked): drop
-    * retired dirs, rename gen-named live dirs to their plain span
-    * names, remove the manifest. The batch copy plane calls this
-    * before landing on a served measurement — its
-    * dynamic-partition-overwrite sink addresses dirs by span value
-    * and would otherwise split one measurement across two naming
-    * schemes the manifest no longer describes. */
-  def demanifest(fs: FileSystem, dst: String): Unit =
-    read(fs, dst).foreach { st =>
-      st.retired.foreach(r =>
-        fs.delete(new Path(s"$dst/${r.dir}"), true): Unit)
-      // orphans from crashed writes go too (they are gen-named)
-      val live = st.live.map(_.dir).toSet
-      val dirP = new Path(dst)
-      if (fs.exists(dirP)) fs.listStatus(dirP).foreach { s =>
-        val n = s.getPath.getName
-        if (s.isDirectory && n.startsWith("__bucket=") &&
-            n.contains("_g") && !live.contains(n))
-          fs.delete(s.getPath, true): Unit
-      }
-      st.live.foreach { c =>
-        val plain = s"__bucket=${c.startNs}_${c.endNs}"
-        if (c.dir != plain) {
-          val from = new Path(s"$dst/${c.dir}")
-          val to = new Path(s"$dst/$plain")
-          fs.delete(to, true): Unit // a retired gen-0 span dir
-          require(fs.rename(from, to),
-            s"demanifest: cannot restore $from -> $to")
-        }
-      }
-      fs.delete(manifestPath(dst), false): Unit
-      fs.delete(tmpPath(dst), false): Unit
-    }
-
   private def hfs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** The manifest's live refs, or None when the measurement is not
-    * snapshot-managed (callers fall back to the plain listing read). */
-  def snapshotRefs(spark: SparkSession, path: String)
-      : Option[Seq[ChunkRef]] =
-    read(hfs(spark, path), path).map(_.live)
-
-  /** Manifest-pinned read: the live generation dirs as ONE relation
-    * (basePath keeps the `__bucket` partition column shape identical
-    * to the plain read). `refs` pre-pruned by the caller when a time
-    * range is known — pruning at the REF level beats PartitionFilters
-    * (non-overlapping generations never even reach the file listing).
-    * An empty live set reads schema-only from a graced retired dir so
-    * an all-deleted measurement stays queryable (empty, not an
-    * error) while its grace residue drains. A known data `schema`
-    * skips the live read's footer-inference job. */
-  def snapshotFrame(spark: SparkSession, path: String,
-      refs: Seq[ChunkRef],
+  /** Manifest-pinned read: the given chunk dirs as ONE relation
+    * (basePath keeps the `__bucket` partition column). A known data
+    * `schema` skips the footer-inference job. */
+  def snapshotFrame(spark: SparkSession, path: String, dirs: Seq[String],
       schema: Option[StructType] = None): DataFrame =
-    if (refs.nonEmpty)
-      schema.fold(spark.read)(spark.read.schema(_))
-        .option("basePath", path)
-        .parquet(refs.map(r => s"$path/${r.dir}"): _*)
+    schema.fold(spark.read)(spark.read.schema(_))
+      .option("basePath", path)
+      .parquet(dirs.map(d => s"$path/$d"): _*)
+
+  /** The stored measurement at `path` as one relation, `__bucket`
+    * kept — the ONE place a reader decides how a measurement is laid
+    * out:
+    *  - manifested: the live generation dirs, pinned now (a plain
+    *    listing would also see graced residue and crash orphans);
+    *  - a plain chunk layout (no `_chunks`): its span dirs, the refs
+    *    [[bootstrap]] adopts;
+    *  - no chunk dir at all (a flat parquet dir): the path itself.
+    *
+    * The manifest is read BEFORE the dir listing, so every dir it
+    * names was written before the listing ran; a live dir removed out
+    * of band reads as absent, as a plain dir removed from a listing
+    * always did (verification then reports its chunk and a re-copy
+    * repairs it). `prune` narrows the live refs before any file
+    * listing — a time range's overlap test. When no live ref is left
+    * the read is schema-only empty, anchored on any chunk dir still on
+    * disk (live or graced residue), so an all-deleted measurement
+    * stays queryable while its residue drains. */
+  def storedFrame(spark: SparkSession, path: String,
+      schema: Option[StructType] = None,
+      prune: ChunkRef => Boolean = _ => true): DataFrame = {
+    val fs = hfs(spark, path)
+    val st = read(fs, path)
+    val onDisk = chunkDirs(fs, path)
+    val present = onDisk.toSet
+    val (live, residue) = st match {
+      case Some(m) => (m.live.filter(r => present(r.dir)),
+        m.retired.map(_.dir).filter(present))
+      case None => (adopt(onDisk).live, Seq.empty[String])
+    }
+    if (st.isEmpty && onDisk.isEmpty) spark.read.parquet(path)
     else {
-      val fs = hfs(spark, path)
-      val retired = read(fs, path).map(_.retired).getOrElse(Seq.empty)
-        // a retired dir can be physically gone while still listed
-        // (crash between a commit's deletes and the next sweep) —
-        // only an EXISTING dir can serve as the schema anchor
-        .filter(r => fs.exists(new Path(s"$path/${r.dir}")))
-      retired.headOption match {
-        case Some(r) =>
-          spark.read.parquet(s"$path/${r.dir}").where(lit(false))
-            .withColumn("__bucket", lit(null).cast("string"))
+      val hit = live.filter(prune)
+      if (hit.nonEmpty) snapshotFrame(spark, path, hit.map(_.dir), schema)
+      else (live.map(_.dir) ++ residue).headOption match {
+        case Some(d) => snapshotFrame(spark, path, Seq(d)).where(lit(false))
         case None => throw new IllegalStateException(
           s"measurement $path has no live chunks and no graced " +
             "residue to read a schema from")
       }
     }
+  }
 
-  /** [[snapshotFrame]] over ALL live refs when manifested, else None. */
-  def snapshotRead(spark: SparkSession, path: String,
-      schema: Option[StructType] = None): Option[DataFrame] =
-    snapshotRefs(spark, path).map(snapshotFrame(spark, path, _, schema))
+  /** [[storedFrame]] without the `__bucket` partition column: the read
+    * every consumer of a stored measurement's rows goes through. */
+  def readStored(spark: SparkSession, path: String,
+      schema: Option[StructType] = None,
+      prune: ChunkRef => Boolean = _ => true): DataFrame =
+    storedFrame(spark, path, schema, prune).drop("__bucket")
 }

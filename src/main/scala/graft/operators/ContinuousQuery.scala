@@ -65,7 +65,7 @@ final class ContinuousQuery(spark: SparkSession) {
       rewindToNs: Option[Long] = None,
       // retirement grace for replaced bucket generations — size to
       // the longest served query, like every ChunkManifest writer
-      graceMs: Long = 300000L): (Long, Long) = {
+      graceMs: Long = ChunkManifest.DefaultGraceMs): (Long, Long) = {
     require(bucketNs > 0, s"bucketNs must be positive: $bucketNs")
     require(resampleNs >= 0, s"resampleNs must be >= 0: $resampleNs")
     Tables.ensureNsConf(spark)
@@ -78,15 +78,12 @@ final class ContinuousQuery(spark: SparkSession) {
         math.min(lookbackFrom, floorBucket(math.max(r, 0L), bucketNs))
       case _ => lookbackFrom
     }
-    // the raw measurement may be snapshot-managed (the /write plane
-    // bootstraps a ChunkManifest): resolve the manifest so a refresh
+    // the raw measurement resolves like every stored read: a refresh
     // racing a concurrent upsert reads a pinned LIVE-generation
     // listing — exact under grace, never FILE_NOT_EXIST. The /write
     // that triggered a rewind committed its manifest before
     // returning, so the drained backfill is always visible here.
-    val raw = ChunkManifest.snapshotRead(spark, srcPath)
-      .map(_.drop("__bucket"))
-      .getOrElse(spark.read.parquet(srcPath))
+    val raw = ChunkManifest.readStored(spark, srcPath)
     val t = Tables.nsCol(raw, timeCol)
     val recent = raw.filter(
       if (fromNs == Long.MinValue) lit(true)
@@ -157,7 +154,7 @@ final class ContinuousQuery(spark: SparkSession) {
               if (matchRefs.isEmpty) Set.empty
               else {
                 val existing = ChunkManifest.snapshotFrame(spark,
-                  dstPath, matchRefs)
+                  dstPath, matchRefs.map(_.dir))
                 val existingSums = ContinuousQuery.bucketIdentity(
                   existing.withColumn("__h",
                     xxhash64(outCols.map(col): _*)),
@@ -196,7 +193,7 @@ final class ContinuousQuery(spark: SparkSession) {
             val staged = fs.listStatus(stage).toSeq
               .filter(s => s.isDirectory &&
                 s.getPath.getName.startsWith("__bucket="))
-            val newRefs = inPool(math.min(8, staged.size), staged) {
+            val newRefs = CopyJob.inParallel(8, staged) {
               s =>
                 val n = s.getPath.getName
                 ChunkManifest.spanOf(n).map { case (bs, be) =>
@@ -230,30 +227,6 @@ final class ContinuousQuery(spark: SparkSession) {
     } finally rolled.unpersist(): Unit
   }
 
-  /** Bounded-pool map over independent FS operations (the CopyJob
-    * worker-pool discipline): used for the promote renames, which
-    * touch distinct names and stack pure metadata latency when run
-    * driver-sequentially on a remote FS. */
-  private def inPool[A, B](workers: Int, items: Seq[A])(f: A => B)
-      : Seq[B] = {
-    if (items.size <= 1 || workers <= 1) return items.map(f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(workers, items.size))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks = items.map { a =>
-        new java.util.concurrent.Callable[B] { def call(): B = f(a) }
-      }
-      pool.invokeAll(tasks.asJava).asScala.map { fut =>
-        try fut.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
-      }.toSeq
-    } finally pool.shutdown()
-  }
-
   /** One-time adoption of a pre-r21 rollup layout: every legacy
     * `__cq_bucket=<v>` partition dir becomes a span-named gen-0 dir
     * `__bucket=<v>_<v+bucketNs>` (metadata-only renames, no data
@@ -276,14 +249,14 @@ final class ContinuousQuery(spark: SparkSession) {
   }
 
   /** Read the downsampled measurement (one row per bucket × series;
-    * `bucket_ns` = the bucket's start). Snapshot-managed rollups
-    * resolve through the manifest (pinned listing — a concurrent
-    * refresh can never yank a file from under the read); the legacy
-    * plain `__cq_bucket=` layout reads as before. */
+    * `bucket_ns` = the bucket's start). Resolved like every stored
+    * read (pinned listing — a concurrent refresh can never yank a file
+    * from under the read), keeping the `__bucket` span the bucket
+    * start comes from; the legacy plain `__cq_bucket=` layout reads as
+    * before. */
   def readRollup(dstPath: String): DataFrame = {
     Tables.ensureNsConf(spark)
-    val base = ChunkManifest.snapshotRead(spark, dstPath)
-      .getOrElse(spark.read.parquet(dstPath))
+    val base = ChunkManifest.storedFrame(spark, dstPath)
     if (base.columns.contains("__bucket"))
       // generation dirs are span-named `<s>_<e>_g<n>`: the bucket
       // start is the first `_`-token of the partition value

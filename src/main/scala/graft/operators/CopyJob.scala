@@ -24,10 +24,14 @@ import org.apache.spark.sql.functions._
   *    (SyncDBRP, sync.go:215-232);
   *  - idempotent re-copy: InfluxDB upserts points by (series, ts), making
   *    blind re-copy of a window safe (hacluster.go:305-342). Parquet
-  *    appends are not idempotent, so the sink partitions output by chunk
-  *    bucket and uses dynamic partition overwrite — re-copying a window
-  *    replaces exactly that window's partitions (SURVEY.md §7.3 hard
-  *    part 4). This also gives time-partition pruning on read at scale.
+  *    appends are not idempotent, so every chunk lands in a fresh
+  *    generation dir and ONE [[ChunkManifest]] commit per measurement
+  *    replaces what the copied window held: refs inside a written span
+  *    retire, refs straddling one are rewritten without the overlapped
+  *    rows (SURVEY.md §7.3 hard part 4). Replaced generations retire in
+  *    place, so a re-copy into a served measurement (the HA recovery)
+  *    never pulls a file from under a pinned reader. The span-keyed refs
+  *    also give time pruning on read at scale.
   *
   * Scale posture: no driver materialization (the reference buffers whole
   * chunks in RAM, client.go:348-484 — we never do); each chunk×measurement
@@ -58,7 +62,7 @@ object CopyJob {
       // pinned listing is younger than the grace finishes cleanly.
       // Size to the longest served query (the index epochs'
       // retire-grace contract).
-      chunkGraceMs: Long = 300000L)
+      chunkGraceMs: Long = ChunkManifest.DefaultGraceMs)
 
   /** Destination RP name after the default-RP rename (README.md:259-261:
     * only the default RP can be renamed). The ONE place the rule lives —
@@ -86,6 +90,32 @@ object CopyJob {
       val dst = s"$dstRoot/${db.targetName}/${rpOut(db, rp)}/${m.name}.parquet"
       (src, dst)
     }
+
+  /** Map `f` over `items` on a fixed pool of at most `workers` threads
+    * (driver-side overlap of independent Spark jobs or FS operations);
+    * one item or one worker runs inline. */
+  private[operators] def inParallel[A, B](workers: Int, items: Seq[A])(
+      f: A => B): Seq[B] = {
+    if (items.size <= 1 || workers <= 1) return items.map(f)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(workers, items.size))
+    try {
+      import scala.jdk.CollectionConverters._
+      val tasks = items.map { a =>
+        new java.util.concurrent.Callable[B] { def call(): B = f(a) }
+      }
+      // unwrap ExecutionException: a task's require(...) refusal must
+      // surface to callers with its ORIGINAL type and message (the
+      // /write 400 body renders e.getMessage; the wrapper's is noise)
+      pool.invokeAll(tasks.asJava).asScala.map { fut =>
+        try fut.get()
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            throw Option(e.getCause).getOrElse(e)
+        }
+      }.toSeq
+    } finally pool.shutdown()
+  }
 }
 
 final class CopyJob(
@@ -93,7 +123,7 @@ final class CopyJob(
     // test seams for fault injection (FIXTURES.md §B.6)
     readHook: (ChunkSpec, String) => Unit = (_, _) => (),
     writeHook: (ChunkSpec, String) => Unit = (_, _) => ()) {
-  import CopyJob.Config
+  import CopyJob.{Config, inParallel}
 
   /** Retry one phase within the reference's budget (try.go:15-30, applied
     * independently to the read and the write path — client.go:363-381 and
@@ -115,8 +145,10 @@ final class CopyJob(
     (out, if (out.isEmpty) tries.toLong else 0L)
   }
 
-  /** Copy one measurement's chunk: scan `[s,e)` → overwrite that bucket
-    * partition of the sink. Read and write phases carry separate retry
+  /** Copy one measurement's chunk: scan `[s,e)` → write it whole into
+    * the generation dir `dir`, unpublished until the caller's manifest
+    * commit (a retry rewrites the same dir; a crash leaves an orphan the
+    * next commit sweeps). Read and write phases carry separate retry
     * budgets and separate error counters, mirroring the reference's
     * independent ReadDB / WriteDB retries (client.go:363-381, 541-557;
     * counted into ChunkReport at sync.go:151-153,166,175). The scan is
@@ -125,45 +157,31 @@ final class CopyJob(
     * into the write job and any runtime failure there counts as a write
     * failure — the price of not buffering chunks in driver RAM like the
     * reference does (client.go:348-484). */
-  def copyChunk(
+  private def copyChunk(
       srcPath: String,
       dstPath: String,
       chunk: ChunkSpec,
+      dir: String,
       cfg: Config): ChunkResult = {
     val t0 = System.currentTimeMillis()
 
     def readPhase(): DataFrame = {
       readHook(chunk, srcPath)
       Tables.ensureNsConf(spark)
-      val src = spark.read.parquet(srcPath)
-      Tables
-        .timeRange(src, cfg.timeCol, chunk.startNs, chunk.endNs,
-          cfg.strictReferenceBounds)
-        // partition key = the chunk's [start,end) span, NOT a ts-derived
-        // bucket: recovery re-runs a window at chunk/10 granularity, and
-        // every (re-)write of a chunk must replace exactly that chunk's
-        // partition and nothing else. After a successful write, stale
-        // partitions strictly contained in this span (left by an earlier
-        // finer-grained recovery) are dropped — their rows are a subset
-        // of what was just written.
-        .withColumn("__bucket", lit(s"${chunk.startNs}_${chunk.endNs}"))
+      Tables.timeRange(spark.read.parquet(srcPath), cfg.timeCol,
+        chunk.startNs, chunk.endNs, cfg.strictReferenceBounds)
     }
 
     def writePhase(slice: DataFrame): Long = {
       writeHook(chunk, dstPath)
-      // Dynamic partition overwrite: only the buckets present in this
-      // slice are replaced → blind re-copy is idempotent. Point count
-      // rides the write via Observation (no second scan; the metric is
-      // collected from the write's own execution).
+      // point count rides the write via Observation (no second scan;
+      // the metric is collected from the write's own execution)
       val obs = org.apache.spark.sql.Observation()
       val writer = slice.observe(obs, count(lit(1)).as("n")).write
         .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__bucket")
       (if (cfg.maxPointsPerWrite > 0)
         writer.option("maxRecordsPerFile", cfg.maxPointsPerWrite)
-      else writer).parquet(dstPath)
-      dropContainedStalePartitions(dstPath, chunk)
+      else writer).parquet(s"$dstPath/$dir")
       obs.get("n").asInstanceOf[Long]
     }
 
@@ -176,42 +194,17 @@ final class CopyJob(
       System.currentTimeMillis() - t0)
   }
 
-  /** Remove partitions whose span is strictly contained in the chunk just
-    * written — leftovers of a finer-grained recovery pass that the new
-    * coarse write fully supersedes. Runs only after a successful write,
-    * so a failure never loses data (matching the safety of InfluxDB's
-    * never-deleting upsert). Uses the Hadoop FileSystem API so the sink
-    * works against any supported storage URI (local/HDFS/S3A), not just
-    * java.io — required for the 100 TB posture. */
-  private def dropContainedStalePartitions(
-      dstPath: String, chunk: ChunkSpec): Unit = {
-    val dir = new Path(dstPath)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return
-    fs.listStatus(dir)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("__bucket="))
-      .foreach { st =>
-        st.getPath.getName.stripPrefix("__bucket=").split('_') match {
-          case Array(s, e) =>
-            val (ps, pe) = (s.toLong, e.toLong)
-            val contained = ps >= chunk.startNs && pe <= chunk.endNs
-            val identical = ps == chunk.startNs && pe == chunk.endNs
-            if (contained && !identical) fs.delete(st.getPath, true): Unit
-          case _ => ()
-        }
-      }
-  }
-
   /** Full copy of one measurement over a window: newest-first chunks,
     * then one recovery pass over bad chunks at chunk/recoveryFactor
-    * (SyncDBRP semantics, sync.go:215-232), then a driver-side trim pass
+    * (SyncDBRP semantics, sync.go:215-232), then ONE manifest commit
     * making the copy upsert-idempotent for ARBITRARY windows: any
-    * pre-existing partition partially overlapping a newly-written span is
+    * pre-existing chunk partially overlapping a newly-written span is
     * rewritten without the overlapped rows. InfluxDB gets this for free
-    * from point upsert (same series+ts overwrites); span-keyed partition
-    * overwrite alone only handles exact-span re-copies, and the HA
-    * recovery window `[lastOK − interval, now]` (hacluster.go:310,321)
-    * never aligns with the original copy's chunk grid. */
+    * from point upsert (same series+ts overwrites); replacing
+    * span-identical chunks alone only handles exact-span re-copies, and
+    * the HA recovery window `[lastOK − interval, now]`
+    * (hacluster.go:310,321) never aligns with the original copy's chunk
+    * grid. */
   def copyMeasurement(
       srcPath: String,
       dstPath: String,
@@ -245,190 +238,144 @@ final class CopyJob(
   /** Small-file compaction of a copied dataset — the operational pass a
     * chunked sink needs at scale: retries, fine-grained recovery
     * (chunk/10 writes), and maxPointsPerWrite splitting all leave
-    * partitions holding many small parquet files, and at 100 TB the
-    * file count — not the byte count — becomes the scan/list/commit
-    * bottleneck. Each chunk partition holding more than
-    * `maxFilesPerPartition` data files is rewritten in place
-    * (crash-safe swap, same machinery as the trim pass) coalesced to
-    * one file per `targetRowsPerFile` rows; compliant partitions are
-    * NOT touched (no read, no write — the steady-state nightly run is
-    * a file listing). Content is bit-identical (spec-pinned via the
+    * chunks holding many small parquet files, and at 100 TB the file
+    * count — not the byte count — becomes the scan/list/commit
+    * bottleneck. Each live chunk holding more than
+    * `maxFilesPerPartition` data files is rewritten into a new
+    * generation coalesced to one file per `targetRowsPerFile` rows and
+    * the old one retired (grace `cfg.chunkGraceMs`); compliant chunks
+    * are NOT touched (no read, no write — the steady-state nightly run
+    * is a file listing). Content is bit-identical (spec-pinned via the
     * order-independent checksum). Returns (compacted spans, files
     * before, files after). */
-  def compact(dstPath: String, targetRowsPerFile: Long = 1000000L,
-      maxFilesPerPartition: Int = 1,
-      chunkGraceMs: Long = 300000L): Seq[((Long, Long), Int, Int)] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs0 = hadoopFs(dstPath)
-    // lock FIRST, re-check exists() inside the monitor: the old
-    // exists-then-lock order raced a concurrent first /write
-    // bootstrapping a manifest between the check and a plain-path
-    // mutation, and the plain-layout branch ran with no lock at all
-    // (r20 adviser, medium) — both branches now hold the monitor
+  def compact(dstPath: String, cfg: Config,
+      targetRowsPerFile: Long = 1000000L,
+      maxFilesPerPartition: Int = 1): Seq[((Long, Long), Int, Int)] = {
+    val fs = hadoopFs(dstPath)
     ChunkManifest.lockFor(dstPath).synchronized {
-      if (ChunkManifest.exists(fs0, dstPath)) {
-        val st = ChunkManifest.read(fs0, dstPath).get
-        var gen = st.gen
-        var retiredDirs = Seq.empty[String]
-        var newRefs = Seq.empty[ChunkManifest.ChunkRef]
-        val out = st.live.flatMap { r =>
-          val partDir = new Path(s"$dstPath/${r.dir}")
-          def files(p: Path): Int = fs0.listStatus(p).count(s =>
-            s.isFile && s.getPath.getName.endsWith(".parquet"))
-          val before = files(partDir)
-          if (before <= maxFilesPerPartition) None
-          else {
-            Tables.ensureNsConf(spark)
-            val rows = spark.read.parquet(partDir.toString)
-            val nOut = math.max(1L, math.ceil(
-              rows.count().toDouble / targetRowsPerFile).toLong)
-            gen += 1
-            val nd = ChunkManifest.dirName(r.startNs, r.endNs, gen)
-            rows.coalesce(nOut.toInt).write.mode("overwrite")
-              .parquet(s"$dstPath/$nd")
-            newRefs :+= ChunkManifest.ChunkRef(nd, r.startNs, r.endNs)
-            retiredDirs :+= r.dir
-            Some(((r.startNs, r.endNs), before,
-              files(new Path(s"$dstPath/$nd"))))
-          }
-        }
-        commitChunkMutation(dstPath, st, gen, newRefs, retiredDirs,
-          chunkGraceMs)
-        out
-      } else listBucketSpans(dstPath).flatMap { case (ps, pe) =>
-        val partDir = new Path(s"$dstPath/__bucket=${ps}_$pe")
-        val fs = partDir.getFileSystem(conf)
-        def dataFiles(): Int = fs.listStatus(partDir)
-          .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        val before = dataFiles()
-        if (before <= maxFilesPerPartition) None
-        else {
-          Tables.ensureNsConf(spark)
-          val rows = spark.read.parquet(partDir.toString)
-          val nOut = math.max(1L,
-            math.ceil(rows.count().toDouble / targetRowsPerFile).toLong)
-          swapPartitionContents(dstPath, ps, pe,
-            rows.coalesce(nOut.toInt), "compact")
-          Some(((ps, pe), before, dataFiles()))
-        }
+      val st = state(fs, dstPath)
+      val present = ChunkManifest.chunkDirs(fs, dstPath).toSet
+      def files(dir: String): Int =
+        fs.listStatus(new Path(s"$dstPath/$dir")).count(s =>
+          s.isFile && s.getPath.getName.endsWith(".parquet"))
+      val oversized = st.live.filter(r => present(r.dir))
+        .map(r => (r, files(r.dir)))
+        .filter(_._2 > maxFilesPerPartition)
+      val out = oversized.zipWithIndex.map { case ((r, before), i) =>
+        Tables.ensureNsConf(spark)
+        val rows = spark.read.parquet(s"$dstPath/${r.dir}")
+        val nOut = math.max(1L, math.ceil(
+          rows.count().toDouble / targetRowsPerFile).toLong)
+        val nd = ChunkManifest.dirName(r.startNs, r.endNs, st.gen + i + 1)
+        rows.coalesce(nOut.toInt).write.mode("overwrite")
+          .parquet(s"$dstPath/$nd")
+        (ChunkManifest.ChunkRef(nd, r.startNs, r.endNs),
+          ((r.startNs, r.endNs), before, files(nd)))
       }
+      commitChunkMutation(dstPath, st, st.gen + oversized.size,
+        out.map(_._1), oversized.map(_._1.dir), cfg.chunkGraceMs)
+      out.map(_._2)
     }
   }
 
+  /** The copy body: every chunk is written into its own generation dir
+    * (gen numbers assigned up front, so the writes are independent),
+    * then one commit publishes them. The measurement lock is held
+    * throughout — the served plane's upserts wait, its readers keep
+    * their pinned snapshots. */
   private def copyChunkList(
       srcPath: String,
       dstPath: String,
       chunks: Seq[ChunkSpec],
       cfg: Config): SyncReport = {
-    // the batch copy sink addresses partitions by SPAN VALUE (dynamic
-    // overwrite) — on a snapshot-managed measurement that would split
-    // the layout across two naming schemes the manifest no longer
-    // describes. Restore the plain layout first (stop-the-world; a
-    // full re-copy is outage repair, where the reference itself is
-    // not serving — SURVEY known-limits).
-    if (chunks.nonEmpty) {
-      val fs = hadoopFs(dstPath)
-      if (ChunkManifest.exists(fs, dstPath))
-        ChunkManifest.lockFor(dstPath).synchronized {
-          ChunkManifest.demanifest(fs, dstPath)
+    if (chunks.isEmpty) return SyncReport(srcPath, dstPath, Nil)
+    val fs = hadoopFs(dstPath)
+    ChunkManifest.lockFor(dstPath).synchronized {
+      val st = state(fs, dstPath)
+      // newest-first submission over a bounded worker pool — the Spark
+      // scheduler interleaves the per-chunk jobs, replacing the
+      // reference's per-chunk workerpool (sync.go:141-183)
+      def pass(cs: Seq[ChunkSpec], gen0: Long)
+          : Seq[(ChunkResult, String)] =
+        inParallel(cfg.numWorkers, cs.zipWithIndex) { case (c, i) =>
+          val dir = ChunkManifest.dirName(c.startNs, c.endNs, gen0 + i + 1)
+          (copyChunk(srcPath, dstPath, c, dir, cfg), dir)
         }
+      val firstPass = pass(chunks, st.gen)
+      val fine = firstPass.filterNot(_._1.ok).flatMap { case (r, _) =>
+        ChunkPlanner.plan(r.chunk.startNs, r.chunk.endNs,
+          math.max(1L, cfg.chunkNs / cfg.recoveryFactor))
+      }
+      val all = firstPass ++ pass(fine, st.gen + chunks.size)
+      commitCopy(dstPath, st, st.gen + chunks.size + fine.size,
+        all.filter(_._1.ok), cfg)
+      SyncReport(srcPath, dstPath, all.map(_._1))
     }
-    val preexisting = listBucketSpans(dstPath)
-    // newest-first submission over a bounded worker pool — the Spark
-    // scheduler interleaves the per-chunk jobs, replacing the reference's
-    // per-chunk workerpool (sync.go:141-183). Chunks write disjoint
-    // partitions, so concurrent commits don't conflict.
-    val firstPass = inParallel(cfg.numWorkers, chunks)(
-      c => copyChunk(srcPath, dstPath, c, cfg))
-    val bad = firstPass.filterNot(_.ok).map(_.chunk)
-    val recovery = bad.flatMap { c =>
-      val fine = ChunkPlanner.plan(c.startNs, c.endNs,
-        math.max(1L, cfg.chunkNs / cfg.recoveryFactor))
-      inParallel(cfg.numWorkers, fine)(
-        f => copyChunk(srcPath, dstPath, f, cfg))
-    }
-    val all = firstPass ++ recovery
-    trimOverlappingStalePartitions(dstPath, preexisting,
-      all.filter(_.ok).map(r => (r.chunk.startNs, r.chunk.endNs)), cfg)
-    SyncReport(srcPath, dstPath, all)
   }
 
   private def hadoopFs(path: String): org.apache.hadoop.fs.FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
-  private def listBucketSpans(dstPath: String): Seq[(Long, Long)] = {
-    val dir = new Path(dstPath)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("__bucket="))
-      .flatMap(_.getPath.getName.stripPrefix("__bucket=").split('_') match {
-        case Array(s, e) => Try((s.toLong, e.toLong)).toOption
-        case _           => None
-      })
-  }
-
-  /** The measurement's live chunk refs: the manifest's when
-    * snapshot-managed ([[ChunkManifest]]), the plain `__bucket=<s>_<e>`
-    * listing otherwise (dir name = span, the pre-manifest layout). */
-  private def liveChunkRefs(dstPath: String)
-      : Seq[ChunkManifest.ChunkRef] =
-    ChunkManifest.read(hadoopFs(dstPath), dstPath) match {
-      case Some(st) => st.live
-      case None => listBucketSpans(dstPath).map { case (s, e) =>
-        ChunkManifest.ChunkRef(s"__bucket=${s}_$e", s, e)
-      }
-    }
+  /** The measurement's committed manifest, or its plain layout adopted
+    * ([[ChunkManifest.bootstrap]]) — the state every mutator starts
+    * from; the mutation's own commit makes an adoption durable. Caller
+    * holds the measurement lock. */
+  private def state(fs: org.apache.hadoop.fs.FileSystem, dstPath: String)
+      : ChunkManifest.State =
+    ChunkManifest.read(fs, dstPath)
+      .getOrElse(ChunkManifest.bootstrap(fs, dstPath))
 
   /** Commit one mutation's manifest delta under the measurement lock
     * (held by the caller): retire `retiredDirs` in place (grace-
     * stamped, physically deleted by a later commit's sweep), publish
     * `newRefs`, advance the generation counter, and sweep expired
-    * residue + crashed-write orphans. */
+    * residue + crashed-write orphans. A mutation that changed nothing
+    * commits nothing, so no manifest appears on a path it left alone
+    * (a flat parquet dir, a plain layout with nothing to do). */
   private def commitChunkMutation(dstPath: String,
       st: ChunkManifest.State, gen: Long,
       newRefs: Seq[ChunkManifest.ChunkRef],
       retiredDirs: Seq[String], graceMs: Long): Unit =
-    ChunkManifest.commitMutation(hadoopFs(dstPath), dstPath, st, gen,
-      newRefs, retiredDirs, graceMs): Unit
+    if (newRefs.nonEmpty || retiredDirs.nonEmpty)
+      ChunkManifest.commitMutation(hadoopFs(dstPath), dstPath, st, gen,
+        newRefs, retiredDirs, graceMs): Unit
 
-  /** Post-pass of copyMeasurement (runs AFTER the parallel chunk
-    * writes complete, so it cannot race them): every pre-existing
-    * partition that a newly-written span overlaps — but is not
-    * identical to — is rewritten keeping only rows outside all written
-    * spans (deleted if none remain; left byte-identical when every row
-    * already lies outside — a rewrite would replace identical
-    * content). Runs only over `written` = spans whose copy SUCCEEDED,
-    * so a failed chunk never causes data loss in old partitions.
-    * Bounded work: only partitions at the window boundary or of a
-    * different chunk granularity qualify, and each is at most one
-    * chunk of rows.
+  /** The commit of one copy (runs AFTER the parallel chunk writes
+    * complete, so it cannot race them), over `written` = the chunks
+    * whose copy SUCCEEDED — a failed chunk never causes data loss in
+    * old generations:
+    *  - a chunk that copied points is published as a new ref; an empty
+    *    one publishes nothing (its dir is an orphan the commit sweeps);
+    *  - every pre-existing live ref INSIDE a written span retires — its
+    *    rows are a subset of what was just written;
+    *  - every pre-existing ref STRADDLING a written span is rewritten
+    *    into a new generation keeping only rows outside all written
+    *    spans (retired if none remain; left as is when every row
+    *    already lies outside). Bounded work: only refs at the window
+    *    boundary or of a different chunk granularity straddle, and each
+    *    is at most one chunk of rows.
     *
     * Scale shape (r22, guide §2.4/§2.6 — the deleteWhere treatment):
     * ONE classification job counts (remaining, total) rows per
-    * qualifying dir via `input_file_name`; rewrites run over the
-    * bounded worker pool (disjoint dirs). Was: a driver-SEQUENTIAL
-    * isEmpty probe + rewrite per partition — a pathological
-    * all-overlapping re-copy serialized O(partitions) two-job
-    * rounds. */
-  private def trimOverlappingStalePartitions(
-      dstPath: String,
-      preexisting: Seq[(Long, Long)],
-      written: Seq[(Long, Long)],
-      cfg: Config): Unit = {
-    if (written.isEmpty) return
-    val writtenSet = written.toSet
-    val fs = hadoopFs(dstPath)
-    val qualifying = preexisting.filter { case (ps, pe) =>
-      !writtenSet.contains((ps, pe)) &&
-        written.exists { case (ws, we) => ws < pe && ps < we } &&
-        // may be gone via contained-drop already
-        fs.exists(new Path(s"$dstPath/__bucket=${ps}_$pe"))
+    * straddling dir via `input_file_name`; rewrites run over the
+    * bounded worker pool (disjoint dirs). A straddling dir removed out
+    * of band counts as empty and retires. */
+  private def commitCopy(dstPath: String, st: ChunkManifest.State,
+      gen: Long, written: Seq[(ChunkResult, String)], cfg: Config): Unit = {
+    val spans = written.map { case (r, _) => (r.chunk.startNs, r.chunk.endNs) }
+    val published = written.collect { case (r, d) if r.points > 0 =>
+      ChunkManifest.ChunkRef(d, r.chunk.startNs, r.chunk.endNs)
     }
-    if (qualifying.isEmpty) return
+    def inside(r: ChunkManifest.ChunkRef): Boolean =
+      spans.exists { case (ws, we) => ws <= r.startNs && r.endNs <= we }
+    val contained = st.live.filter(inside)
+    val straddling = st.live.filter(r => !inside(r) &&
+      spans.exists { case (ws, we) => ws < r.endNs && r.startNs < we })
+    val present = ChunkManifest.chunkDirs(hadoopFs(dstPath), dstPath).toSet
+    val readable = straddling.filter(r => present(r.dir))
     Tables.ensureNsConf(spark)
     def outsideOf(part: DataFrame): Column =
-      written.map { case (ws, we) =>
+      spans.map { case (ws, we) =>
         if (cfg.strictReferenceBounds)
           !(Tables.nsAfter(part, cfg.timeCol, ws) &&
             Tables.nsBefore(part, cfg.timeCol, we))
@@ -436,57 +383,38 @@ final class CopyJob(
           !(Tables.nsAtLeast(part, cfg.timeCol, ws) &&
             Tables.nsBefore(part, cfg.timeCol, we))
       }.reduce(_ && _)
-    val all = spark.read.parquet(qualifying.map { case (ps, pe) =>
-      s"$dstPath/__bucket=${ps}_$pe" }: _*)
-    val counts = all
-      .groupBy(element_at(split(input_file_name(), "/"), -2)
-        .as("__dir"))
-      .agg(sum(when(outsideOf(all), 1L).otherwise(0L)).as("r"),
-        count(lit(1)).as("t"))
-      .collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
+    val counts =
+      if (readable.isEmpty) Map.empty[String, (Long, Long)]
+      else {
+        val all = spark.read.parquet(
+          readable.map(r => s"$dstPath/${r.dir}"): _*)
+        all.groupBy(element_at(split(input_file_name(), "/"), -2)
+            .as("__dir"))
+          .agg(sum(when(outsideOf(all), 1L).otherwise(0L)).as("r"),
+            count(lit(1)).as("t"))
+          .collect()
+          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
+          .toMap
+      }
     // a dir absent from the counts held zero rows — nothing remains
-    def cls(ps: Long, pe: Long): (Long, Long) =
-      counts.getOrElse(s"__bucket=${ps}_$pe", (0L, 0L))
-    val toDelete = qualifying.filter { case (ps, pe) =>
-      cls(ps, pe)._1 == 0L
+    def cls(r: ChunkManifest.ChunkRef): (Long, Long) =
+      counts.getOrElse(r.dir, (0L, 0L))
+    val emptied = straddling.filter(cls(_)._1 == 0L)
+    val toRewrite = straddling.filter { r =>
+      val (k, t) = cls(r); k > 0L && k < t
     }
-    val toRewrite = qualifying.filter { case (ps, pe) =>
-      val (r, t) = cls(ps, pe); r > 0L && r < t
+    val rewritten = inParallel(cfg.numWorkers, toRewrite.zipWithIndex) {
+      case (r, i) =>
+        Tables.ensureNsConf(spark)
+        val part = spark.read.parquet(s"$dstPath/${r.dir}")
+        val nd = ChunkManifest.dirName(r.startNs, r.endNs, gen + i + 1)
+        part.filter(outsideOf(part)).write.mode("overwrite")
+          .parquet(s"$dstPath/$nd")
+        ChunkManifest.ChunkRef(nd, r.startNs, r.endNs)
     }
-    toDelete.foreach { case (ps, pe) =>
-      fs.delete(new Path(s"$dstPath/__bucket=${ps}_$pe"), true): Unit
-    }
-    inParallel(cfg.numWorkers, toRewrite) { case (ps, pe) =>
-      Tables.ensureNsConf(spark)
-      val part = spark.read.parquet(s"$dstPath/__bucket=${ps}_$pe")
-      swapPartitionContents(dstPath, ps, pe,
-        part.filter(outsideOf(part)), "trim")
-    }: Unit
-  }
-
-  /** Crash-safe partition rewrite: write tmp, move current aside,
-    * promote tmp, drop the backup. Any crash leaves the rows in either
-    * the live dir or the .bak dir (both recoverable); rename results
-    * are CHECKED so a failing object-store rename surfaces as an error
-    * instead of silent row loss. */
-  private def swapPartitionContents(dstPath: String, ps: Long, pe: Long,
-      remaining: DataFrame, tag: String,
-      targetSpan: Option[(Long, Long)] = None): Unit = {
-    val partDir = new Path(s"$dstPath/__bucket=${ps}_$pe")
-    val (ts, te) = targetSpan.getOrElse((ps, pe))
-    val target = new Path(s"$dstPath/__bucket=${ts}_$te")
-    val fs = partDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new Path(s"$dstPath/.${tag}_${ps}_$pe")
-    val bak = new Path(s"$dstPath/.bak_${ps}_$pe")
-    remaining.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(bak, true)
-    require(fs.rename(partDir, bak),
-      s"$tag: cannot move $partDir aside")
-    require(fs.rename(tmp, target),
-      s"$tag: cannot promote $tmp (rows preserved in $bak)")
-    fs.delete(bak, true): Unit
+    commitChunkMutation(dstPath, st, gen + toRewrite.size,
+      published ++ rewritten, (contained ++ emptied ++ toRewrite).map(_.dir),
+      cfg.chunkGraceMs)
   }
 
   /** Retention-policy enforcement over a copied dataset — executing the
@@ -495,97 +423,63 @@ final class CopyJob(
     * leaves enforcement to InfluxDB; a Spark-native store must do it
     * itself): drop every row with `timeCol` < cutoffNs.
     *
-    * Scale shape: a chunk partition entirely below the cutoff is
-    * deleted at the FILE-LISTING level — no data read, no shuffle, cost
-    * O(partitions) driver-side regardless of data volume (the common
-    * case: retention advances chunk by chunk, so expiry is almost
-    * always whole-chunk). At most the one partition STRADDLING the
-    * cutoff is rewritten (crash-safe swap), bounded by a single chunk
-    * of rows — and RENAMED to the clamped span `[cutoff, end)`, so the
-    * directory name stays truthful for `readCopiedRange` pruning and
-    * re-enforcing the same cutoff is a metadata-only no-op.
+    * Scale shape: a chunk entirely below the cutoff is retired at the
+    * MANIFEST level — no data read, no shuffle, cost O(chunks)
+    * driver-side regardless of data volume (the common case: retention
+    * advances chunk by chunk, so expiry is almost always whole-chunk).
+    * At most the one chunk STRADDLING the cutoff is rewritten, bounded
+    * by a single chunk of rows — into a generation of the clamped span
+    * `[cutoff, end)`, so the ref stays truthful for `readCopiedRange`
+    * pruning and re-enforcing the same cutoff is a metadata-only no-op.
     * Returns (droppedSpans, trimmedSpans, keptCount). */
   def enforceRetention(dstPath: String, cutoffNs: Long, cfg: Config)
       : (Seq[(Long, Long)], Seq[(Long, Long)], Int) = {
     val fs0 = hadoopFs(dstPath)
-    // lock-then-check (not check-then-lock), plain branch included —
-    // see [[compact]]; same r20-adviser TOCTOU
     ChunkManifest.lockFor(dstPath).synchronized {
-      if (ChunkManifest.exists(fs0, dstPath)) {
-        val st = ChunkManifest.read(fs0, dstPath).get
-        var gen = st.gen
-        var retiredDirs = Seq.empty[String]
-        var newRefs = Seq.empty[ChunkManifest.ChunkRef]
-        val (below, rest) = st.live.partition(_.endNs <= cutoffNs)
-        retiredDirs ++= below.map(_.dir) // expiry = manifest retire
-        var dropped = below.map(r => (r.startNs, r.endNs))
-        var trimmed = Seq.empty[(Long, Long)]
-        rest.filter(_.startNs < cutoffNs).foreach { r =>
-          Tables.ensureNsConf(spark)
-          val part = spark.read.parquet(s"$dstPath/${r.dir}")
-          val remaining =
-            part.filter(Tables.nsAtLeast(part, cfg.timeCol, cutoffNs))
-          if (remaining.isEmpty) {
-            retiredDirs :+= r.dir
-            dropped :+= ((r.startNs, r.endNs))
-          } else {
-            gen += 1
-            val nd = ChunkManifest.dirName(cutoffNs, r.endNs, gen)
-            remaining.write.mode("overwrite").parquet(s"$dstPath/$nd")
-            newRefs :+= ChunkManifest.ChunkRef(nd, cutoffNs, r.endNs)
-            retiredDirs :+= r.dir
-            trimmed :+= ((r.startNs, r.endNs))
-          }
+      val st = state(fs0, dstPath)
+      var gen = st.gen
+      var retiredDirs = Seq.empty[String]
+      var newRefs = Seq.empty[ChunkManifest.ChunkRef]
+      val (below, rest) = st.live.partition(_.endNs <= cutoffNs)
+      retiredDirs ++= below.map(_.dir) // expiry = manifest retire
+      var dropped = below.map(r => (r.startNs, r.endNs))
+      var trimmed = Seq.empty[(Long, Long)]
+      rest.filter(_.startNs < cutoffNs).foreach { r =>
+        Tables.ensureNsConf(spark)
+        val part = spark.read.parquet(s"$dstPath/${r.dir}")
+        val remaining =
+          part.filter(Tables.nsAtLeast(part, cfg.timeCol, cutoffNs))
+        // a straddling chunk whose ROWS all sit below the cutoff (its
+        // span over-covers its data) is a DROP, not a trim — report it
+        // as such, or '-action retention' would list a span as
+        // surviving that no longer exists
+        if (remaining.isEmpty) {
+          retiredDirs :+= r.dir
+          dropped :+= ((r.startNs, r.endNs))
+        } else {
+          gen += 1
+          val nd = ChunkManifest.dirName(cutoffNs, r.endNs, gen)
+          remaining.write.mode("overwrite").parquet(s"$dstPath/$nd")
+          newRefs :+= ChunkManifest.ChunkRef(nd, cutoffNs, r.endNs)
+          retiredDirs :+= r.dir
+          trimmed :+= ((r.startNs, r.endNs))
         }
-        commitChunkMutation(dstPath, st, gen, newRefs, retiredDirs,
-          cfg.chunkGraceMs)
-        (dropped, trimmed, st.live.size - dropped.size)
-      } else {
-        val spans = listBucketSpans(dstPath)
-        val conf = spark.sessionState.newHadoopConf()
-        val (below, rest) =
-          spans.partition { case (_, pe) => pe <= cutoffNs }
-        below.foreach { case (ps, pe) =>
-          val dir = new Path(s"$dstPath/__bucket=${ps}_$pe")
-          dir.getFileSystem(conf).delete(dir, true): Unit
-        }
-        // a straddling partition whose ROWS all sit below the cutoff
-        // (its span over-covers its data) is a DROP, not a trim —
-        // report it as such, or '-action retention' would list a span
-        // as surviving that no longer exists
-        var dropped = below
-        var trimmed = Seq.empty[(Long, Long)]
-        rest.filter { case (ps, _) => ps < cutoffNs }.foreach {
-          case (ps, pe) =>
-            Tables.ensureNsConf(spark)
-            val partDir = new Path(s"$dstPath/__bucket=${ps}_$pe")
-            val fs = partDir.getFileSystem(conf)
-            val part = spark.read.parquet(partDir.toString)
-            val remaining =
-              part.filter(Tables.nsAtLeast(part, cfg.timeCol, cutoffNs))
-            if (remaining.isEmpty) {
-              fs.delete(partDir, true): Unit
-              dropped :+= ((ps, pe))
-            } else {
-              swapPartitionContents(dstPath, ps, pe, remaining,
-                "retention", targetSpan = Some((cutoffNs, pe)))
-              trimmed :+= ((ps, pe))
-            }
-        }
-        (dropped, trimmed, spans.size - dropped.size)
       }
+      commitChunkMutation(dstPath, st, gen, newRefs, retiredDirs,
+        cfg.chunkGraceMs)
+      (dropped, trimmed, st.live.size - dropped.size)
     }
   }
 
   /** Predicate deletion over a copied dataset — `DELETE FROM m WHERE
     * tag='x' [AND time …]` — the upsert-idempotence discipline applied
-    * to removal. Only chunk partitions INTERSECTING `[startNs, endNs)`
-    * are even read; each is rewritten via the crash-safe swap keeping
-    * rows NOT matching (`cond` AND in-range), becomes a whole-chunk
-    * drop if nothing survives, and — the idempotence tell — is left
-    * PHYSICALLY UNTOUCHED when nothing matches (re-running the same
-    * DELETE is a metadata-only no-op; CopyJobSpec pins file identity).
-    * SQL DELETE null semantics: a NULL predicate does not delete.
+    * to removal. Only chunks INTERSECTING `[startNs, endNs)` are even
+    * read; each is rewritten into a new generation keeping rows NOT
+    * matching (`cond` AND in-range), retires whole if nothing survives,
+    * and — the idempotence tell — is left PHYSICALLY UNTOUCHED when
+    * nothing matches (re-running the same DELETE is a metadata-only
+    * no-op; CopyJobSpec pins file identity). SQL DELETE null semantics:
+    * a NULL predicate does not delete.
     *
     * Scale shape (r21, guide §2.4/§2.6): ONE probe job classifies
     * every intersecting chunk — all candidate dirs read as a single
@@ -610,306 +504,188 @@ final class CopyJob(
           Tables.nsBefore(part, cfg.timeCol, endNs)
       coalesce(cond && inRange, lit(false))
     }
-    // ONE job over every candidate chunk dir: per-dir (matched rows,
-    // total rows). A dir absent from the result held zero rows —
-    // classified untouched, same as the old per-chunk isEmpty probe.
-    def probe(dirs: Seq[String]): Map[String, (Long, Long)] = {
-      if (dirs.isEmpty) return Map.empty
-      Tables.ensureNsConf(spark)
-      val part = spark.read.parquet(dirs.map(d => s"$dstPath/$d"): _*)
-      part
-        .groupBy(element_at(split(input_file_name(), "/"), -2)
-          .as("__dir"))
-        .agg(sum(when(toDeleteOf(part), 1L).otherwise(0L)).as("m"),
-          count(lit(1)).as("t"))
-        .collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap
-    }
-    // lock-then-check (not check-then-lock), plain branch included —
-    // see [[compact]]; same r20-adviser TOCTOU
     ChunkManifest.lockFor(dstPath).synchronized {
-      if (ChunkManifest.exists(fs0, dstPath)) {
-        val st = ChunkManifest.read(fs0, dstPath).get
-        val intersecting =
-          st.live.filter(r => r.endNs > startNs && r.startNs < endNs)
-        val counts = probe(intersecting.map(_.dir))
-        def cls(dir: String): (Long, Long) =
-          counts.getOrElse(dir, (0L, 0L))
-        // the idempotence tell survives snapshot mode: a chunk with
-        // NO matching rows keeps its generation dir byte-identical
-        // (no rewrite, no retire)
-        val toDrop = intersecting.filter { r =>
-          val (m, t) = cls(r.dir); m > 0 && m == t
-        }
-        val toRewrite = intersecting.filter { r =>
-          val (m, t) = cls(r.dir); m > 0 && m < t
-        }
-        // gen numbers assigned up front so the rewrites are
-        // independent; dir names only need uniqueness among survivors
-        val rw = inParallel(cfg.numWorkers, toRewrite.zipWithIndex) {
-          case (r, i) =>
-            Tables.ensureNsConf(spark)
-            val part = spark.read.parquet(s"$dstPath/${r.dir}")
-            val nd =
-              ChunkManifest.dirName(r.startNs, r.endNs, st.gen + i + 1)
-            part.filter(!toDeleteOf(part)).write.mode("overwrite")
-              .parquet(s"$dstPath/$nd")
-            ChunkManifest.ChunkRef(nd, r.startNs, r.endNs)
-        }
-        commitChunkMutation(dstPath, st, st.gen + toRewrite.size, rw,
-          (toDrop ++ toRewrite).map(_.dir), cfg.chunkGraceMs)
-        (toDrop.map(r => (r.startNs, r.endNs)),
-          toRewrite.map(r => (r.startNs, r.endNs)),
-          st.live.size - toDrop.size - toRewrite.size)
-      } else {
-        val spans = listBucketSpans(dstPath)
-        val conf = spark.sessionState.newHadoopConf()
-        val intersecting =
-          spans.filter { case (ps, pe) => pe > startNs && ps < endNs }
-        val counts =
-          probe(intersecting.map { case (ps, pe) => s"__bucket=${ps}_$pe" })
-        def cls(ps: Long, pe: Long): (Long, Long) =
-          counts.getOrElse(s"__bucket=${ps}_$pe", (0L, 0L))
-        val toDrop = intersecting.filter { case (ps, pe) =>
-          val (m, t) = cls(ps, pe); m > 0 && m == t
-        }
-        val toRewrite = intersecting.filter { case (ps, pe) =>
-          val (m, t) = cls(ps, pe); m > 0 && m < t
-        }
-        toDrop.foreach { case (ps, pe) =>
-          val partDir = new Path(s"$dstPath/__bucket=${ps}_$pe")
-          partDir.getFileSystem(conf).delete(partDir, true): Unit
-        }
-        inParallel(cfg.numWorkers, toRewrite) { case (ps, pe) =>
+      val st = state(fs0, dstPath)
+      val intersecting =
+        st.live.filter(r => r.endNs > startNs && r.startNs < endNs)
+      // ONE job over every candidate chunk dir: per-dir (matched rows,
+      // total rows). A dir absent from the result held zero rows —
+      // classified untouched.
+      val counts: Map[String, (Long, Long)] =
+        if (intersecting.isEmpty) Map.empty
+        else {
           Tables.ensureNsConf(spark)
-          val part =
-            spark.read.parquet(s"$dstPath/__bucket=${ps}_$pe")
-          swapPartitionContents(dstPath, ps, pe,
-            part.filter(!toDeleteOf(part)), "delete")
+          val part = spark.read.parquet(
+            intersecting.map(r => s"$dstPath/${r.dir}"): _*)
+          part
+            .groupBy(element_at(split(input_file_name(), "/"), -2)
+              .as("__dir"))
+            .agg(sum(when(toDeleteOf(part), 1L).otherwise(0L)).as("m"),
+              count(lit(1)).as("t"))
+            .collect()
+            .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
+            .toMap
         }
-        (toDrop, toRewrite,
-          spans.size - toDrop.size - toRewrite.size)
+      def cls(dir: String): (Long, Long) = counts.getOrElse(dir, (0L, 0L))
+      // a chunk with NO matching rows keeps its generation dir
+      // byte-identical (no rewrite, no retire)
+      val toDrop = intersecting.filter { r =>
+        val (m, t) = cls(r.dir); m > 0 && m == t
       }
+      val toRewrite = intersecting.filter { r =>
+        val (m, t) = cls(r.dir); m > 0 && m < t
+      }
+      // gen numbers assigned up front so the rewrites are
+      // independent; dir names only need uniqueness among survivors
+      val rw = inParallel(cfg.numWorkers, toRewrite.zipWithIndex) {
+        case (r, i) =>
+          Tables.ensureNsConf(spark)
+          val part = spark.read.parquet(s"$dstPath/${r.dir}")
+          val nd =
+            ChunkManifest.dirName(r.startNs, r.endNs, st.gen + i + 1)
+          part.filter(!toDeleteOf(part)).write.mode("overwrite")
+            .parquet(s"$dstPath/$nd")
+          ChunkManifest.ChunkRef(nd, r.startNs, r.endNs)
+      }
+      commitChunkMutation(dstPath, st, st.gen + toRewrite.size, rw,
+        (toDrop ++ toRewrite).map(_.dir), cfg.chunkGraceMs)
+      (toDrop.map(r => (r.startNs, r.endNs)),
+        toRewrite.map(r => (r.startNs, r.endNs)),
+        st.live.size - toDrop.size - toRewrite.size)
     }
   }
 
-  /** InfluxDB-style point UPSERT into a chunk-partitioned measurement:
-    * duplicate points merge as a FIELD-SET UNION per (series key,
-    * timestamp) — InfluxDB 1.x semantics: a field absent from the new
-    * point keeps its stored value; only conflicting fields take the
-    * newest write (per column: latest non-null wins). `incoming`
-    * carries the measurement's columns plus `orderCol` (the batch
-    * line index: later lines of one batch override earlier, InfluxDB's
-    * own behavior); existing rows rank below any incoming row.
+  /** InfluxDB-style point UPSERT into a chunked measurement: duplicate
+    * points merge as a FIELD-SET UNION per (series key, timestamp) —
+    * InfluxDB 1.x semantics: a field absent from the new point keeps
+    * its stored value; only conflicting fields take the newest write
+    * (per column: latest non-null wins). `incoming` carries the
+    * measurement's columns plus `orderCol` (the batch line index: later
+    * lines of one batch override earlier, InfluxDB's own behavior);
+    * existing rows rank below any incoming row.
     *
-    * Scale shape: only the chunk partitions the batch TOUCHES are
-    * read+rewritten (crash-safe swap, one chunk of rows each);
-    * batch-only chunks are plain writes; everything else is untouched
-    * at the file-listing level. A clamped/irregular existing span
-    * overlapping a touched grid bucket merges into the union span —
-    * the same span-truthfulness discipline retention uses.
+    * Scale shape: only the chunks the batch TOUCHES are read+rewritten
+    * (one chunk of rows each); batch-only chunks are plain writes;
+    * everything else is untouched at the file-listing level. Every
+    * write lands in a FRESH generation dir, replaced dirs are NOT
+    * touched (retired by the single manifest commit at the end), so
+    * concurrent manifest-pinned readers never lose a file under grace.
+    * A clamped/irregular existing span overlapping a touched grid
+    * bucket merges into the union span — the same span-truthfulness
+    * discipline retention uses.
     *
     * Returns (createdSpans, rewrittenSpans). */
   def upsertPoints(dstPath: String, incoming: DataFrame, cfg: Config,
-      keyCols: Seq[String], orderCol: String = "__line",
-      // true = adopt snapshot management on first write (bootstrap a
-      // [[ChunkManifest]] over the existing layout) — the serve
-      // plane's flag (WriteService passes it); a measurement already
-      // carrying a manifest is snapshot-managed regardless
-      serveSnapshot: Boolean = false)
+      keyCols: Seq[String], orderCol: String = "__line")
       : (Seq[(Long, Long)], Seq[(Long, Long)]) = {
     require(keyCols.nonEmpty, "upsert needs series key columns")
     Tables.ensureNsConf(spark)
     val fs0 = hadoopFs(dstPath)
-    // ONE writer per measurement across every manifested mutator
-    // (reentrant under WriteService's own per-path lock — it is the
-    // same monitor registry). Lock-then-check, plain branch included
-    // — see [[compact]]; same r20-adviser TOCTOU: a concurrent first
-    // /write could bootstrap a manifest between an exists() check
-    // made outside the monitor and this mutation
+    // ONE writer per measurement across every mutator (reentrant
+    // under WriteService's own per-path lock — it is the same monitor
+    // registry)
     ChunkManifest.lockFor(dstPath).synchronized {
-      if (serveSnapshot || ChunkManifest.exists(fs0, dstPath)) {
-        val st = ChunkManifest.read(fs0, dstPath)
-          .getOrElse(ChunkManifest.bootstrap(fs0, dstPath))
-        upsertInto(dstPath, incoming, cfg, keyCols, orderCol,
-          st.live, Some(st))
-      }
-      else upsertInto(dstPath, incoming, cfg, keyCols, orderCol,
-        liveChunkRefs(dstPath), None)
-    }
-  }
-
-  /** The upsert body over a resolved live-chunk set. Plain mode
-    * (state = None): chunk dirs are span-named and rewrites use the
-    * crash-safe move-aside swap — byte-identical to the pre-manifest
-    * behavior. Snapshot mode: every write lands in a FRESH generation
-    * dir, replaced dirs are NOT touched (retired by the single
-    * manifest commit at the end), so concurrent manifest-pinned
-    * readers never lose a file under grace. */
-  private def upsertInto(dstPath: String, incoming: DataFrame,
-      cfg: Config, keyCols: Seq[String], orderCol: String,
-      refs: Seq[ChunkManifest.ChunkRef],
-      state: Option[ChunkManifest.State])
-      : (Seq[(Long, Long)], Seq[(Long, Long)]) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val spans = refs.map(r => (r.startNs, r.endNs))
-    val refBySpan = refs.map(r => (r.startNs, r.endNs) -> r).toMap
-    // the grid continues the EXISTING layout's phase (copy layouts
-    // tile from the window start, not epoch-absolute) — anchored
-    // buckets land exactly on existing chunk boundaries, so an
-    // in-window point touches precisely its containing chunk
-    val anchor = spans.map(_._1).minOption.getOrElse(0L)
-    val t = Tables.nsCol(incoming, cfg.timeCol)
-    val withB = incoming
-      .withColumn("__bs",
-        (t - pmod(t - lit(anchor), lit(cfg.chunkNs))).cast("long"))
-      .cache()
-    try {
-      val buckets = withB.select(col("__bs")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      var created = Seq.empty[(Long, Long)]
-      var rewritten = Seq.empty[(Long, Long)]
-      val fullKey = keyCols :+ cfg.timeCol
-      // per-column latest-non-null over the duplicate group (field-set
-      // union): ONE shuffle on the high-cardinality (series, ts) key,
-      // K window projections inside it — same exchange budget as the
-      // former whole-row row_number, InfluxDB's merge semantics on top
-      def lastWins(df: DataFrame): DataFrame = {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(fullKey.map(col): _*)
-          .orderBy(col(orderCol).desc)
-        val wAll = w.rowsBetween(org.apache.spark.sql.expressions
-          .Window.unboundedPreceding, org.apache.spark.sql.expressions
-          .Window.unboundedFollowing)
-        val valueCols = df.columns
-          .filterNot(c => fullKey.contains(c) || c == orderCol)
-        val merged = valueCols.foldLeft(df) { (d, c) =>
-          d.withColumn(c, first(col(c), ignoreNulls = true).over(wAll))
-        }
-        merged.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .drop("__rn", orderCol)
-      }
-      // grid buckets overlapped by one merge group coalesce, so an
-      // irregular span straddling two batch buckets is read ONCE.
-      // Pass 1 builds the disjoint groups; pass 2 executes them IN
-      // PARALLEL — each group is one independent chunk rewrite (its
-      // own shuffle + swap), and running them sequentially charges
-      // the batch one full Spark-job latency per touched chunk (the
-      // r13 write-plane regression's real cost at bench scale; at
-      // 100 TB the concurrency is what keeps a wide batch's wall
-      // time at max-of-chunks, not sum-of-chunks)
-      var groups = Seq.empty[(Seq[Long], Long, Long, Seq[(Long, Long)])]
-      var remaining = buckets.toList
-      while (remaining.nonEmpty) {
-        val bs = remaining.head
-        var group = Seq(bs)
-        var (ts0, te0) = (bs, bs + cfg.chunkNs)
-        var overlapped = spans.filter { case (s, e) => s < te0 && e > ts0 }
-        var grew = true
-        while (grew) {
-          val ts1 = math.min(ts0, overlapped.map(_._1).minOption.getOrElse(ts0))
-          val te1 = math.max(te0, overlapped.map(_._2).maxOption.getOrElse(te0))
-          val more = remaining.tail.filter(b => b < te1 && b + cfg.chunkNs > ts1)
-            .filterNot(group.contains)
-          grew = ts1 != ts0 || te1 != te0 || more.nonEmpty
-          ts0 = ts1; te0 = te1; group = (group ++ more).distinct
-          overlapped = spans.filter { case (s, e) => s < te0 && e > ts0 }
-        }
-        remaining = remaining.filterNot(group.contains)
-        groups :+= ((group, ts0, te0, overlapped))
-      }
-      val genBase = state.map(_.gen).getOrElse(0L)
-      // per group: (span, isCreate, new manifest ref, retired dirs)
-      val results = inParallel(cfg.numWorkers, groups.zipWithIndex) {
-        case ((group, ts0, te0, overlapped), gi) =>
-        val slice = withB.filter(col("__bs").isin(group: _*)).drop("__bs")
-        // snapshot mode: every write gets a fresh generation dir —
-        // invisible to readers until the manifest commit below, so no
-        // tmp/rename dance is needed; a crash strands an orphan the
-        // next commit's sweep removes
-        val newDir = state.map(_ =>
-          ChunkManifest.dirName(ts0, te0, genBase + gi + 1))
-        if (overlapped.isEmpty) {
-          val target = newDir.getOrElse(s"__bucket=${ts0}_$te0")
-          lastWins(slice).write.mode("overwrite")
-            .parquet(s"$dstPath/$target")
-          ((ts0, te0), true,
-            newDir.map(ChunkManifest.ChunkRef(_, ts0, te0)),
-            Seq.empty[String])
-        } else {
-          val existing = overlapped.map { sp =>
-            spark.read.parquet(s"$dstPath/${refBySpan(sp).dir}")
-          }.reduce(_ unionByName _)
-            .withColumn(orderCol, lit(-1L)) // below any incoming line
-          val merged = lastWins(existing.unionByName(
-            slice.withColumn(orderCol, col(orderCol).cast("long"))))
-          newDir match {
-            case Some(d) =>
-              // replaced generations stay AT THEIR PATHS (retired by
-              // the commit, deleted only past grace) — the whole
-              // point: a pinned reader's listing never goes stale
-              merged.write.mode("overwrite").parquet(s"$dstPath/$d")
-              ((ts0, te0), false,
-                Some(ChunkManifest.ChunkRef(d, ts0, te0)),
-                overlapped.map(sp => refBySpan(sp).dir))
-            case None =>
-              // plain mode — crash-safe: write tmp, move EVERY
-              // overlapped dir aside, promote, then drop the backups
-              val tmp = new Path(s"$dstPath/.upsert_${ts0}_$te0")
-              val fs = tmp.getFileSystem(conf)
-              merged.write.mode("overwrite").parquet(tmp.toString)
-              val baks = overlapped.zipWithIndex.map { case ((s, e), i) =>
-                val src = new Path(s"$dstPath/__bucket=${s}_$e")
-                val bak = new Path(s"$dstPath/.bak_upsert_${i}_${s}_$e")
-                fs.delete(bak, true)
-                require(fs.rename(src, bak), s"upsert: cannot move $src")
-                bak
-              }
-              require(fs.rename(tmp,
-                new Path(s"$dstPath/__bucket=${ts0}_$te0")),
-                s"upsert: cannot promote $tmp (rows preserved in backups)")
-              baks.foreach(fs.delete(_, true))
-              ((ts0, te0), false, None, Seq.empty[String])
+      val st = state(fs0, dstPath)
+      val spans = st.live.map(r => (r.startNs, r.endNs))
+      val refBySpan = st.live.map(r => (r.startNs, r.endNs) -> r).toMap
+      // the grid continues the EXISTING layout's phase (copy layouts
+      // tile from the window start, not epoch-absolute) — anchored
+      // buckets land exactly on existing chunk boundaries, so an
+      // in-window point touches precisely its containing chunk
+      val anchor = spans.map(_._1).minOption.getOrElse(0L)
+      val t = Tables.nsCol(incoming, cfg.timeCol)
+      val withB = incoming
+        .withColumn("__bs",
+          (t - pmod(t - lit(anchor), lit(cfg.chunkNs))).cast("long"))
+        .cache()
+      try {
+        val buckets = withB.select(col("__bs")).distinct()
+          .collect().map(_.getLong(0)).sorted
+        val fullKey = keyCols :+ cfg.timeCol
+        // per-column latest-non-null over the duplicate group (field-set
+        // union): ONE shuffle on the high-cardinality (series, ts) key,
+        // K window projections inside it — same exchange budget as the
+        // former whole-row row_number, InfluxDB's merge semantics on top
+        def lastWins(df: DataFrame): DataFrame = {
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(fullKey.map(col): _*)
+            .orderBy(col(orderCol).desc)
+          val wAll = w.rowsBetween(org.apache.spark.sql.expressions
+            .Window.unboundedPreceding, org.apache.spark.sql.expressions
+            .Window.unboundedFollowing)
+          val valueCols = df.columns
+            .filterNot(c => fullKey.contains(c) || c == orderCol)
+          val merged = valueCols.foldLeft(df) { (d, c) =>
+            d.withColumn(c, first(col(c), ignoreNulls = true).over(wAll))
           }
+          merged.withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") === 1)
+            .drop("__rn", orderCol)
         }
-      }
-      results.foreach { case (span, isCreate, _, _) =>
-        if (isCreate) created :+= span else rewritten :+= span
-      }
-      // ONE atomic manifest commit for the whole batch: readers see
-      // either every group's new generation or none
-      state.foreach { st =>
-        commitChunkMutation(dstPath, st, genBase + groups.size,
-          results.flatMap(_._3), results.flatMap(_._4),
-          cfg.chunkGraceMs)
-      }
-      (created, rewritten)
-    } finally withB.unpersist(): Unit
-  }
-
-  private def inParallel[A, B](workers: Int, items: Seq[A])(f: A => B)
-      : Seq[B] = {
-    if (items.size <= 1 || workers <= 1) return items.map(f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(workers, items.size))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks = items.map { a =>
-        new java.util.concurrent.Callable[B] { def call(): B = f(a) }
-      }
-      // unwrap ExecutionException: a task's require(...) refusal must
-      // surface to callers with its ORIGINAL type and message (the
-      // /write 400 body renders e.getMessage; the wrapper's is noise)
-      pool.invokeAll(tasks.asJava).asScala.map { fut =>
-        try fut.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
+        // grid buckets overlapped by one merge group coalesce, so an
+        // irregular span straddling two batch buckets is read ONCE.
+        // Pass 1 builds the disjoint groups; pass 2 executes them IN
+        // PARALLEL — each group is one independent chunk rewrite (its
+        // own shuffle + write), and running them sequentially charges
+        // the batch one full Spark-job latency per touched chunk (the
+        // r13 write-plane regression's real cost at bench scale; at
+        // 100 TB the concurrency is what keeps a wide batch's wall
+        // time at max-of-chunks, not sum-of-chunks)
+        var groups = Seq.empty[(Seq[Long], Long, Long, Seq[(Long, Long)])]
+        var remaining = buckets.toList
+        while (remaining.nonEmpty) {
+          val bs = remaining.head
+          var group = Seq(bs)
+          var (ts0, te0) = (bs, bs + cfg.chunkNs)
+          var overlapped = spans.filter { case (s, e) => s < te0 && e > ts0 }
+          var grew = true
+          while (grew) {
+            val ts1 = math.min(ts0, overlapped.map(_._1).minOption.getOrElse(ts0))
+            val te1 = math.max(te0, overlapped.map(_._2).maxOption.getOrElse(te0))
+            val more = remaining.tail.filter(b => b < te1 && b + cfg.chunkNs > ts1)
+              .filterNot(group.contains)
+            grew = ts1 != ts0 || te1 != te0 || more.nonEmpty
+            ts0 = ts1; te0 = te1; group = (group ++ more).distinct
+            overlapped = spans.filter { case (s, e) => s < te0 && e > ts0 }
+          }
+          remaining = remaining.filterNot(group.contains)
+          groups :+= ((group, ts0, te0, overlapped))
         }
-      }.toSeq
-    } finally pool.shutdown()
+        // per group: (span, isCreate, new manifest ref, retired dirs).
+        // Every write gets a fresh generation dir — invisible to
+        // readers until the manifest commit below, so no tmp/rename
+        // dance is needed; a crash strands an orphan the next commit's
+        // sweep removes
+        val results = inParallel(cfg.numWorkers, groups.zipWithIndex) {
+          case ((group, ts0, te0, overlapped), gi) =>
+            val slice = withB.filter(col("__bs").isin(group: _*)).drop("__bs")
+            val d = ChunkManifest.dirName(ts0, te0, st.gen + gi + 1)
+            val ref = ChunkManifest.ChunkRef(d, ts0, te0)
+            if (overlapped.isEmpty) {
+              lastWins(slice).write.mode("overwrite")
+                .parquet(s"$dstPath/$d")
+              ((ts0, te0), true, ref, Seq.empty[String])
+            } else {
+              val existing = overlapped.map { sp =>
+                spark.read.parquet(s"$dstPath/${refBySpan(sp).dir}")
+              }.reduce(_ unionByName _)
+                .withColumn(orderCol, lit(-1L)) // below any incoming line
+              // replaced generations stay AT THEIR PATHS (retired by
+              // the commit, deleted only past grace) — a pinned
+              // reader's listing never goes stale
+              lastWins(existing.unionByName(
+                slice.withColumn(orderCol, col(orderCol).cast("long"))))
+                .write.mode("overwrite").parquet(s"$dstPath/$d")
+              ((ts0, te0), false, ref, overlapped.map(sp => refBySpan(sp).dir))
+            }
+        }
+        // ONE atomic manifest commit for the whole batch: readers see
+        // either every group's new generation or none
+        commitChunkMutation(dstPath, st, st.gen + groups.size,
+          results.map(_._3), results.flatMap(_._4), cfg.chunkGraceMs)
+        (results.filter(_._2).map(_._1), results.filterNot(_._2).map(_._1))
+      } finally withB.unpersist(): Unit
+    }
   }
 
   /** ReplicateData analog: walk a discovered schema and copy every
@@ -923,59 +699,32 @@ final class CopyJob(
     CopyJob.layout(schema, srcRoot, dstRoot, flatRoot)
       .map { case (src, dst) => copyMeasurement(src, dst, cfg) }
 
-  /** Read back what a copy wrote (drops the partition column). A
-    * timestamp-typed `ts` surfaces as the canonical Long ns epoch, same
-    * as [[Tables.load]] — so copy and source present one time schema. */
+  /** Read back what a copy wrote, resolved like every stored read
+    * ([[ChunkManifest.readStored]]). A timestamp-typed `ts` surfaces as
+    * the canonical Long ns epoch, same as [[Tables.load]] — so copy and
+    * source present one time schema. */
   def readCopied(path: String): DataFrame = {
     Tables.ensureNsConf(spark)
-    // snapshot-managed measurements resolve through the manifest: the
-    // pinned listing names only LIVE generation dirs, which stay at
-    // their paths for the grace window however many upserts land —
-    // the plain listing would also see graced (replaced) generations
-    val base = ChunkManifest.snapshotRead(spark, path)
-      .getOrElse(spark.read.parquet(path))
-    Tables.withNsTime(base.drop("__bucket"))
+    Tables.withNsTime(ChunkManifest.readStored(spark, path))
   }
 
-  /** Time-range read of a copied dataset with CHUNK-PARTITION pruning.
-    *
-    * `__bucket` encodes each chunk's `[startNs,endNs)` span in its
-    * directory name, so a range read can discard non-overlapping chunks
-    * at FILE LISTING time — the predicate references only the partition
-    * column and lands in the scan's `PartitionFilters` (whole
-    * directories skipped, no footer even opened; PlanSpec pins it). The
-    * exact ns bounds then apply as an ordinary pushed filter inside the
+  /** Time-range read of a copied dataset with CHUNK pruning: every ref
+    * carries its `[startNs,endNs)` span, so chunks not overlapping the
+    * range are discarded before the file listing — their dirs never
+    * reach the scan's file index (PlanSpec pins it). The exact ns
+    * bounds then apply as an ordinary pushed filter inside the
     * surviving chunks. At 100 TB this is the read path: a day's query
-    * over a year's copy touches 1/365th of the files.
-    */
+    * over a year's copy touches 1/365th of the files. A range
+    * overlapping no live chunk is schema-preserving empty. */
   def readCopiedRange(
       path: String,
       startNs: Long,
       endNs: Long,
       timeCol: String = "ts"): DataFrame = {
     Tables.ensureNsConf(spark)
-    ChunkManifest.snapshotRefs(spark, path) match {
-      case Some(refs) =>
-        // snapshot mode prunes at the REF level — non-overlapping
-        // generations never reach the file listing at all, strictly
-        // earlier than the PartitionFilters the plain path relies on
-        val hit = refs.filter(r => r.startNs < endNs && r.endNs > startNs)
-        // a range overlapping NO live chunk is schema-preserving
-        // empty (one generation dir read, zero rows), never an error
-        val frame =
-          if (hit.nonEmpty) ChunkManifest.snapshotFrame(spark, path, hit)
-          else ChunkManifest.snapshotFrame(spark, path, refs.take(1))
-            .where(lit(false))
-        Tables.withNsTime(Tables.timeRange(frame, timeCol,
-          startNs, endNs).drop("__bucket"))
-      case None =>
-        val span = split(col("__bucket"), "_")
-        val pruned = spark.read.parquet(path)
-          .filter(span.getItem(0).cast("long") < endNs &&
-            span.getItem(1).cast("long") > startNs)
-        Tables.withNsTime(Tables.timeRange(pruned, timeCol, startNs,
-          endNs).drop("__bucket"))
-    }
+    val frame = ChunkManifest.readStored(spark, path,
+      prune = r => r.startNs < endNs && r.endNs > startNs)
+    Tables.withNsTime(Tables.timeRange(frame, timeCol, startNs, endNs))
   }
 
   /** Per-chunk source↔dest checksum verification — stronger than the

@@ -414,7 +414,7 @@ object QlPlanner {
     * the FS catalog discovers becomes a [[QlTable]] — tags are its
     * string columns (InfluxDB's tags-are-strings mapping, the same
     * split SHOW TAG/FIELD KEYS serves), fields everything else but
-    * the time column. Chunk-partitioned sinks read whole (their
+    * the time column. Chunked sinks read their live chunks (the
     * `__bucket` partition column stays out of the query surface);
     * reads are LAZY — construction costs one names-only catalog walk
     * and one footer-schema read per measurement, no data scan. A
@@ -438,14 +438,15 @@ object QlPlanner {
           // a measurement MID-CREATION or MID-REWRITE is not yet
           // discoverable THIS walk — skip it; the next walk (TTL or
           // write-through invalidation) picks it up. The race is
-          // structural for non-manifested sinks (a CQ's first rollup
-          // commit, any dynamic partition overwrite): Spark's schema
-          // inference launches a distributed footer job over a file
-          // it just listed, so the dir can be footerless
-          // (UNABLE_TO_INFER_SCHEMA) or the listed file already
-          // replaced (task-level FileNotFound). Observed live by the
-          // DaemonSoakSpec reader racing the CQ's first refresh; a
-          // skipped walk beats a served 500 (README Known limits #5).
+          // structural for sinks written outside the chunk manifest
+          // (a flat parquet dir rewritten in place, the `-action
+          // stream` sink): Spark's schema inference launches a
+          // distributed footer job over a file it just listed, so the
+          // dir can be footerless (UNABLE_TO_INFER_SCHEMA) or the
+          // listed file already replaced (task-level FileNotFound).
+          // Observed live by the DaemonSoakSpec reader racing the CQ's
+          // first refresh; a skipped walk beats a served 500 (README
+          // Known limits #4).
           // Every skip is WARN-logged (path + exception class): a
           // PERSISTENTLY broken measurement (corrupt footer on a
           // crashed non-manifested sink, permissions) must be
@@ -481,11 +482,10 @@ object QlPlanner {
 
   /** One stored measurement as a [[QlTable]] — the single constructor
     * behind [[storageCatalog]] and a served catalog's per-entry
-    * refresh. Manifest-pinned when the /write plane manages the
-    * measurement ([[graft.operators.ChunkManifest]]): the statement
-    * executes against a LISTING SNAPSHOT of live chunk generations,
-    * so a concurrent upsert can never yank a file from under the plan
-    * (the r19 soak's transient FILE_NOT_EXIST).
+    * refresh. Read through [[graft.operators.ChunkManifest.readStored]]:
+    * the statement executes against a LISTING SNAPSHOT of live chunk
+    * generations, so a concurrent upsert can never yank a file from
+    * under the plan (the r19 soak's transient FILE_NOT_EXIST).
     * @param schema the data schema a writer just resolved: the
     *   manifest-pinned read takes it as given instead of running a
     *   footer-inference job. */
@@ -494,11 +494,8 @@ object QlPlanner {
       schema: Option[org.apache.spark.sql.types.StructType] = None)
       : QlTable = {
     graft.sources.Tables.ensureNsConf(spark)
-    val df0 = graft.operators.ChunkManifest.snapshotRead(spark, path, schema)
-      .getOrElse(spark.read.parquet(path))
     val df = graft.sources.Tables.withNsTime(
-      if (df0.columns.contains("__bucket")) df0.drop("__bucket")
-      else df0, timeCol)
+      graft.operators.ChunkManifest.readStored(spark, path, schema), timeCol)
     val tags = df.schema.fields.toSeq
       .filter(f =>
         f.dataType == org.apache.spark.sql.types.StringType &&
@@ -927,19 +924,11 @@ object QlPlanner {
         } yield (d.name, rp.name, m)
         require(cand.nonEmpty, s"no measurement " +
           from.getOrElse("(any)"))
-        val conf = spark.sessionState.newHadoopConf()
         cand.map { case (db, rp, m) =>
           val tagCols = m.fields.values.toSeq
             .filter(_.ftype.name == "string").map(_.name).sorted
-          val path = {
-            val flat = s"$root/${m.name}.parquet"
-            val hp = new org.apache.hadoop.fs.Path(flat)
-            if (hp.getFileSystem(conf).exists(hp)) flat
-            else s"$root/$db/$rp/${m.name}.parquet"
-          }
-          val df = graft.operators.ChunkManifest
-            .snapshotRead(spark, path)
-            .getOrElse(spark.read.parquet(path))
+          val df = graft.operators.ChunkManifest.readStored(spark,
+            measurementPath(spark, root, db, rp, m.name))
           val segs = tagCols.map(t =>
             when(col(t).isNull, lit(""))
               .otherwise(concat(lit(s",$t="), col(t).cast("string"))))
@@ -961,17 +950,9 @@ object QlPlanner {
         require(cand.nonEmpty,
           s"no measurement carries string tag '$key'" +
             from.map(f => s" (FROM $f)").getOrElse(""))
-        val conf = spark.sessionState.newHadoopConf()
         cand.map { case (db, rp, m) =>
-          // flat roots store root/m.parquet (Catalog surfaces them as
-          // default/autogen); probe before assuming the hierarchy
-          val flatPath = s"$root/$m.parquet"
-          val hp = new org.apache.hadoop.fs.Path(flatPath)
-          val path =
-            if (hp.getFileSystem(conf).exists(hp)) flatPath
-            else s"$root/$db/$rp/$m.parquet"
-          graft.operators.ChunkManifest.snapshotRead(spark, path)
-            .getOrElse(spark.read.parquet(path))
+          graft.operators.ChunkManifest.readStored(spark,
+              measurementPath(spark, root, db, rp, m))
             .select(lit(m).as("measurement"), lit(key).as("key"),
               col(key).cast("string").as("value"))
             .where(col("value").isNotNull)

@@ -4,7 +4,8 @@ import graft.agent.{Agent, AgentConfig}
 import graft.catalog.Catalog
 import graft.functions.ChecksumAgg
 import graft.model.{FieldSch, FieldType}
-import graft.operators.{ContinuousQuery, CopyJob, Profiling, SeriesOps}
+import graft.operators.{ChunkManifest, ContinuousQuery, CopyJob,
+  Profiling, SeriesOps}
 import graft.plan.ChunkPlanner
 import graft.sources.{LineProtocol, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,6 +40,20 @@ object ParityQueries {
     "events,event_type=click",
     "events fieldwithoutequals",
     "events value=3.5 notanumber")
+
+  /** The live chunk dir of the copied measurement `dst` spanning
+    * exactly `[startNs, endNs)`, found through its manifest — a
+    * fixture's victim to destroy out of band. */
+  private def liveChunk(s: SparkSession, dst: String, startNs: Long,
+      endNs: Long, fixture: String): org.apache.hadoop.fs.Path = {
+    val fs = new org.apache.hadoop.fs.Path(dst)
+      .getFileSystem(s.sessionState.newHadoopConf())
+    val ref = ChunkManifest.read(fs, dst).toSeq.flatMap(_.live)
+      .find(r => r.startNs == startNs && r.endNs == endNs)
+    require(ref.isDefined,
+      s"$fixture fixture bug: no live chunk [$startNs, $endNs) in $dst")
+    new org.apache.hadoop.fs.Path(s"$dst/${ref.get.dir}")
+  }
 
   private def ev(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "events")
@@ -160,8 +175,8 @@ object ParityQueries {
         job.copyMeasurement(s"$dir/events.parquet", dst, cfg)
         // chunks tile NEWEST-FIRST from EndNs, so 2-day spans sit at
         // ODD day offsets: [S+1d,S+3d) exists, [S+4d,S+6d) would not
-        val victim = new org.apache.hadoop.fs.Path(
-          s"$dst/__bucket=${StartNs + 1 * DayNs}_${StartNs + 3 * DayNs}")
+        val victim = liveChunk(s, dst, StartNs + 1 * DayNs,
+          StartNs + 3 * DayNs, "diffsync")
         val vfs = victim.getFileSystem(s.sessionState.newHadoopConf())
         require(vfs.exists(victim),
           s"diffsync fixture bug: victim partition $victim missing")
@@ -208,9 +223,9 @@ object ParityQueries {
 
     // Retention-policy enforcement roundtrip: copy the window, expire
     // everything below a mid-chunk cutoff, read back. Whole expired
-    // chunk partitions are deleted at the file-listing level (no data
-    // read); only the straddling chunk is rewritten — and renamed to
-    // the clamped span, keeping partition pruning truthful. Executes
+    // chunks retire at the manifest level (no data read); only the
+    // straddling chunk is rewritten — into a generation of the clamped
+    // span, keeping chunk pruning truthful. Executes
     // the expiry the replicated _rp.json retention metadata describes
     // (the reference leaves enforcement to InfluxDB itself).
     "retention_enforce" -> QueryDef(
@@ -256,8 +271,8 @@ object ParityQueries {
         p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
         job.copyMeasurement(s"$dir/events.parquet", dst, cfg0)
         // destroy a retained chunk (odd-day tiling: [S+5d, S+7d))
-        val victim = new org.apache.hadoop.fs.Path(
-          s"$dst/__bucket=${StartNs + 5 * DayNs}_${StartNs + 7 * DayNs}")
+        val victim = liveChunk(s, dst, StartNs + 5 * DayNs,
+          StartNs + 7 * DayNs, "maintenance")
         val vfs = victim.getFileSystem(s.sessionState.newHadoopConf())
         require(vfs.exists(victim),
           s"maintenance fixture bug: victim partition $victim missing")
@@ -265,7 +280,7 @@ object ParityQueries {
         def chain() = {
           val repaired = job.syncDiffering(s"$dir/events.parquet", dst,
             cfgClamped)._1
-          job.compact(dst)
+          job.compact(dst, cfgClamped)
           val (dropped, trimmed, _) =
             job.enforceRetention(dst, cutoff, cfgClamped)
           (repaired, dropped, trimmed)
@@ -311,9 +326,10 @@ object ParityQueries {
                WHERE epoch_ns(ts) >= $StartNs AND epoch_ns(ts) < $EndNs"""
         .replaceAll("\\s+", " "))),
 
-    // End-to-end copy: chunked scan → partitioned sink, run TWICE to
-    // prove blind re-copy idempotence (dynamic partition overwrite ≅
-    // InfluxDB point upsert; SURVEY.md §7.3 hard part 4).
+    // End-to-end copy: chunked scan → generation dirs + one manifest
+    // commit, run TWICE to prove blind re-copy idempotence (the second
+    // copy retires the first's chunks ≅ InfluxDB point upsert;
+    // SURVEY.md §7.3 hard part 4).
     "sync_copy_roundtrip" -> QueryDef(
       (s, dir) => {
         val job = new CopyJob(s)
@@ -329,12 +345,13 @@ object ParityQueries {
                WHERE epoch_ns(ts) >= $StartNs AND epoch_ns(ts) < $EndNs"""
         .replaceAll("\\s+", " "))),
 
-    // partition-pruned range read of a copied dataset: the __bucket
-    // chunk-span directories let a 3-day window over a 15-day copy skip
-    // 6 of 8 chunk partitions at FILE LISTING (PartitionFilters;
-    // PlanSpec pins it), with the exact ns bounds as residual pushed
-    // filter. The window deliberately straddles a chunk boundary so
-    // both layers (directory pruning + row filtering) are exercised.
+    // chunk-pruned range read of a copied dataset: the manifest's
+    // span-keyed refs let a 3-day window over a 15-day copy skip 6 of 8
+    // chunks before FILE LISTING (only the overlapping generation dirs
+    // reach the scan's file index; PlanSpec pins it), with the exact
+    // ns bounds as residual pushed filter. The window deliberately
+    // straddles a chunk boundary so both layers (chunk pruning + row
+    // filtering) are exercised.
     "s5_partition_pruned_scan" -> QueryDef(
       (s, dir) => {
         val job = new CopyJob(s)

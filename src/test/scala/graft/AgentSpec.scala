@@ -28,6 +28,19 @@ class AgentSpec extends AnyFunSuite {
     chunk = "120h", start = Ssec, end = Esec,
     monitorRetryIntervalMs = 0L)
 
+  /** A copied measurement's live chunk dirs, through its manifest. */
+  def liveDirs(measDir: String): Seq[(java.io.File, Long, Long)] = {
+    val fs = new org.apache.hadoop.fs.Path(measDir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    graft.operators.ChunkManifest.read(fs, measDir).toSeq.flatMap(_.live)
+      .map(r => (new java.io.File(s"$measDir/${r.dir}"), r.startNs, r.endNs))
+  }
+
+  /** The live chunk dir spanning exactly `[s, e)`. */
+  def liveDir(measDir: String, s: Long, e: Long): java.io.File =
+    liveDirs(measDir).collectFirst { case (f, a, b) if a == s && b == e => f }
+      .getOrElse(fail(s"no live chunk [$s, $e) in $measDir"))
+
   def directCount(): Long = Tables.timeRange(
     spark.read.parquet(s"${SparkSpec.Sf0001}/events.parquet"),
     "ts", S, E).count()
@@ -99,8 +112,7 @@ class AgentSpec extends AnyFunSuite {
     assert(agent.verify().forall(_._2.isEmpty)) // verify action: clean
     // tamper the replica → the verify action reports the bad chunks and
     // the dispatch path fails loudly
-    val part = new java.io.File(s"$dst/replica/rp30d/events.parquet")
-      .listFiles().filter(_.getName.startsWith("__bucket=")).head
+    val part = liveDirs(s"$dst/replica/rp30d/events.parquet").head._1
     part.listFiles().filter(_.getName.endsWith(".parquet"))
       .foreach(f => f.delete(): Unit)
     val bad = agent.verify().filter(_._2.nonEmpty)
@@ -122,8 +134,7 @@ class AgentSpec extends AnyFunSuite {
     // diffsync on a clean replica: no chunk repaired anywhere
     assert(agent.diffSync().forall(_._2.isEmpty))
     // destroy one 120h chunk partition, then diffsync repairs JUST it
-    val victim = new java.io.File(
-      s"$measDir/__bucket=${S + 5 * Day}_${S + 10 * Day}")
+    val victim = liveDir(measDir, S + 5 * Day, S + 10 * Day)
     assert(victim.exists())
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
@@ -167,10 +178,8 @@ class AgentSpec extends AnyFunSuite {
     // file, content survives (count unchanged), and a re-run is a no-op
     val countBefore = new CopyJob(spark).readCopied(measDir).count()
     agent.compact(): Unit
-    val perPart = Option(new java.io.File(measDir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
-      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
+    val perPart = liveDirs(measDir)
+      .map(_._1.listFiles().count(_.getName.endsWith(".parquet")))
     assert(perPart.nonEmpty && perPart.forall(_ === 1))
     assert(new CopyJob(spark).readCopied(measDir).count() === countBefore)
     assert(agent.compact().isEmpty)
@@ -199,7 +208,7 @@ class AgentSpec extends AnyFunSuite {
     finally out.close()
     // destroy the NEWEST chunk (above the cutoff → the repair leg
     // must restore it; the expired spans must NOT be re-copied)
-    val victim = new java.io.File(s"$measDir/__bucket=${S + 10 * Day}_$E")
+    val victim = liveDir(measDir, S + 10 * Day, E)
     assert(victim.exists())
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.model.ChunkSpec
-import graft.operators.CopyJob
+import graft.operators.{ChunkManifest, CopyJob}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,6 +23,18 @@ class CopyJobSpec extends AnyFunSuite {
 
   def cfg(dst: String) = CopyJob.Config(S, E, chunkNs = 5 * Day,
     timeCol = "ts")
+
+  /** The measurement's live chunk refs, through its manifest. */
+  private def live(dst: String): Seq[ChunkManifest.ChunkRef] = {
+    val fs = new org.apache.hadoop.fs.Path(dst)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    ChunkManifest.read(fs, dst).map(_.live).getOrElse(Nil)
+  }
+
+  /** The live chunk dir spanning exactly `[s, e)`. */
+  private def liveDir(dst: String, s: Long, e: Long): String =
+    live(dst).find(r => r.startNs == s && r.endNs == e)
+      .getOrElse(fail(s"no live chunk [$s, $e) in $dst: ${live(dst)}")).dir
 
   test("copy equals direct window scan; re-copy is idempotent") {
     val dst = freshDst()
@@ -60,9 +72,8 @@ class CopyJobSpec extends AnyFunSuite {
     assert(dropped === Seq((S, S + 5 * Day)))
     assert(trimmed === Seq((S + 5 * Day, S + 10 * Day)))
     assert(kept === 2)
-    // dropped partition dir is GONE (metadata-only delete)
-    assert(!new java.io.File(s"$dst/__bucket=${S}_${S + 5 * Day}")
-      .exists())
+    // the dropped chunk is gone from the live set (metadata-only)
+    assert(!live(dst).exists(r => r.startNs == S && r.endNs == S + 5 * Day))
     // surviving rows = exactly the >= cutoff window
     val after = job.readCopied(dst)
     val want = Tables.timeRange(spark.read.parquet(src), "ts", cutoff, E)
@@ -91,6 +102,7 @@ class CopyJobSpec extends AnyFunSuite {
             .map(f => (f.getName, f.length, f.lastModified)).toSeq.sorted
         }.toMap
     val before = fileState()
+    val midDir = liveDir(dst, S + 5 * Day, S + 10 * Day)
     val rc = job.readCopied(dst)
     val matchCount = rc.filter(col("event_type") === "click" &&
       Tables.nsAtLeast(rc, "ts", lo) && Tables.nsBefore(rc, "ts", hi))
@@ -111,7 +123,7 @@ class CopyJobSpec extends AnyFunSuite {
     assert(!slice.isEmpty)
     // untouched chunks are byte-identical (name, size, mtime)
     val mid = fileState()
-    for (k <- before.keys if k != s"__bucket=${S + 5 * Day}_${S + 10 * Day}")
+    for (k <- before.keys if k != midDir)
       assert(mid(k) === before(k), k)
     // re-run: nothing matches anymore → physical no-op everywhere
     val (d2, r2, u2) = job.deleteWhere(dst,
@@ -201,8 +213,7 @@ class CopyJobSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
     // idempotent: same rows, now in 3 five-day partitions
     assert(job.readCopied(dst).count() === total)
-    assert(new java.io.File(dst).listFiles()
-      .count(_.getName.startsWith("__bucket=")) === 3)
+    assert(live(dst).size === 3)
     val n = jobs.get()
     // whole re-copy budget: 3 chunk copies + ONE trim probe (plus AQE
     // stage-jobs) — far under the old 15-probe trim shape alone; the
@@ -230,7 +241,8 @@ class CopyJobSpec extends AnyFunSuite {
     // batch: override TWO existing points in the middle chunk (new
     // value), within-batch duplicate for one of them (later line
     // wins), plus one brand-new point in a chunk past the window
-    val midChunk = s"$dst/__bucket=${S + 5 * Day}_${S + 10 * Day}"
+    val midDir = liveDir(dst, S + 5 * Day, S + 10 * Day)
+    val midChunk = s"$dst/$midDir"
     val seed = spark.read.parquet(midChunk)
       .orderBy(col("event_id")).limit(2).cache()
     val over1 = seed.withColumn("value", lit(111.25))
@@ -264,7 +276,7 @@ class CopyJobSpec extends AnyFunSuite {
     // untouched chunks byte-identical
     val mid = fileState()
     for (k <- before.keys
-         if k != s"__bucket=${S + 5 * Day}_${S + 10 * Day}"
+         if k != midDir
          && before.contains(k))
       assert(mid(k) === before(k), k)
     // re-run the same batch: content converges (counts + values)
@@ -401,7 +413,7 @@ class CopyJobSpec extends AnyFunSuite {
     assert(m0.isEmpty && r0.chunks.isEmpty)
     // tamper: remove the middle chunk's partition entirely
     val victim = new java.io.File(
-      s"$dst/__bucket=${S + 5 * Day}_${S + 10 * Day}")
+      s"$dst/${liveDir(dst, S + 5 * Day, S + 10 * Day)}")
     assert(victim.exists())
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
@@ -428,12 +440,11 @@ class CopyJobSpec extends AnyFunSuite {
       maxPointsPerWrite = 100)
     job.copyMeasurement(src, dst, c)
     def filesPerPartition(): Seq[Int] =
-      Option(new java.io.File(dst).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
-        .map(_.listFiles().count(_.getName.endsWith(".parquet"))).toSeq
+      live(dst).map(r => new java.io.File(s"$dst/${r.dir}").listFiles()
+        .count(_.getName.endsWith(".parquet")))
     assert(filesPerPartition().forall(_ > 1))
     val sumsBefore = job.verifyChecksums(src, dst, c)
-    val report = job.compact(dst)
+    val report = job.compact(dst, c)
     assert(report.size === 3) // every 5-day chunk was oversized
     assert(report.forall { case (_, before, after) =>
       before > 1 && after === 1 })
@@ -442,7 +453,7 @@ class CopyJobSpec extends AnyFunSuite {
     assert(job.verifyChecksums(src, dst, c) === sumsBefore)
     assert(sumsBefore.forall { case (_, a, b) => a == b })
     // steady state: nothing to do
-    assert(job.compact(dst).isEmpty)
+    assert(job.compact(dst, c).isEmpty)
   }
 
   test("per-chunk checksums verify source↔dest identity (ChecksumAgg)") {

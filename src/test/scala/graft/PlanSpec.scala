@@ -474,12 +474,29 @@ class PlanSpec extends AnyFunSuite {
       pushed.contains("LessThan(ts"), pushed + "\n" + p.take(2000))
   }
 
-  test("copied-dataset range read prunes chunk partitions at file " +
-    "listing (PartitionFilters over the __bucket span, S5 scale path)") {
-    val p = planOf("s5_partition_pruned_scan")
-    val pf = p.linesIterator.filter(_.contains("PartitionFilters"))
-      .mkString("\n")
-    assert(pf.contains("__bucket"), pf + "\n" + p.take(2000))
+  test("copied-dataset range read prunes chunks before file listing: " +
+    "the scan's file index lists only the live generation dirs " +
+    "overlapping the range (S5 scale path)") {
+    import graft.queries.ParityQueries.{DayNs, StartNs}
+    val df = SparkEntry.queries("s5_partition_pruned_scan")(spark, dir)
+    df.collect(): Unit
+    val p = df.queryExecution.executedPlan.toString
+    val listed = df.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation
+    }.collect {
+      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        h.location.rootPaths.map(_.getName)
+    }.flatten
+    val dst = s"/tmp/graft_prune_rt_${math.abs(dir.hashCode)}"
+    val (lo, hi) = (StartNs + 3 * DayNs, StartNs + 6 * DayNs)
+    val fs = new org.apache.hadoop.fs.Path(dst)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val live = graft.operators.ChunkManifest.read(fs, dst).get.live
+    val hit = live.filter(r => r.startNs < hi && r.endNs > lo).map(_.dir)
+    // 2-day chunks at odd day offsets: [S+3d,S+5d) and [S+5d,S+7d)
+    assert(hit.size === 2 && live.size === 8, live.toString)
+    assert(listed.toSet === hit.toSet, listed.mkString(", "))
     // ns bounds still reach the scan as residual pushed filters
     val pushed = p.linesIterator.filter(_.contains("PushedFilters"))
       .mkString("\n")

@@ -23,7 +23,9 @@ for neither side) and whether the gain rule holds (wins in at least
 nine tenths of the pairs, medians apart by more than the base's
 quartile spread). Metrics and their better direction come from
 BENCHMARK.json: the end-to-end set for --trace 0, the per-layer set
-for --trace 1.
+for --trace 1. Each run also reports the host's CPU steal over it
+(the share of all CPU time `/proc/stat` counts as stolen), since a
+noisy neighbour moves wall-time metrics on both sides.
 """
 import argparse
 import json
@@ -80,13 +82,33 @@ def seeds_of(spec):
     return out
 
 
+def cpu_times():
+    """(steal, total) CPU jiffies of the host from /proc/stat, or None
+    where it cannot be read."""
+    try:
+        with open("/proc/stat") as fh:
+            f = [int(x) for x in fh.readline().split()[1:9]]
+    except (OSError, ValueError):
+        return None
+    return (f[7] if len(f) > 7 else 0), sum(f)
+
+
+def steal_share(t0, t1):
+    if t0 is None or t1 is None or t1[1] <= t0[1]:
+        return float("nan")
+    return (t1[0] - t0[0]) / (t1[1] - t0[1])
+
+
 def run(copy, a, seed):
-    """One benchmark run; returns (metrics, None) or (None, reason)."""
+    """One benchmark run; returns (metrics, None) or (None, reason). The
+    metrics carry the host's steal share over the run as `_steal`."""
     cmd = [sys.executable, "syncbench/run.py", "--workload", a.workload,
            "--seed", str(seed), "--seconds", str(a.seconds),
            "--trace", str(a.trace)]
+    t0 = cpu_times()
     p = subprocess.run(cmd, cwd=copy, stdout=subprocess.PIPE,
                        stderr=subprocess.PIPE, text=True)
+    steal = steal_share(t0, cpu_times())
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
         tail = p.stderr.strip().splitlines()[-3:]
@@ -98,7 +120,9 @@ def run(copy, a, seed):
     if r.get("correct") is not True or r.get("failed", 1) != 0:
         return None, (f"incorrect: correct={r.get('correct')} "
                       f"failed={r.get('failed')}/{r.get('attempted')}")
-    return {k: v["value"] for k, v in r["metrics"].items()}, None
+    m = {k: v["value"] for k, v in r["metrics"].items()}
+    m["_steal"] = steal
+    return m, None
 
 
 def quartiles(xs):
@@ -144,7 +168,9 @@ def main():
         pairs.append((seed, got["base"], got["change"]))
         print(f"seed {seed} ({order[0]} first): " + ", ".join(
             f"{k} {got['base'][k]:.4g}->{got['change'][k]:.4g}"
-            for k in lower if k in got["base"]), flush=True)
+            for k in lower if k in got["base"]) +
+            f"; steal {100 * got['base']['_steal']:.1f}%->"
+            f"{100 * got['change']['_steal']:.1f}%", flush=True)
 
     if not pairs:
         sys.exit("ab_pairs: no valid pair")
@@ -168,6 +194,10 @@ def main():
         print(f"{k:32} {bm:>10.4g} [{b1:.4g}-{b3:.4g}]".ljust(62) +
               f"{cm:>10.4g} [{c1:.4g}-{c3:.4g}]".ljust(29) +
               f"{rel:>7.3f} {wins:>3}/{n:<2} {'yes' if gain else 'no'}")
+    for i, side in ((1, "base"), (2, "change")):
+        st = [100 * p[i]["_steal"] for p in pairs]
+        print(f"host steal over {side} runs: median {statistics.median(st):.1f}%,"
+              f" max {max(st):.1f}%")
     for seed, why in refused:
         print(f"refused seed {seed}: {why}")
     sys.exit(1 if refused else 0)
